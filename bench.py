@@ -37,8 +37,8 @@ from team_goldo_combat_log_parser_spark.sources.token_io import (  # noqa: E402
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 CORPUS_CACHE = os.environ.get("SPARK_GRAFT_BENCH_CACHE", "/tmp/goldo_bench")
-# A/B knob for the pipeline's line-cache strategy (bench_ab_cache.py runs
-# this harness unchanged with the knob flipped; bench semantics identical)
+# A/B knob for the pipeline's line-cache strategy (the A/B that settled
+# its default is recorded in BENCH/CACHE_AB.md; bench semantics identical)
 CACHE_LINES = os.environ.get("SPARK_GRAFT_CACHE_LINES", "1").lower() \
     not in ("0", "false")
 # optional subset, e.g. "combat_e2e" for the A/B (combat_e2e runs first

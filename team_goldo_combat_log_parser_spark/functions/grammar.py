@@ -1,16 +1,11 @@
 """Combat-log grammar: detokenize + field split + typed extraction.
 
-Two execution paths, bit-identical outputs:
-
-* ``detokenize_lines`` — the only mandatory Python hop: ISO-8859-1 byte
-  tokens -> line string, as an Arrow-vectorized pandas UDF (one bulk
-  buffer decode per batch, not per-row Python).
+* ``detokenize_lines`` — the only Python hop: ISO-8859-1 byte tokens ->
+  line string, one ``mapInArrow`` pass (a vectorized numpy transcode per
+  Arrow batch) for batch and streaming frames alike.
 * ``parse_lines`` — everything after detokenization is **native Spark SQL**
   (split / substring / regexp_extract / contains), so the whole parse stage
   sits inside WholeStageCodegen and Catalyst can prune/push down freely.
-  A pandas-UDF grok alternative (``parse_lines_pandas``) exists for A/B
-  benchmarking; the native path is the default (it benches faster and keeps
-  the JVM pipeline unbroken).
 
 Field semantics mirror the reference's csv split on ']' with
 skipinitialspace (reference main.py:116-118) and its quirky slicing:
@@ -49,27 +44,6 @@ from ..constants import (
 # ------------------------------------------------------------------ detokenize
 
 
-@F.pandas_udf(T.StringType())
-def _detok_udf(tokens: pd.Series) -> pd.Series:
-    """array<int> byte tokens -> str via one bulk latin-1 decode per batch.
-
-    Concatenates all token arrays of the Arrow batch into a single uint8
-    buffer, decodes once, then slices per row — no per-row Python decode.
-    """
-    arrays = tokens.to_numpy()
-    if len(arrays) == 0:
-        return pd.Series([], dtype=object)
-    lens = np.fromiter((len(a) for a in arrays), dtype=np.int64, count=len(arrays))
-    if lens.sum() == 0:
-        return pd.Series([""] * len(arrays))
-    # one concatenate + one dtype cast for the whole batch (no per-row work)
-    flat = np.concatenate(arrays).astype(np.uint8)
-    blob = flat.tobytes().decode("iso-8859-1")
-    offs = np.zeros(len(arrays) + 1, dtype=np.int64)
-    np.cumsum(lens, out=offs[1:])
-    return pd.Series([blob[offs[i]:offs[i + 1]] for i in range(len(arrays))])
-
-
 def _detok_arrow_array(arr) -> "object":
     """ListArray<int> byte tokens -> StringArray, zero per-row Python.
 
@@ -78,10 +52,8 @@ def _detok_arrow_array(arr) -> "object":
     the whole batch is converted with a handful of vectorized numpy ops
     and the result is assembled directly into an Arrow string array from
     its (offsets, data) buffers — no Python str objects are ever
-    materialized (the pandas-UDF path pays a per-row slice AND a per-row
-    UTF-8 re-encode when pandas converts back to Arrow). Bit-identical
-    output: latin-1 codepoints 0-255 == unicode codepoints 0-255, and
-    this IS their UTF-8 encoding."""
+    materialized. Bit-identical output: latin-1 codepoints 0-255 ==
+    unicode codepoints 0-255, and this IS their UTF-8 encoding."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
@@ -89,12 +61,18 @@ def _detok_arrow_array(arr) -> "object":
     if n == 0:
         return pa.array([], type=pa.string())
     if arr.null_count:
-        # a null token array has no defined line; the old pandas path
-        # crashed on it too — fail loudly rather than silently misalign
-        # the offset arithmetic below
+        # a null token array has no defined line — fail loudly rather
+        # than silently misalign the offset arithmetic below
         raise ValueError("detokenize: null token array in batch")
+    flat = arr.flatten()
+    if flat.null_count:
+        raise ValueError("detokenize: null token inside a token array")
+    v = np.asarray(flat)
+    if len(v) and (v.min() < 0 or v.max() > 255):
+        # the uint8 cast below would wrap (300 -> 44) into a wrong byte
+        raise ValueError("detokenize: token outside the byte range 0-255")
+    v = v.astype(np.uint8)
     lens = np.asarray(pc.list_value_length(arr), dtype=np.int64)
-    v = np.asarray(arr.flatten()).astype(np.uint8)  # same wrap as _detok_udf
     offs = np.zeros(n + 1, dtype=np.int64)
     np.cumsum(lens, out=offs[1:])
     high = v >= 128
@@ -110,12 +88,22 @@ def _detok_arrow_array(arr) -> "object":
         n, pa.py_buffer(new_offs.tobytes()), pa.py_buffer(out.tobytes()))
 
 
-def _detok_map_in_arrow(df: DataFrame, tokens_col: str,
-                        keep_tokens: bool) -> DataFrame:
-    """mapInArrow detokenize: appends ``line``; drops the token arrays
-    from the OUTPUT unless ``keep_tokens`` (shipping them back across
-    the Arrow boundary would quadruple the return payload for nothing —
-    guide par.4.1: control how many columns cross)."""
+def detokenize_lines(df: DataFrame, tokens_col: str = "tokens",
+                     keep_tokens: bool = True) -> DataFrame:
+    """Add a ``line`` column decoded from the byte-token array.
+
+    One ``mapInArrow`` pass, batch or streaming: a vectorized numpy
+    transcode per Arrow batch, the output string array built directly
+    from buffers — zero per-row Python, zero Python str objects. A
+    MapInArrow node is a plan barrier, so the optimizer cannot duplicate
+    the hop (guide par.4.4). Null token arrays, null tokens and tokens
+    outside 0-255 raise ``ValueError``.
+
+    ``keep_tokens=False`` drops ``tokens_col`` from the output, so the
+    token arrays never cross back to the JVM (they would quadruple the
+    return payload — guide par.4.1: control how many columns cross);
+    the token-equality invariant keeps the default.
+    """
     import pyarrow as pa
 
     fields = [f for f in df.schema.fields
@@ -133,40 +121,6 @@ def _detok_map_in_arrow(df: DataFrame, tokens_col: str,
             yield pa.RecordBatch.from_arrays(cols + [line], names=out_names)
 
     return df.mapInArrow(transcode, schema=out_schema)
-
-
-def detokenize_lines(df: DataFrame, tokens_col: str = "tokens",
-                     native: bool = False,
-                     keep_tokens: bool = True) -> DataFrame:
-    """Add a ``line`` column decoded from the byte-token array.
-
-    Three bit-identical implementations:
-    * mapInArrow (round-9 default for batch frames): one vectorized
-      numpy transcode per batch, output string array built directly
-      from buffers — zero per-row Python, zero Python str objects, and
-      (with ``keep_tokens=False``) the token arrays never cross back
-      to the JVM. Structurally immune to the optimizer's UDF
-      duplication (a MapInArrow node is a plan barrier, guide par.4.4).
-    * Arrow pandas UDF: the pre-round-9 default, kept for STREAMING
-      input (mapInArrow is batch-only here) — one bulk buffer decode
-      per batch, then per-row slicing + re-encode in pandas.
-    * ``native=True``: pure JVM — ``chr()`` per token + ``array_join``
-      (latin-1 codepoints 0-255 == unicode codepoints 0-255, so chr is
-      exact). ~30% slower per core but keeps the whole pipeline inside
-      the JVM: no Python workers, no Arrow transfer — the path to prefer
-      when the Python-worker fleet, not the CPU, is the bottleneck.
-
-    ``keep_tokens=False`` drops ``tokens_col`` from the result (callers
-    that only consume ``line`` — the pipeline — save the return-path
-    Arrow payload; the token-equality invariant keeps the default).
-    """
-    if native:
-        return df.withColumn(
-            "line",
-            F.array_join(F.transform(tokens_col, lambda c: F.chr(c)), ""))
-    if df.isStreaming:
-        return df.withColumn("line", _detok_udf(F.col(tokens_col)))
-    return _detok_map_in_arrow(df, tokens_col, keep_tokens)
 
 
 @F.pandas_udf(T.ArrayType(T.IntegerType()))
@@ -296,53 +250,13 @@ def with_timestamp(df: DataFrame) -> DataFrame:
     )
 
 
-def parse_lines(df: DataFrame, native_detok: bool = False) -> DataFrame:
-    """token table (+line) -> fully typed event DataFrame (native path)."""
-    out = df
-    if "line" not in out.columns:
-        out = detokenize_lines(out, native=native_detok, keep_tokens=False)
-    out = with_identity_columns(out)
-    out = split_fields(out)
-    out = with_typed_columns(out)
-    out = with_timestamp(out)
-    return out.drop("tokens", "n_tok")
-
-
-# -------------------------------------------------- pandas grok path (A/B alt)
-
-_PARSE_OUT_SCHEMA = T.StructType([
-    T.StructField("time_raw", T.StringType()),
-    T.StructField("src_raw", T.StringType()),
-    T.StructField("tgt_raw", T.StringType()),
-    T.StructField("skill_raw", T.StringType()),
-    T.StructField("effect_raw", T.StringType()),
-    T.StructField("amount_raw", T.StringType()),
-])
-
-
-@F.pandas_udf(_PARSE_OUT_SCHEMA)
-def _grok_udf(lines: pd.Series) -> pd.DataFrame:
-    parts = lines.str.split("]", n=5, expand=True).reindex(columns=range(6))
-    # csv semantics: a 7th ']' would truncate the amount field
-    amt = parts[5].str.split("]", n=1).str[0]
-    pdf = pd.DataFrame({
-        "time_raw": parts[0],
-        "src_raw": parts[1].str.lstrip(" "),
-        "tgt_raw": parts[2].str.lstrip(" "),
-        "skill_raw": parts[3].str.lstrip(" "),
-        "effect_raw": parts[4].str.lstrip(" "),
-        "amount_raw": amt.str.lstrip(" "),
-    })
-    return pdf
-
-
-def parse_lines_pandas(df: DataFrame) -> DataFrame:
-    """Alternative: field split inside a pandas UDF (benchmark comparator)."""
+def parse_lines(df: DataFrame) -> DataFrame:
+    """token table (+line) -> fully typed event DataFrame."""
     out = df
     if "line" not in out.columns:
         out = detokenize_lines(out, keep_tokens=False)
     out = with_identity_columns(out)
-    out = out.withColumn("_f", _grok_udf(F.col("line"))).select("*", "_f.*").drop("_f")
+    out = split_fields(out)
     out = with_typed_columns(out)
     out = with_timestamp(out)
     return out.drop("tokens", "n_tok")

@@ -15,6 +15,8 @@ LSH banding turns the O(n^2) pair search into an equi-join on
 
 from __future__ import annotations
 
+import re
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -108,21 +110,16 @@ def doc_lang_guess(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _shingles(d: DataFrame, n: int = 3, distinct: bool = True) -> DataFrame:
-    """Character n-gram shingles per doc (explode + substring).
-
-    ``distinct=True`` gives set semantics (a full shuffle) — required by
-    Jaccard and fingerprint. Consumers whose downstream aggregate is
-    idempotent over duplicates (MinHash's per-permutation MIN) pass
-    ``distinct=False`` and skip that exchange entirely: at corpus scale
-    the dedup shuffle moves every shingle once for no semantic effect."""
+def _shingles(d: DataFrame, n: int = 3) -> DataFrame:
+    """Distinct character n-gram shingles per doc (explode + substring +
+    distinct): the set semantics Jaccard and fingerprint require."""
     idx = F.sequence(F.lit(1), F.greatest(F.length("text") - (n - 1), F.lit(1)))
     out = (
         d.select("doc_id", "source", F.explode(idx).alias("i"), "text")
         .select("doc_id", "source",
                 F.substring(F.col("text"), F.col("i"), n).alias("sh"))
     )
-    return out.distinct() if distinct else out
+    return out.distinct()
 
 
 def doc_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str,
@@ -193,28 +190,12 @@ _AB = [(((17 + 13 * i) * 2654435761) % _P or 1, ((23 + 7 * i) * 40503) % _P)
        for i in range(MINHASH_K)]
 
 
-# signature construction strategy (round 8, VERDICT next #4; round 9
-# added "arrow"):
-#   "exploded"   — explode shingles, ONE hash shuffle, 32 min-aggregates
-#                  (partial agg collapses each partition to one row per
-#                  doc before the exchange);
-#   "scan_local" — never explode: per row, build the shingle-hash array
-#                  with higher-order functions and take the 32 lane
-#                  minima in place — ZERO shuffles, the signature is a
-#                  pure projection of the documents scan.
-#   "arrow"      — never explode: one pandas UDF computes all 32 lane
-#                  minima per doc with vectorized numpy (an exact
-#                  reimplementation of xxhash64 for the <=3-byte tail
-#                  path over a flat byte buffer; the affine lanes are 32
-#                  numpy passes + minimum.reduceat). Zero shuffles, zero
-#                  per-shingle JVM expression work; ~10M interpreter-free
-#                  ops replace ~10M codegen'd substring+hash+mod updates.
-# All three produce bit-identical signatures (same xxhash64 -> affine ->
-# min per lane; pytest-pinned incl. NULL/short/non-ascii docs). History:
-# exploded beat scan_local 1.73x (BENCH/MINHASH_AB.md — HOFs evaluate
-# interpreted per element); round 9's arrow variant beat exploded (the
-# VERDICT r8 next-#5 sketch-cost lever): see OPTIMIZATION_r09.md.
-MINHASH_SIGNATURE_MODE = "arrow"
+# Signatures are numpy inside a pandas UDF because per-shingle JVM
+# expression work measured slower on this engine (explode + 32
+# min-aggregates, or higher-order functions that evaluate interpreted per
+# element — BENCH/MINHASH_AB.md, OPTIMIZATION_r09.md). One vectorized
+# pass per Arrow batch computes the exact xxh64 over 3-byte windows and
+# the 32 lane minima, with zero shuffles.
 
 
 _U64 = (1 << 64) - 1
@@ -260,13 +241,14 @@ def _minhash_lanes_np(h31, sh_offs):
 
 
 def _minhash_sig_rows(texts: pd.Series) -> pd.DataFrame:
-    """Per-batch signature computation for mode="arrow": ASCII docs of
+    """Per-batch signature computation: ASCII docs of
     >=3 chars take the fully vectorized path (flat byte buffer, 3-byte
     windows, vectorized xxh64, reduceat minima); NULL, short, and
     non-ASCII docs take a per-doc fallback through golden/xxh.py that
-    reproduces the exploded path's semantics exactly (NULL -> the bare
-    seed, len<3 -> one whole-text shingle, non-ASCII -> per-CHAR windows
-    hashed over their UTF-8 bytes)."""
+    keeps Spark's shingling semantics (substring over
+    sequence(1, greatest(length - 2, 1))): NULL -> xxhash64(NULL), the
+    bare seed; len<3 -> one whole-text shingle; non-ASCII -> per-CHAR
+    windows hashed over their UTF-8 bytes."""
     from ..golden.xxh import xxh64
 
     n = len(texts)
@@ -310,78 +292,35 @@ def _minhash_sig_rows(texts: pd.Series) -> pd.DataFrame:
     return pd.DataFrame({f"mh{i}": out[:, i] for i in range(MINHASH_K)})
 
 
-def doc_minhash_signatures(spark: SparkSession, sf_dir: str,
-                           mode: str | None = None) -> DataFrame:
+def doc_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash signature per doc: shingle -> xxhash64 -> k affine
-    permutations -> per-permutation min. ``mode`` (default
-    MINHASH_SIGNATURE_MODE) picks the construction strategy above —
-    MIN is idempotent over duplicate shingles, so neither path needs
-    the set-dedup shuffle the exact-Jaccard path pays."""
-    mode = mode or MINHASH_SIGNATURE_MODE
+    permutations -> per-permutation min, as a projection of the
+    documents scan (no shuffle). MIN is idempotent over duplicate
+    shingles, so no set-dedup is needed."""
+    from pyspark.sql import types as T
+
     d = load(spark, sf_dir, "documents")
-    if mode == "arrow":
-        from pyspark.sql import types as T
-
-        sig_udf = F.pandas_udf(
-            _minhash_sig_rows,
-            T.StructType([T.StructField(f"mh{i}", T.LongType())
-                          for i in range(MINHASH_K)]))
-        # non-deterministic mark: stop the optimizer from duplicating
-        # the UDF below future filters (guide par.4.4); values are
-        # deterministic
-        sig_udf = sig_udf.asNondeterministic()
-        return (d.select("doc_id", sig_udf("text").alias("_s"))
-                .select("doc_id", "_s.*"))
-    if mode == "scan_local":
-        # NULL-text docs DO emit a signature on the exploded path:
-        # greatest() skips NULLs so sequence(1, greatest(NULL-2, 1)) is
-        # [1], substring(NULL, ...) is NULL, and xxhash64(NULL) returns
-        # the seed — the same expressions here reproduce that row
-        # bit-for-bit, so no isNotNull filter (round-8 advice: the old
-        # filter dropped NULL-text docs that the exploded path kept)
-        idx = F.sequence(F.lit(1),
-                         F.greatest(F.length("text") - 2, F.lit(1)))
-        h_arr = F.transform(
-            idx,
-            lambda i: F.xxhash64(F.col("text").substr(i, F.lit(3)))
-            .bitwiseAND(F.lit((1 << 31) - 1)))
-        # materialize h_arr behind a projection boundary: a transform is
-        # not "cheap", so CollapseProject will NOT inline it 32x into
-        # the lane expressions below
-        withh = d.select("doc_id", h_arr.alias("h_arr"))
-        def lane(a: int, b: int):
-            # a real closure, not default-args: pyspark counts EVERY
-            # named parameter when binding lambda variables, so
-            # ``lambda h, a=a, b=b`` reads as a 3-arg HOF lambda
-            return F.array_min(F.transform(
-                "h_arr", lambda h: (h * F.lit(a) + F.lit(b)) % F.lit(_P)))
-
-        lanes = [lane(a, b).alias(f"mh{i}")
-                 for i, (a, b) in enumerate(_AB)]
-        return withh.select("doc_id", *lanes)
-    sh = _shingles(d, distinct=False)
-    h = (F.xxhash64("sh").bitwiseAND(F.lit((1 << 31) - 1))).alias("h")
-    base = sh.select("doc_id", h)
-    mins = [
-        F.min((F.col("h") * F.lit(a) + F.lit(b)) % F.lit(_P)).alias(f"mh{i}")
-        for i, (a, b) in enumerate(_AB)
-    ]
-    return base.groupBy("doc_id").agg(*mins)
+    sig_udf = F.pandas_udf(
+        _minhash_sig_rows,
+        T.StructType([T.StructField(f"mh{i}", T.LongType())
+                      for i in range(MINHASH_K)]))
+    # non-deterministic mark: stop the optimizer from duplicating the UDF
+    # below future filters (guide par.4.4); values are deterministic
+    sig_udf = sig_udf.asNondeterministic()
+    return (d.select("doc_id", sig_udf("text").alias("_s"))
+            .select("doc_id", "_s.*"))
 
 
-def doc_minhash_lsh_pairs(spark: SparkSession, sf_dir: str,
-                          mode: str | None = None) -> DataFrame:
+def doc_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LSH banding: equal 4-row band signature in any of 8 bands ->
     candidate pair. Returns candidates with estimated similarity (fraction
-    of matching minhashes). ``mode`` passes through to
-    doc_minhash_signatures (bit-identical output either way)."""
+    of matching minhashes)."""
     # localCheckpoint: the signature plan feeds the banding plus both
     # sides of the estimate join — without it the plan would re-execute
     # three times. Checkpoint instead of cache() so no CacheManager entry
     # outlives this call (blocks are ContextCleaner-freed with the
     # returned DataFrame; a cache() leaked across calls).
-    sig = doc_minhash_signatures(spark, sf_dir,
-                                 mode=mode).localCheckpoint(eager=True)
+    sig = doc_minhash_signatures(spark, sf_dir).localCheckpoint(eager=True)
     rows_per_band = MINHASH_K // MINHASH_BANDS
     # ONE posexplode pass emits every (band, band-signature) row — a
     # union of per-band projections would scan the signatures 4x and
@@ -410,8 +349,8 @@ def doc_minhash_lsh_pairs(spark: SparkSession, sf_dir: str,
                       F.col("bsig").alias("bsig_y"))
     # matching-lane fraction; evaluated once per candidate row (HOFs are
     # interpreted, but candidates are band-collision-rare — unlike the
-    # per-shingle hot path where HOFs measurably lose, see
-    # doc_minhash_signatures)
+    # per-shingle hot path where HOFs measurably lose,
+    # BENCH/MINHASH_AB.md)
     est = F.aggregate(
         F.zip_with("x_sig", "y_sig",
                    lambda p, q: F.when(p == q, 1).otherwise(0)),
@@ -427,90 +366,59 @@ def doc_minhash_lsh_pairs(spark: SparkSession, sf_dir: str,
     )
 
 
-# simhash construction strategy (round 9, the same sketch-cost lever as
-# MINHASH_SIGNATURE_MODE="arrow"):
-#   "exploded" — explode tokens, xxhash64 per token, 63 conditional SUM
-#                aggregates per doc (one hash shuffle; ~63 agg-buffer
-#                updates per token row);
-#   "arrow"    — one mapInPandas pass: Java-semantics tokenization
-#                (trim strips 0x20 only; split keeps leading/trailing
-#                empty tokens; the ASCII [ \t\n\x0B\f\r]+ class — all
-#                three pinned empirically in tests), memoized
-#                golden/xxh.py token hashes, numpy bit votes. Zero
-#                shuffles; a NULL-text doc emits no row, exactly like
-#                explode(NULL).
-# Bit-identical outputs (pytest-pinned incl. adversarial whitespace).
-SIMHASH_MODE = "arrow"
-
 # Java \s is ASCII-only: [ \t\n\x0B\f\r]. Python's \s would additionally
 # match unicode spaces (e.g. \xa0), which Spark's split does NOT.
-_JAVA_WS = "[ \t\n\x0b\f\r]+"
+_JAVA_WS_RE = re.compile("[ \t\n\x0b\f\r]+")
 
 
-def doc_simhash64(spark: SparkSession, sf_dir: str,
-                  mode: str | None = None) -> DataFrame:
+def doc_simhash64(spark: SparkSession, sf_dir: str) -> DataFrame:
     """64-bit SimHash over whitespace tokens:
     token -> xxhash64 -> per-bit +/- vote -> sign vector -> u64.
-    ``mode`` (default SIMHASH_MODE) picks the construction strategy
-    above; outputs are bit-identical."""
-    mode = mode or SIMHASH_MODE
+
+    One mapInPandas pass with zero shuffles (a 63-vote JVM aggregate
+    over exploded tokens measured slower, OPTIMIZATION_r09.md) that keeps
+    Spark's ``split(trim(text), '\\s+')`` tokenization: trim strips 0x20
+    only, split keeps leading/trailing empty tokens, and the class is
+    the ASCII [ \\t\\n\\x0B\\f\\r]+. Tokens hash through a memoized
+    golden/xxh.py; bit 63 is never set (the result stays a positive
+    long). A NULL-text doc emits no row, like explode(NULL)."""
     d = load(spark, sf_dir, "documents")
-    if mode == "arrow":
-        import re
 
-        ws_re = re.compile(_JAVA_WS)
+    def compute(batches):
+        from ..golden.xxh import xxh64
 
-        def compute(batches):
-            from ..golden.xxh import xxh64
+        memo: dict[str, int] = {}
+        shifts = np.arange(63, dtype=np.uint64)
+        pow2 = np.uint64(1) << shifts
+        for pdf in batches:
+            ids: list[int] = []
+            sims: list[int] = []
+            for doc_id, t in zip(pdf["doc_id"], pdf["text"]):
+                if t is None:
+                    continue  # explode(split(trim(NULL))) emits no row
+                if len(memo) > 1_000_000:
+                    # bound the per-task hash memo on pathological
+                    # vocabularies (normal corpora never get close)
+                    memo.clear()
+                toks = _JAVA_WS_RE.split(t.strip(" "))
+                hs = np.empty(len(toks), dtype=np.uint64)
+                for j, tok in enumerate(toks):
+                    h = memo.get(tok)
+                    if h is None:
+                        h = xxh64(tok.encode("utf-8"), _XXH_SEED)
+                        memo[tok] = h
+                    hs[j] = h
+                c = ((hs[:, None] >> shifts) & np.uint64(1)).sum(axis=0)
+                votes = 2 * c.astype(np.int64) - len(toks)
+                ids.append(doc_id)
+                sims.append(int(pow2[votes > 0].sum()))
+            yield pd.DataFrame({"doc_id": pd.Series(ids, dtype="int64"),
+                                "simhash": pd.Series(sims,
+                                                     dtype="int64")})
 
-            memo: dict[str, int] = {}
-            shifts = np.arange(63, dtype=np.uint64)
-            pow2 = np.uint64(1) << shifts
-            for pdf in batches:
-                ids: list[int] = []
-                sims: list[int] = []
-                for doc_id, t in zip(pdf["doc_id"], pdf["text"]):
-                    if t is None:
-                        continue  # explode(split(trim(NULL))) emits no row
-                    if len(memo) > 1_000_000:
-                        # bound the per-task hash memo on pathological
-                        # vocabularies (normal corpora never get close)
-                        memo.clear()
-                    toks = ws_re.split(t.strip(" "))
-                    hs = np.empty(len(toks), dtype=np.uint64)
-                    for j, tok in enumerate(toks):
-                        h = memo.get(tok)
-                        if h is None:
-                            h = xxh64(tok.encode("utf-8"), _XXH_SEED)
-                            memo[tok] = h
-                        hs[j] = h
-                    c = ((hs[:, None] >> shifts) & np.uint64(1)).sum(axis=0)
-                    votes = 2 * c.astype(np.int64) - len(toks)
-                    ids.append(doc_id)
-                    sims.append(int(pow2[votes > 0].sum()))
-                yield pd.DataFrame({"doc_id": pd.Series(ids, dtype="int64"),
-                                    "simhash": pd.Series(sims,
-                                                         dtype="int64")})
-
-        return (d.select("doc_id", "text")
-                .mapInPandas(compute, "doc_id long, simhash long")
-                .orderBy("doc_id"))
-    toks = (
-        d.select("doc_id", F.explode(F.split(F.trim("text"), r"\s+"))
-                 .alias("tok"))
-        .withColumn("h", F.xxhash64("tok"))
-    )
-    votes = [
-        F.sum(F.when(F.col("h").bitwiseAND(F.lit(1 << i)) != 0, 1)
-              .otherwise(-1)).alias(f"v{i}")
-        for i in range(63)  # bit 63 unused (1<<63 overflows a signed long)
-    ]
-    v = toks.groupBy("doc_id").agg(*votes)
-    bits = sum(
-        F.when(F.col(f"v{i}") > 0, F.lit(1 << i).cast("long")).otherwise(F.lit(0))
-        for i in range(63)  # bit 63 omitted: keep the result a positive long
-    )
-    return v.select("doc_id", bits.alias("simhash")).orderBy("doc_id")
+    return (d.select("doc_id", "text")
+            .mapInPandas(compute, "doc_id long, simhash long")
+            .orderBy("doc_id"))
 
 
 def doc_simhash_near_pairs(spark: SparkSession, sf_dir: str,
@@ -537,8 +445,8 @@ def doc_simhash_near_pairs(spark: SparkSession, sf_dir: str,
     # — the overwhelming majority, and the term that grows quadratically
     # with chunk-bucket occupancy — never enter the dedup exchange
     # (measured at sf0.1: 7.07M candidate rows -> 76k survivors, a 93x
-    # shrink of the shuffled set; scripts/ab_simhash_r08.py, exact-parity
-    # ABBA, ~2% wall here where the exchange is small). A pair colliding
+    # shrink of the shuffled set; exact-parity ABBA, ~2% wall here where
+    # the exchange is small — BENCH/MINHASH_AB.md). A pair colliding
     # in several chunks pays bit_count more than once (codegen-cheap) to
     # ship it across the shuffle at most once. Bit-identical to the
     # former distinct-then-filter: hamming is deterministic per (a, b).

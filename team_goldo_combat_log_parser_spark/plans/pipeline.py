@@ -1,7 +1,7 @@
 """End-to-end DAG: token table -> parse -> sessionize -> route -> aggregate.
 
 One cached routed DataFrame feeds every sink and aggregate, so the
-detokenize UDF and the parse projection execute once per input row
+detokenize hop and the parse projection execute once per input row
 regardless of how many outputs are materialized (SURVEY.md par.4 item 3).
 """
 
@@ -12,6 +12,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..constants import DEATH, ENTER_COMBAT, LEAVE_COMBAT
 from ..functions import grammar
 from . import aggregate as agg
 from .route import sink_filters, with_routes
@@ -35,7 +36,6 @@ class PipelineResult:
     def unpersist(self) -> None:
         self.routed.unpersist()
         self.fights.unpersist()
-        self.parsed.unpersist()
         if "lines" in self.extra:
             self.extra["lines"].unpersist()
 
@@ -45,50 +45,33 @@ def run_pipeline(
     token_df: DataFrame,
     broadcast_fights: bool = True,
     cache: bool = True,
-    use_pandas_grok: bool = False,
-    native_detok: bool = False,
-    cache_parsed: bool = False,
     cache_lines: bool = True,
-    marker_prefilter: bool = True,
 ) -> PipelineResult:
-    """cache_parsed: persist the parsed projection. Default False: the
-    markers scan re-runs detok+parse (map-only, cheap) instead of building
-    a 35-column memory store of every event — measured 17-27% faster
-    end-to-end at 2/8 executors AND better-scaling (cache-write bandwidth
-    is the scarce resource, not CPU). True restores the single-parse
-    plan for cache-rich environments.
-
-    cache_lines (default True): middle path — persist ONLY the
-    detokenized line (one narrow string column, ~10x smaller than the
-    parsed cache), so the Arrow detok UDF runs once and both the markers
-    pass and the routed pass re-derive the typed columns from the cache
-    with pure JVM codegen (the cheap half of the parse). Default settled
-    by a 6-pair ABBA A/B under the official bench harness in quiet-gated
-    host windows (bench_ab_cache.py -> BENCH/CACHE_AB.md): median
-    on/off time ratio 0.79 at local[32] (on faster in 5/6 rounds, both
-    orders; ~76k vs ~60k routed ev/s), neutral at 4x1-core executors
-    (38.4s both variants) where Python workers are fewer and cache
-    writes contend instead."""
+    """cache_lines (default True): persist ONLY the detokenized line (one
+    narrow string column, ~10x smaller than the parsed projection), so
+    the Arrow detok runs once and both the markers pass and the routed
+    pass re-derive the typed columns from the cache with pure JVM
+    codegen (the cheap half of the parse). Settled by a 6-pair ABBA A/B
+    under the official bench harness in quiet-gated host windows
+    (BENCH/CACHE_AB.md): median on/off time ratio 0.79 at local[32] (on
+    faster in 5/6 rounds, both orders; ~76k vs ~60k routed ev/s),
+    neutral at 4x1-core executors (38.4s both variants) where Python
+    workers are fewer and cache writes contend instead. Persisting the
+    full parsed projection lost to both (cache-write bandwidth is the
+    scarce resource, not CPU). ``cache=False`` persists nothing."""
     src = token_df
     lines_cached = None
     if cache and cache_lines:
-        lines_cached = (grammar.detokenize_lines(token_df,
-                                                 native=native_detok,
-                                                 keep_tokens=False)
+        lines_cached = (grammar.detokenize_lines(token_df, keep_tokens=False)
                         .select("doc_id", "source", "line").persist())
         src = lines_cached
-    if use_pandas_grok:
-        parsed_full = grammar.parse_lines_pandas(src)
-    else:
-        parsed_full = grammar.parse_lines(src, native_detok=native_detok)
+    parsed_full = grammar.parse_lines(src)
 
     # The projection is the slim downstream set: every predicate that only
     # needs a raw string is already a boolean flag, so the wide raw columns
     # (line, effect/amount/skill/time) never leave this select. The fights
-    # (markers) pass and the routed pass each scan this plan; by default
-    # that means the detok UDF runs twice — measured cheaper and
-    # better-scaling than building a full-width memory store once
-    # (cache_parsed=True restores the single-parse plan).
+    # (markers) pass and the routed pass each scan this plan, re-deriving
+    # the typed columns from the line cache (or the token scan).
     slim_cols = [
         "log_id", "line_no", "ts", "src_raw", "tgt_raw",
         "src_player", "src_name", "tgt_name", "skill",
@@ -100,8 +83,6 @@ def run_pipeline(
         "m_shield", "m_immune", "skill_has_revive", "tgt_has_at",
     ]
     parsed = parsed_full.select(*slim_cols)
-    if cache and cache_parsed:
-        parsed = parsed.persist()
 
     # Round 9 (guide par.2.3/par.1.2 — don't compute what you throw away):
     # the markers pass only keeps rows whose EFFECT field contains one of
@@ -114,17 +95,10 @@ def run_pipeline(
     # The exact flag filter in build_fights still decides membership, so
     # results are identical by construction (filter(superset) then
     # filter(exact) == filter(exact); pinned in test_e2e_oracle).
-    if marker_prefilter and not (cache and cache_parsed):
-        # (with cache_parsed the single full-width store IS the cheap
-        # source — re-deriving from the line would parse a second time)
-        from ..constants import DEATH, ENTER_COMBAT, LEAVE_COMBAT
-        pre = (F.col("line").contains(ENTER_COMBAT)
-               | F.col("line").contains(LEAVE_COMBAT)
-               | F.col("line").contains(DEATH))
-        marker_src = parsed_full.filter(pre).select(*slim_cols)
-    else:
-        marker_src = parsed
-    fights = build_fights(marker_src)
+    pre = (F.col("line").contains(ENTER_COMBAT)
+           | F.col("line").contains(LEAVE_COMBAT)
+           | F.col("line").contains(DEATH))
+    fights = build_fights(parsed_full.filter(pre).select(*slim_cols))
     if cache:
         fights = fights.cache()
 

@@ -24,7 +24,7 @@ batch-only):
    lookup, out of scope for per-log state; run the batch dedup downstream.
 
 Everything before the stateful operator is the same stateless parse used
-in batch (the pandas detok UDF and all grammar expressions run unchanged
+in batch (the mapInArrow detok and all grammar expressions run unchanged
 on a streaming DataFrame).
 """
 
@@ -335,7 +335,8 @@ def stream_pulls(tokens_stream: DataFrame, reorder: bool = False,
     """Streaming token table -> stream of finished pulls. reorder=True
     tolerates out-of-order arrival across micro-batches (see module
     docstring) at the cost of a per-log line buffer in the state."""
-    parsed = grammar.split_fields(grammar.detokenize_lines(tokens_stream))
+    parsed = grammar.split_fields(
+        grammar.detokenize_lines(tokens_stream, keep_tokens=False))
     parsed = grammar.with_identity_columns(parsed)
     slim = parsed.select("log_id", "line_no", "log_date", "time_raw",
                          "src_raw", "tgt_raw", "skill_raw", "effect_raw",

@@ -124,22 +124,20 @@ def test_shuffle_join_path(spark, broadcast):
     assert spark_pulls(res) == oracle_pulls(oracle)
 
 
-def test_cache_parsed_plans_agree(spark):
-    """Both physical strategies — re-parse for the markers pass (default)
-    and single-parse with a persisted projection (cache_parsed=True) —
-    must produce identical pulls and heal tables."""
+def test_cache_lines_plans_agree(spark):
+    """Both physical strategies — persist the detokenized lines and parse
+    from them (default) or re-parse from the token scan in both passes
+    (cache_lines=False) — must produce identical pulls, heal and threat
+    tables."""
     from team_goldo_combat_log_parser_spark.plans.pipeline import run_pipeline
     from team_goldo_combat_log_parser_spark.sources import datagen as dg
 
     tokens = dg.token_df(spark, dg.adversarial_logs())
     a = run_pipeline(spark, tokens)  # default: line-only cache
-    b = run_pipeline(spark, tokens, cache_parsed=True)
     c = run_pipeline(spark, tokens, cache_lines=False)  # re-parse twice
-    for ta, tb, tc in ((a.pulls, b.pulls, c.pulls),
-                       (a.heal, b.heal, c.heal),
-                       (a.threat, b.threat, c.threat)):
+    for ta, tc in ((a.pulls, c.pulls), (a.heal, c.heal),
+                   (a.threat, c.threat)):
         ra = sorted(map(str, ta.collect()))
-        rb = sorted(map(str, tb.collect()))
         rc = sorted(map(str, tc.collect()))
-        assert ra == rb == rc
-    a.unpersist(); b.unpersist(); c.unpersist()
+        assert ra == rc
+    a.unpersist(); c.unpersist()

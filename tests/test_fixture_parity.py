@@ -7,8 +7,6 @@ including the trailing-space skill keys ("Storm ") and the multi-handler
 rows (damage + threat from one line).
 """
 
-import pytest
-
 from team_goldo_combat_log_parser_spark.plans.pipeline import run_pipeline
 from team_goldo_combat_log_parser_spark.sources import datagen as dg
 
@@ -20,10 +18,9 @@ EXIT_ = dg.exit_combat_line("23:59:00.000", PLAYER)
 FIX = dg.fixture_lines()
 
 
-def run_case(spark, lines, **kw):
+def run_case(spark, lines):
     log = ("combat_2012-06-06_20_33_20_case.txt", [ENTER, *lines, EXIT_])
-    res = run_pipeline(spark, dg.token_df(spark, [log]), cache=False, **kw)
-    return res
+    return run_pipeline(spark, dg.token_df(spark, [log]), cache=False)
 
 
 def one_map(df, key_cols, val_col):
@@ -136,12 +133,3 @@ def test_resist(spark):
     assert r["attacker"] == "Dread Guard Dispatcher "
     assert r["skill"] == "Force Lightning "
     assert (r["resisted"], r["total_damage"]) == (1, 0)
-
-
-@pytest.mark.parametrize("use_pandas_grok", [True])
-def test_pandas_grok_path_matches(spark, use_pandas_grok):
-    res = run_case(spark, [FIX["damage_done"], FIX["heal_recvd"]],
-                   use_pandas_grok=use_pandas_grok)
-    assert res.pulls.collect()[0]["total_damage"] == 2602
-    heal = one_map(res.heal, ["healer"], "heal")
-    assert heal[(PLAYER,)] == 4480

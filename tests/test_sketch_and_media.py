@@ -686,34 +686,68 @@ def test_clean_corpus_planted_stages(spark, tmp_path):
     assert [by_id[i][4] for i in (10, 11, 12, 13)] == [100, 200, 300, 400]
 
 
-def test_minhash_signature_modes_bit_identical(spark, sf01):
-    """The scan-local signature construction (round 8, VERDICT next #4)
-    must produce bit-identical signatures to the exploded+agg path —
-    same shingling, same xxhash64 -> affine -> min per lane — and the
-    downstream LSH pairs must therefore match exactly too."""
-    a = sorted(tuple(r) for r in text.doc_minhash_signatures(
-        spark, sf01, mode="exploded").collect())
-    b = sorted(tuple(r) for r in text.doc_minhash_signatures(
-        spark, sf01, mode="scan_local").collect())
-    assert len(a) > 0 and a == b
+def _minhash_reference(spark, sf_dir):
+    """Signature reference independent of text.py's numpy path: Spark SQL
+    derives the shingles (Java substring semantics, incl. the NULL-text
+    doc whose one shingle is NULL), golden/xxh.py hashes them (NULL ->
+    xxhash64's bare seed) and Python takes the 32 affine lane minima."""
+    from pyspark.sql import functions as F
+
+    from team_goldo_combat_log_parser_spark.golden.xxh import xxh64
+
+    shingles = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+        "doc_id", F.expr("transform(sequence(1, greatest(length(text) - 2, 1)),"
+                         " i -> substring(text, i, 3))").alias("sh"))
+    memo = {}
+
+    def h31(sh):
+        if sh not in memo:
+            memo[sh] = (42 if sh is None
+                        else xxh64(sh.encode("utf-8"), 42)) & ((1 << 31) - 1)
+        return memo[sh]
+
+    out = []
+    for r in shingles.collect():
+        hs = [h31(sh) for sh in r["sh"]]
+        out.append((r["doc_id"], *(min((h * a + b) % text._P for h in hs)
+                                   for a, b in text._AB)))
+    return sorted(out)
+
+
+def _simhash_reference(spark, sf_dir):
+    """SimHash reference: Spark SQL ``split(trim(text), '\\s+')`` fixes
+    the tokens (NULL text -> no row), golden/xxh.py hashes them and
+    Python casts the 63 bit votes."""
+    from pyspark.sql import functions as F
+
+    from team_goldo_combat_log_parser_spark.golden.xxh import xxh64
+
+    toks = (spark.read.parquet(f"{sf_dir}/documents.parquet")
+            .select("doc_id", F.split(F.trim("text"), r"\s+").alias("toks"))
+            .filter(F.col("toks").isNotNull()))
+    out = []
+    for r in toks.collect():
+        hs = [xxh64(t.encode("utf-8"), 42) for t in r["toks"]]
+        votes = [sum(1 if h >> i & 1 else -1 for h in hs) for i in range(63)]
+        out.append((r["doc_id"],
+                    sum(1 << i for i, v in enumerate(votes) if v > 0)))
+    return sorted(out)
 
 
 def test_minhash_arrow_mode_bit_identical(spark, sf01):
-    """Round 9: the vectorized-numpy signature mode must reproduce the
-    exploded path bit-for-bit on the real corpus (same xxhash64 ->
-    affine -> min per lane)."""
-    a = sorted(tuple(r) for r in text.doc_minhash_signatures(
-        spark, sf01, mode="exploded").collect())
-    b = sorted(tuple(r) for r in text.doc_minhash_signatures(
-        spark, sf01, mode="arrow").collect())
-    assert len(a) > 0 and a == b
+    """The numpy signature path (vectorized xxh64 over 3-byte windows,
+    32 lane minima) reproduces the golden/xxh.py reference bit-for-bit
+    on the real corpus."""
+    got = sorted(tuple(r) for r in text.doc_minhash_signatures(
+        spark, sf01).collect())
+    assert len(got) > 0 and got == _minhash_reference(spark, sf01)
 
 
 def test_minhash_arrow_mode_edge_docs(spark, tmp_path):
-    """The arrow mode's fallback lanes: NULL text (bare-seed hash),
-    len<3 (one whole-text shingle), non-ASCII (3-char windows hashed
-    over UTF-8 bytes), and empty text must all match the exploded
-    path exactly."""
+    """The signature's fallback lanes match the reference: NULL text
+    (a signature row from the bare-seed hash, not a dropped doc), len<3
+    (one whole-text shingle), non-ASCII (3-char windows hashed over
+    UTF-8 bytes), and empty text."""
     rows = [(0, "s", "the quick brown fox jumps over the lazy dog"),
             (1, "s", None),
             (2, "s", "ab"),
@@ -725,27 +759,22 @@ def test_minhash_arrow_mode_edge_docs(spark, tmp_path):
         rows, "doc_id long, source string, text string"
     ).coalesce(1).write.mode("overwrite").parquet(
         str(tmp_path / "documents.parquet"))
-    a = sorted(tuple(r) for r in text.doc_minhash_signatures(
-        spark, str(tmp_path), mode="exploded").collect())
-    b = sorted(tuple(r) for r in text.doc_minhash_signatures(
-        spark, str(tmp_path), mode="arrow").collect())
-    assert len(a) == 7 and a == b
+    got = sorted(tuple(r) for r in text.doc_minhash_signatures(
+        spark, str(tmp_path)).collect())
+    assert len(got) == 7 and got == _minhash_reference(spark, str(tmp_path))
 
 
 def test_simhash_arrow_mode_bit_identical(spark, sf01):
-    """Round 9: the mapInPandas simhash must reproduce the exploded
-    JVM path bit-for-bit on the real corpus."""
-    a = sorted(tuple(r) for r in text.doc_simhash64(
-        spark, sf01, mode="exploded").collect())
-    b = sorted(tuple(r) for r in text.doc_simhash64(
-        spark, sf01, mode="arrow").collect())
-    assert len(a) > 0 and a == b
+    """The mapInPandas simhash reproduces the golden/xxh.py reference
+    bit-for-bit on the real corpus."""
+    got = sorted(tuple(r) for r in text.doc_simhash64(spark, sf01).collect())
+    assert len(got) > 0 and got == _simhash_reference(spark, sf01)
 
 
 def test_simhash_arrow_mode_edge_docs(spark, tmp_path):
-    """Tokenization parity pins for the arrow mode: Spark's trim strips
-    0x20 ONLY, split keeps leading/trailing empty tokens, Java \\s is
-    ASCII-only (\\xa0 is NOT whitespace), NULL docs emit no row."""
+    """Tokenization parity pins: Spark's trim strips 0x20 ONLY, split
+    keeps leading/trailing empty tokens, Java \\s is ASCII-only (\\xa0
+    is NOT whitespace), NULL docs emit no row."""
     rows = [(0, "s", "plain token stream here"),
             (1, "s", None),                      # no output row
             (2, "s", "\tx y\t"),                 # edge empties survive trim
@@ -758,40 +787,18 @@ def test_simhash_arrow_mode_edge_docs(spark, tmp_path):
         rows, "doc_id long, source string, text string"
     ).coalesce(1).write.mode("overwrite").parquet(
         str(tmp_path / "documents.parquet"))
-    a = sorted(tuple(r) for r in text.doc_simhash64(
-        spark, str(tmp_path), mode="exploded").collect())
-    b = sorted(tuple(r) for r in text.doc_simhash64(
-        spark, str(tmp_path), mode="arrow").collect())
-    assert len(a) == 7 and a == b  # doc 1 absent in both
+    got = sorted(tuple(r) for r in text.doc_simhash64(
+        spark, str(tmp_path)).collect())
+    assert len(got) == 7 and got == _simhash_reference(spark, str(tmp_path))
 
 
-def test_minhash_signature_modes_match_on_null_text(spark, tmp_path):
-    """Round-8 advice: the exploded path emits a signature row for a
-    NULL-text doc (greatest() skips NULLs -> sequence [1] ->
-    substring(NULL) -> xxhash64(NULL) == the seed), and scan_local must
-    reproduce it instead of silently dropping the doc."""
-    rows = [(0, "src0", "the quick brown fox jumps over the dog"),
-            (1, "src0", None),
-            (2, "src1", "the quick brown fox jumps over the dog")]
-    spark.createDataFrame(
-        rows, "doc_id long, source string, text string"
-    ).coalesce(1).write.mode("overwrite").parquet(
-        str(tmp_path / "documents.parquet"))
-    a = sorted(tuple(r) for r in text.doc_minhash_signatures(
-        spark, str(tmp_path), mode="exploded").collect())
-    b = sorted(tuple(r) for r in text.doc_minhash_signatures(
-        spark, str(tmp_path), mode="scan_local").collect())
-    assert len(a) == 3, a  # the NULL-text doc has a signature row
-    assert a == b
-
-
-def test_minhash_scan_local_signature_has_no_shuffle(spark, sf01):
-    """scan_local's whole point: the signature is a projection of the
-    documents scan — zero exchanges before banding."""
+def test_minhash_signature_has_no_shuffle(spark, sf01):
+    """The signature is a projection of the documents scan — zero
+    exchanges before banding."""
     import io
     from contextlib import redirect_stdout
 
-    df = text.doc_minhash_signatures(spark, sf01, mode="scan_local")
+    df = text.doc_minhash_signatures(spark, sf01)
     buf = io.StringIO()
     with redirect_stdout(buf):
         df.explain("formatted")
