@@ -7,7 +7,9 @@ exists so plan claims in OPTIMIZATION_r09.md are reproducible:
 
   python bench_extra.py plans [out_dir]       # save explain() per query
   python bench_extra.py time [query ...]      # noop-sink min-of-N timing
-  python bench_extra.py e2e                   # combat pipeline phase split
+
+The combat pipeline's per-layer split (detok / parse / fights / route /
+write) is recorded by ``perfbench/run.py --trace 1``.
 
 Timing methodology: each query is collected once to warm codegen/workers,
 then timed REPS times with the noop sink (computes every column, discards
@@ -26,9 +28,7 @@ from contextlib import redirect_stdout
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from pyspark.sql import functions as F  # noqa: E402
-
-import bench  # noqa: E402  (QUERY_BENCHES + corpus helpers; no timing reuse)
+import bench  # noqa: E402  (QUERY_BENCHES; no timing reuse)
 from team_goldo_combat_log_parser_spark.session import get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -79,48 +79,6 @@ def time_queries(spark, names: list[str] | None = None) -> dict[str, float]:
     return out
 
 
-def e2e_phases(spark) -> dict[str, float]:
-    """Split the combat pipeline into its phases, timed separately (one
-    warm pass first). Uses the same corpus/token path as the bench."""
-    from team_goldo_combat_log_parser_spark.functions import grammar
-    from team_goldo_combat_log_parser_spark.plans.pipeline import run_pipeline
-    from team_goldo_combat_log_parser_spark.plans.sessionize import (
-        assign_fights, build_fights)
-    from team_goldo_combat_log_parser_spark.plans.route import with_routes
-    from team_goldo_combat_log_parser_spark.sources.token_io import (
-        materialize_token_table)
-
-    sf = bench.sf_of(SF_DIR)
-    token_path = materialize_token_table(
-        spark, bench.corpus_cfg(sf), bench.CORPUS_CACHE,
-        partitions=max(CPUS, 8))
-    tokens = spark.read.parquet(token_path)
-    out: dict[str, float] = {}
-
-    def t(name, thunk):
-        spark.sparkContext.setJobDescription(f"r09 e2e {name}")
-        t0 = time.perf_counter()
-        thunk()
-        out[name] = round(time.perf_counter() - t0, 3)
-        print(f"{name}: {out[name]}s")
-
-    # warm
-    run_pipeline(spark, tokens.limit(20000), cache=False).pulls.count()
-
-    t("detok_only", lambda: noop(
-        grammar.detokenize_lines(tokens).select("doc_id", "source", "line")))
-    t("detok_parse_full", lambda: noop(grammar.parse_lines(tokens)))
-    parsed = grammar.parse_lines(tokens)
-    t("markers_fights", lambda: noop(build_fights(parsed)))
-    fights = build_fights(parsed)
-    t("routed_noop_nocache", lambda: noop(
-        with_routes(assign_fights(parsed, fights))))
-    # the bench's own e2e (cache build + rollup + 5 agg counts)
-    t("bench_e2e_full", lambda: bench.run_combat_e2e(spark, token_path))
-    spark.sparkContext.setJobDescription(None)
-    return out
-
-
 def main() -> None:
     cmd = sys.argv[1] if len(sys.argv) > 1 else "time"
     spark = get_spark("bench_extra", cores=CPUS)
@@ -132,8 +90,6 @@ def main() -> None:
     elif cmd == "time":
         names = sys.argv[2:] or None
         print(json.dumps(time_queries(spark, names)))
-    elif cmd == "e2e":
-        print(json.dumps(e2e_phases(spark)))
     else:
         raise SystemExit(f"unknown command {cmd}")
 

@@ -83,9 +83,20 @@ def _detok_arrow_array(arr) -> "object":
     out[idx] = np.where(high, 0xC0 | (v >> 6), v)
     hi_idx = idx[high]
     out[hi_idx + 1] = 0x80 | (v[high] & 0x3F)
-    new_offs = (offs + cum[offs]).astype(np.int32)
+    new_offs = _int32_offsets(offs + cum[offs])
     return pa.StringArray.from_buffers(
         n, pa.py_buffer(new_offs.tobytes()), pa.py_buffer(out.tobytes()))
+
+
+def _int32_offsets(offs: np.ndarray) -> np.ndarray:
+    """int64 string offsets -> the int32 an Arrow StringArray holds; a
+    batch whose UTF-8 payload passes 2^31 - 1 bytes raises instead of
+    wrapping into corrupt strings."""
+    if offs[-1] > np.iinfo(np.int32).max:
+        raise ValueError(
+            f"detokenize: batch of {int(offs[-1])} UTF-8 bytes overflows "
+            "int32 string offsets")
+    return offs.astype(np.int32)
 
 
 def detokenize_lines(df: DataFrame, tokens_col: str = "tokens",

@@ -7,6 +7,12 @@ the state carries (in_combat, player, healer, fight_seq, accumulators)
 across micro-batches and a finished pull row is emitted the moment its
 exit marker is processed.
 
+The line grammar lives in one place, ``grammar.parse_lines``: the stream
+runs the same native parse as batch (the mapInArrow detok and every
+typed/flag expression) and hands the stateful operator only the typed
+columns the fold reads. The stateful operator parses nothing itself, so
+batch and stream read every amount, threat and damage type alike.
+
 Scope notes (extension surface, not reference parity — the reference is
 batch-only):
  * default mode: rows are processed in line_no order within each batch;
@@ -22,10 +28,6 @@ batch-only):
    a loud error, not an executor OOM.
  * cross-log duplicate-pull suppression (Datastore probe) is a global
    lookup, out of scope for per-log state; run the batch dedup downstream.
-
-Everything before the stateful operator is the same stateless parse used
-in batch (the mapInArrow detok and all grammar expressions run unchanged
-on a streaming DataFrame).
 """
 
 from __future__ import annotations
@@ -41,25 +43,6 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQueryListener
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-import re
-
-from ..constants import (
-    ABSORB,
-    DAMAGE,
-    DEATH,
-    DEFLECT,
-    DODGE,
-    ENTER_COMBAT,
-    FORCE_ARMOR,
-    HEAL,
-    LEAVE_COMBAT,
-    MISS,
-    NO_DAMAGE,
-    PARRY,
-    RESIST,
-    REVIVE,
-    SHIELD,
-)
 from ..functions import grammar
 
 PULL_OUT_SCHEMA = T.StructType([
@@ -92,61 +75,41 @@ PULL_OUT_SCHEMA = T.StructType([
 
 STATE_SCHEMA = T.StructType([T.StructField("blob", T.StringType())])
 
+# the parse_lines columns the fold reads, in reorder-buffer row order
+# (line_no first: the buffer keys on row[0])
+_FOLD_COLS = (
+    "line_no", "log_date", "time_str", "src_raw", "tgt_raw", "src_player",
+    "src_name", "tgt_name", "skill", "amount", "dmg_type", "absorbed",
+    "threat", "has_threat", "is_enter", "is_leave", "is_death", "is_damage",
+    "is_heal_eff", "is_fa", "tgt_has_at", "skill_has_revive", "m_miss",
+    "m_absorb", "m_resist", "m_dodge", "m_dodge_single", "m_shield",
+    "m_immune")
+_Row = namedtuple("_Row", _FOLD_COLS)
+# nullable longs cross as coalesce(x, 0) plus an ``x_ok`` flag: one null
+# turns an Arrow long column float64 in pandas, which rounds past 2^53
+_NULLABLE = ("amount", "absorbed", "threat")
 
-def _first_int(amount: str) -> int:
-    n = _first_int_opt(amount)
-    return n if n is not None else 0
-
-
-def _first_int_opt(amount: str) -> int | None:
-    tok = amount[1:].split(None, 1)
-    if not tok:
-        return None
-    digits = ""
-    for ch in tok[0]:
-        if ch.isdigit():
-            digits += ch
-        else:
-            break
-    return int(digits) if digits else None
+REORDER_MAX_BUFFER = 100_000
 
 
-def _absorbed_opt(amount: str) -> int | None:
-    """The absorbed value: first integer after the second '(' (same group
-    the batch grammar's ^\\(([^(]*)\\((\\d+) regex captures)."""
-    i = amount.find("(", 1)
-    if i < 0:
-        return None
-    digits = ""
-    for ch in amount[i + 1:]:
-        if ch.isdigit():
-            digits += ch
-        else:
-            break
-    return int(digits) if digits else None
-
-
-def _fold(st: dict, r) -> dict | None:
+def _fold(st: dict, r: _Row) -> dict | None:
     """Advance one row through the per-log parser state; returns a finished
     pull dict when the row closes a fight (semantics mirror golden/oracle)."""
-    eff, amt = r.effect_raw, r.amount_raw
-    if not st["in_combat"] and ENTER_COMBAT in eff:
-        st.update(in_combat=True, player=r.src_raw[2:], seq=st["seq"] + 1,
-                  start=f"{r.log_date} {r.time_raw[1:]}", target=None,
+    if not st["in_combat"] and r.is_enter:
+        st.update(in_combat=True, player=r.src_player, seq=st["seq"] + 1,
+                  start=f"{r.log_date} {r.time_str}", target=None,
                   dmg=0, heal=0, threat=0, dmg_rcvd=0,
-                  heal_by={r.src_raw[2:]: 0}, dd_by={}, dr_by={})
+                  heal_by={r.src_player: 0}, dd_by={}, dr_by={})
         return None
     if not st["in_combat"]:
-        if FORCE_ARMOR in eff and "@" in r.tgt_raw:
-            st["healer"] = r.src_raw[2:]
+        if r.is_fa and r.tgt_has_at:
+            st["healer"] = r.src_player
         return None
     player = st["player"]
-    out = None
-    if DAMAGE in eff and player in r.src_raw and NO_DAMAGE not in amt:
-        st["target"] = r.tgt_raw[1:].split("{", 1)[0]
-        n = _first_int_opt(amt)
-        skill = r.skill_raw[1:].split("{", 1)[0]
-        entry = st["dd_by"].setdefault(skill, [0, 0, 0, 0])
+    n = r.amount
+    if r.is_damage and player in r.src_raw and not r.m_immune:
+        st["target"] = r.tgt_name
+        entry = st["dd_by"].setdefault(r.skill, [0, 0, 0, 0])
         if n:
             st["dmg"] += n
             entry[0] += 1          # hit
@@ -154,53 +117,43 @@ def _fold(st: dict, r) -> dict | None:
         elif n == 0:
             # amount==0 splits dodged-vs-missed on the DODGE id only,
             # same as batch m_dodge_single (main.py:163-167)
-            entry[1 if DODGE in amt else 2] += 1
-    if DAMAGE in eff and player in r.tgt_raw:
+            entry[1 if r.m_dodge_single else 2] += 1
+    if r.is_damage and player in r.tgt_raw:
         # damage-received accounting + absorb-to-healer credit (the batch
         # heal_per_healer / damage_received_players semantics)
-        miss = MISS in amt
-        resist_raw = RESIST in amt
-        dodge_raw = DODGE in amt or PARRY in amt or DEFLECT in amt
-        mitigated = miss or resist_raw or dodge_raw
-        n = _first_int_opt(amt)
-        if not mitigated and n is not None:
+        if not (r.m_miss or r.m_resist or r.m_dodge) and n is not None:
             st["dmg_rcvd"] += n
         # per-(attacker, skill) breakdown, batch damage_received_skills
         # precedence: miss > resist > dodged; shielded on landed hits only
-        attacker = r.src_raw[1:].split("{", 1)[0]
-        skill = r.skill_raw[1:].split("{", 1)[0]
-        d = st["dr_by"].setdefault(attacker, {}).setdefault(
-            skill, [0, 0, 0, 0, 0, 0, None])
-        if miss:
+        d = st["dr_by"].setdefault(r.src_name, {}).setdefault(
+            r.skill, [0, 0, 0, 0, 0, 0, None])
+        if r.m_miss:
             d[3] += 1
-        elif resist_raw:
+        elif r.m_resist:
             d[4] += 1
-        elif dodge_raw:
+        elif r.m_dodge:
             d[1] += 1
         else:
             d[0] += 1
-            if SHIELD in amt:
+            if r.m_shield:
                 d[2] += 1
             if n is not None:
                 d[5] += n
         if d[6] is None and n:
-            m = re.match(r"^\(\S+\s+(\S+)", amt)
-            d[6] = m.group(1) if m else ""
-        if ABSORB in amt and MISS not in amt:
-            absorbed = _absorbed_opt(amt)
-            if absorbed is not None and n is not None and absorbed <= n:
-                k = st["healer"] if st["healer"] is not None else "null"
-                st["heal_by"][k] = st["heal_by"].get(k, 0) + absorbed
-    if FORCE_ARMOR in eff and "@" in r.tgt_raw:
-        st["healer"] = r.src_raw[2:]
-    if HEAL in eff and player in r.src_raw and REVIVE not in r.skill_raw:
-        h = _first_int(amt)
+            d[6] = r.dmg_type
+        if (r.m_absorb and not r.m_miss and r.absorbed is not None
+                and n is not None and r.absorbed <= n):
+            k = st["healer"] if st["healer"] is not None else "null"
+            st["heal_by"][k] = st["heal_by"].get(k, 0) + r.absorbed
+    if r.is_fa and r.tgt_has_at:
+        st["healer"] = r.src_player
+    if r.is_heal_eff and player in r.src_raw and not r.skill_has_revive:
+        h = n or 0
         st["heal"] += h
         st["heal_by"][player] = st["heal_by"].get(player, 0) + h
-    exited = False
-    if (DEATH in eff or LEAVE_COMBAT in eff) and player in r.tgt_raw:
+    if (r.is_death or r.is_leave) and player in r.tgt_raw:
         out = dict(fight_seq=st["seq"], pull_start=st["start"],
-                   pull_stop=f"{r.log_date} {r.time_raw[1:]}",
+                   pull_stop=f"{r.log_date} {r.time_str}",
                    target=st["target"], player=player,
                    total_damage=st["dmg"], player_heal=st["heal"],
                    threat=st["threat"], dmg_rcvd=st["dmg_rcvd"],
@@ -208,121 +161,92 @@ def _fold(st: dict, r) -> dict | None:
                    dd_map=json.dumps(st["dd_by"], sort_keys=True),
                    dr_map=json.dumps(st["dr_by"], sort_keys=True))
         st.update(in_combat=False, player=None, healer=None)
-        exited = True
-    if not exited and "<" in amt and player in r.src_raw:
-        # Mirror the batch path's null tolerance (grammar.py:
-        # regexp_extract('<([^>]*)>') + try_cast): a truncated '<...'
-        # without '>' or a non-numeric threat contributes nothing
-        # instead of crashing the stream on one malformed line.
-        m = re.search(r"<([^>]*)>", amt)
-        # fullmatch (not bare int()): Python int accepts '4_5' underscores
-        # that a Spark cast rejects — keep the two paths' domains identical.
-        # ASCII classes, not \s/\d: Python's are Unicode-aware (U+00A0,
-        # Arabic-Indic digits...) while Spark's string->int cast trims only
-        # ASCII whitespace and accepts only ASCII digits
-        if m and re.fullmatch(r"[ \t\r\n]*[+-]?[0-9]+[ \t\r\n]*", m.group(1)):
-            st["threat"] += int(m.group(1))
-    return out
+        return out
+    if r.has_threat and player in r.src_raw and r.threat is not None:
+        st["threat"] += r.threat
+    return None
 
 
-def _stateful_fn(key: tuple, pdfs: Iterator[pd.DataFrame],
-                 state: GroupState) -> Iterator[pd.DataFrame]:
-    log_id = key[0]
-    if state.exists:
-        st = json.loads(state.get[0])
-        # state blobs written by an older schema may predate the per-fight
-        # maps; mid-fight resume then continues with empty maps
-        st.setdefault("heal_by", {})
-        st.setdefault("dd_by", {})
-        st.setdefault("dr_by", {})
-    else:
-        st = {"in_combat": False, "player": None, "healer": None, "seq": 0,
-              "start": None, "target": None, "dmg": 0, "heal": 0, "threat": 0}
-    done: list[dict] = []
-    for pdf in pdfs:
-        for r in pdf.sort_values("line_no").itertuples(index=False):
-            pull = _fold(st, r)
-            if pull:
-                pull["log_id"] = log_id
-                done.append(pull)
-    state.update((json.dumps(st),))
-    if done:
-        yield pd.DataFrame(done)[[f.name for f in PULL_OUT_SCHEMA.fields]]
+def _rows(pdf: pd.DataFrame) -> list[tuple]:
+    """One input chunk -> fold rows of Python scalars: exact ints, None
+    for a null long, and JSON-ready for the reorder buffer."""
+    for c in _NULLABLE:
+        pdf[c] = pdf[c].astype(object).where(pdf[f"{c}_ok"], None)
+    return list(pdf[list(_FOLD_COLS)].itertuples(index=False, name=None))
 
 
-# row layout inside the reorder buffer (json-serialized into the state)
-_ROW_FIELDS = ["line_no", "log_date", "time_raw", "src_raw", "tgt_raw",
-               "skill_raw", "effect_raw", "amount_raw"]
-_BufRow = namedtuple("_BufRow", _ROW_FIELDS)
+def _make_state_fn(reorder: bool, max_buffer: int):
+    """The per-log state function. It loads the parser state once and
+    feeds every row to ``_fold``:
 
-REORDER_MAX_BUFFER = 100_000
+    * ``reorder=False``: rows in ``line_no`` order within each chunk;
+    * ``reorder=True``: rows enter a per-log buffer keyed by line_no and
+      are fed strictly in sequence (line_no is contiguous from 0 per
+      log), so arbitrary cross-batch reordering — a late marker, a
+      shuffled replay — produces EXACTLY the ordered result. Rows ahead
+      of a gap wait in the state.
 
-
-def _make_reorder_fn(max_buffer: int):
-    """Order-tolerant variant of _stateful_fn: rows enter a per-log buffer
-    keyed by line_no and are fed to the parser strictly in sequence
-    (line_no is contiguous from 0 per log), so arbitrary cross-batch
-    reordering — a late marker, a shuffled replay — produces EXACTLY the
-    ordered result. Rows ahead of a gap wait in the state; the parser
-    state machine itself is unchanged (_fold). Built as a closure so the
-    buffer bound ships with the pickled function to the executors."""
+    Built as a closure so the options ship with the pickled function to
+    the executors."""
 
     def fn(key: tuple, pdfs: Iterator[pd.DataFrame],
            state: GroupState) -> Iterator[pd.DataFrame]:
         log_id = key[0]
         if state.exists:
             st = json.loads(state.get[0])
-            st.setdefault("heal_by", {})
-            st.setdefault("dd_by", {})
-            st.setdefault("dr_by", {})
         else:
             st = {"in_combat": False, "player": None, "healer": None,
                   "seq": 0, "start": None, "target": None, "dmg": 0,
                   "heal": 0, "threat": 0}
-        raw_buf = st.pop("_buf", [])
-        if isinstance(raw_buf, dict):
-            # pre-round-5 checkpoint blob: {str(line_no): row}
-            buf = {int(k): v for k, v in raw_buf.items()}
-        else:
-            # compact encoding: a bare row list — line_no is row[0], so
-            # the dict keys (and their str() copies) never hit the blob;
-            # ~30% off encode+decode at the 100k bound (measured in
-            # SCALE.md "Reorder-buffer state cost")
-            buf = {int(v[0]): v for v in raw_buf}
-        next_line = st.pop("_next", 0)
         done: list[dict] = []
 
-        def drain() -> None:
-            nonlocal next_line
-            while next_line in buf:
-                row = _BufRow(*buf.pop(next_line))
-                pull = _fold(st, row)
-                if pull:
-                    pull["log_id"] = log_id
-                    done.append(pull)
-                next_line += 1
+        def feed(row) -> None:
+            pull = _fold(st, _Row._make(row))
+            if pull:
+                pull["log_id"] = log_id
+                done.append(pull)
 
+        buf: dict[int, list] = {}
+        next_line = 0
+        if reorder:
+            # a bare row list — line_no is row[0], so no str-keyed dict
+            # copies hit the blob (SCALE.md "Reorder-buffer state cost")
+            for row in st.pop("_buf", []):
+                if len(row) != len(_FOLD_COLS):
+                    raise ValueError(
+                        f"reorder buffer for {log_id} holds a row of "
+                        f"{len(row)} fields, expected {len(_FOLD_COLS)}: "
+                        "the checkpoint predates the typed row layout; "
+                        "start a fresh checkpoint")
+                buf[row[0]] = row
+            next_line = st.pop("_next", 0)
         for pdf in pdfs:
-            for r in pdf[_ROW_FIELDS].itertuples(index=False):
-                ln = int(r.line_no)
-                if ln < next_line:
+            if not reorder:
+                for row in _rows(pdf.sort_values("line_no")):
+                    feed(row)
+                continue
+            for row in _rows(pdf):
+                if row[0] < next_line:
                     # already delivered to the parser — an at-least-once
                     # source replaying a row; keeping it would park it in
                     # the buffer forever and eventually trip the bound
                     continue
-                buf[ln] = [ln, *r[1:]]
+                buf[row[0]] = row
                 # drain incrementally: in-order rows flow straight through
                 # the parser, so only rows genuinely ahead of a gap occupy
                 # memory and only THOSE count against the bound — a fully
                 # in-order batch larger than max_buffer is fine
-                drain()
+                while next_line in buf:
+                    feed(buf.pop(next_line))
+                    next_line += 1
                 if len(buf) > max_buffer:
                     raise RuntimeError(
                         f"reorder buffer for {log_id} exceeds {max_buffer} "
                         f"rows waiting on line {next_line} — line lost "
                         "upstream?")
-        st["_buf"] = list(buf.values())
-        st["_next"] = next_line
+        if reorder:
+            st["_buf"] = list(buf.values())
+            st["_next"] = next_line
         state.update((json.dumps(st),))
         if done:
             yield pd.DataFrame(done)[[f.name for f in PULL_OUT_SCHEMA.fields]]
@@ -335,16 +259,15 @@ def stream_pulls(tokens_stream: DataFrame, reorder: bool = False,
     """Streaming token table -> stream of finished pulls. reorder=True
     tolerates out-of-order arrival across micro-batches (see module
     docstring) at the cost of a per-log line buffer in the state."""
-    parsed = grammar.split_fields(
-        grammar.detokenize_lines(tokens_stream, keep_tokens=False))
-    parsed = grammar.with_identity_columns(parsed)
-    slim = parsed.select("log_id", "line_no", "log_date", "time_raw",
-                         "src_raw", "tgt_raw", "skill_raw", "effect_raw",
-                         "amount_raw")
-    fn = _make_reorder_fn(reorder_max_buffer) if reorder else _stateful_fn
+    parsed = grammar.parse_lines(tokens_stream)
+    slim = parsed.select(
+        "log_id",
+        *[F.coalesce(F.col(c), F.lit(0)).alias(c) if c in _NULLABLE else c
+          for c in _FOLD_COLS],
+        *[F.col(c).isNotNull().alias(f"{c}_ok") for c in _NULLABLE])
     return slim.groupBy("log_id").applyInPandasWithState(
-        fn, PULL_OUT_SCHEMA, STATE_SCHEMA,
-        "append", GroupStateTimeout.NoTimeout)
+        _make_state_fn(reorder, reorder_max_buffer), PULL_OUT_SCHEMA,
+        STATE_SCHEMA, "append", GroupStateTimeout.NoTimeout)
 
 
 def _progress_metrics_row(d: dict) -> dict:

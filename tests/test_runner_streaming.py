@@ -273,6 +273,157 @@ def test_streaming_tolerates_malformed_threat(spark, tmp_path):
     assert r["threat"] == bt[(r["log_id"], r["fight_seq"])]
 
 
+def _stream_and_batch(spark, tmp_path, log):
+    dg.write_token_table(spark, [log], str(tmp_path / "tokens"), 1)
+    stream_rows = run_stream_once(spark, str(tmp_path / "tokens"),
+                                  str(tmp_path / "ckpt"),
+                                  query_name=f"q_{tmp_path.name}").collect()
+    return stream_rows, run_pipeline(spark, dg.token_df(spark, [log]),
+                                     cache=False)
+
+
+def _one_fight(p, boss, amounts):
+    """Enter, then each amount as player->boss AND boss->player, exit."""
+    pa = dg.actor_player(p)
+    lines = [dg.enter_combat_line("10:00:00.000", p)]
+    for amt in amounts:
+        for src, tgt in ((pa, boss), (boss, pa)):
+            lines.append(dg.mk_line(f"10:00:{len(lines):02d}.000", src, tgt,
+                                    dg.STORM, dg.APPLY_DAMAGE, amt))
+    lines.append(dg.exit_combat_line("10:00:59.000", p))
+    return lines
+
+
+def test_streaming_latin1_amounts_match_batch(spark, tmp_path):
+    """One grammar for batch and stream: ISO-8859-1 amount bodies where a
+    Unicode-aware Python reading and Spark's ASCII regex classes disagree
+    ('²' is a Python digit, U+00A0 a Python space, a missing '(' is not
+    skipped by the regex) must give the stream the batch tables."""
+    p = "Lat'in"
+    boss = dg.actor_npc("Training Dummy", 999000111, 1)
+    kin = dg.DMG_TYPE_IDS["kinetic"]
+    log = ("combat_2012-09-01_10_00_00_latin1.txt", _one_fight(p, boss, [
+        dg.amt_hit(100, "kinetic"),
+        f"(1\xb2 kinetic {{{kin}}})",
+        f"(12\xa0kinetic {{{kin}}})",
+        f"x12 kinetic {{{kin}}}",
+    ]))
+    stream_rows, batch = _stream_and_batch(spark, tmp_path, log)
+    assert len(stream_rows) == 1
+    r = stream_rows[0]
+    b = batch.pulls.collect()
+    assert len(b) == 1 and r["total_damage"] == b[0]["total_damage"]
+    assert r["dmg_rcvd"] == batch.extra[
+        "damage_received_players"].collect()[0]["amount"]
+    assert json.loads(r["dd_map"]) == {
+        d["skill"]: [d["hit"], d["dodged"], d["missed"], d["total_damage"]]
+        for d in batch.damage_done_skills.collect()}
+    want_dr = {}
+    for d in batch.damage_received_skills.collect():
+        want_dr.setdefault(d["attacker"], {})[d["skill"]] = [
+            d["hit"], d["dodged"], d["shielded"], d["missed"],
+            d["resisted"], d["total_damage"], d["dmg_type"]]
+    assert json.loads(r["dr_map"]) == want_dr
+    assert json.loads(r["heal_map"]) == {
+        (h["healer"] if h["healer"] is not None else "null"): h["heal"]
+        for h in batch.heal.collect()}
+
+
+def test_streaming_threat_is_exact_past_2_53(spark, tmp_path):
+    """Threat 2^53+1 has no float64 form: the typed longs must reach the
+    fold as exact ints, as the batch long sum reads them."""
+    p = "Ex'act"
+    boss = dg.actor_npc("Training Dummy", 999000111, 1)
+    log = ("combat_2012-09-01_10_00_00_exact.txt",
+           _one_fight(p, boss, ["(10) <9007199254740993>"]))
+    stream_rows, batch = _stream_and_batch(spark, tmp_path, log)
+    assert len(stream_rows) == 1
+    bt = batch.threat.collect()
+    assert stream_rows[0]["threat"] == bt[0]["threat"] == 9007199254740993
+
+
+class _FakeState:
+    """The slice of GroupState the state function uses."""
+
+    def __init__(self, blob=None):
+        self.blob = blob
+
+    @property
+    def exists(self):
+        return self.blob is not None
+
+    @property
+    def get(self):
+        return (self.blob,)
+
+    def update(self, value):
+        self.blob = value[0]
+
+
+def _typed_frame(lines):
+    """A parse_lines-shaped chunk, built by hand: each line is a dict of
+    the fields it sets; every other string is "" and every flag False."""
+    import pandas as pd
+
+    from team_goldo_combat_log_parser_spark.streaming import (
+        stream_pipeline as sp)
+
+    strings = ("src_raw", "tgt_raw", "src_player", "src_name", "tgt_name",
+               "skill", "dmg_type")
+    rows = []
+    for i, fields in enumerate(lines):
+        row = dict.fromkeys(sp._FOLD_COLS, False)
+        row.update(dict.fromkeys(strings, ""), amount=0, absorbed=0,
+                   threat=0, amount_ok=False, absorbed_ok=False,
+                   threat_ok=False, log_id="L", line_no=i,
+                   log_date="2012-09-01", time_str=f"10:00:{i:02d}.000")
+        row.update(fields)
+        rows.append(row)
+    return pd.DataFrame(rows)
+
+
+def test_state_fn_reorder_modes_agree_and_reject_old_buffer():
+    """Spark-free: one state-function body for both reorder values.
+    A shuffled complete chunk gives the same pulls either way, and a
+    checkpointed buffer row in the pre-typed 8-field raw layout raises a
+    ValueError naming the log instead of feeding garbage to the fold."""
+    import pytest as _pytest
+
+    from team_goldo_combat_log_parser_spark.streaming.stream_pipeline import (
+        _make_state_fn)
+
+    pl, boss = "@Fa'ke", "Dummy {1}:1"
+    enter = dict(is_enter=True, src_raw=pl, tgt_raw=pl, src_player="Fa'ke")
+    hit = dict(is_damage=True, src_raw=pl, tgt_raw=boss, tgt_name="Dummy ",
+               skill="Storm ", amount_ok=True, has_threat=True,
+               threat_ok=True, dmg_type="kinetic")
+    hurt = dict(is_damage=True, src_raw=boss, tgt_raw=pl, src_name="Dummy ",
+                skill="Slap ", amount=7, amount_ok=True, dmg_type="energy")
+    leave = dict(is_leave=True, src_raw=pl, tgt_raw=pl)
+    lines = [enter, {**hit, "amount": 9007199254740993, "threat": 3}, hurt,
+             {**hit, "amount": 5, "threat": -1}, leave,
+             enter, {**hit, "amount": 0, "m_dodge_single": True}, leave]
+    pdf = _typed_frame(lines).sample(frac=1.0, random_state=3)
+
+    def run(reorder, blob=None):
+        st = _FakeState(blob)
+        out = list(_make_state_fn(reorder, 100)(("L",), iter([pdf.copy()]),
+                                                st))
+        return [r for o in out for r in o.to_dict("records")]
+
+    ordered, buffered = run(False), run(True)
+    assert ordered == buffered
+    assert [(r["fight_seq"], r["total_damage"], r["threat"], r["dmg_rcvd"])
+            for r in ordered] == [(1, 9007199254740998, 2, 7), (2, 0, 0, 0)]
+    old_row = [3, "2012-09-01", "[10:00:03.000", pl, boss, "Storm {1}",
+               "ApplyEffect {836045448945501}", "(5)"]
+    blob = json.dumps({"in_combat": False, "player": None, "healer": None,
+                       "seq": 0, "start": None, "target": None, "dmg": 0,
+                       "heal": 0, "threat": 0, "_buf": [old_row], "_next": 0})
+    with _pytest.raises(ValueError, match="L .*fresh checkpoint"):
+        run(True, blob)
+
+
 def test_gc_orphan_commits(spark, tmp_path):
     """A crashed run's commit dir whose source set (and so commit id)
     differs from the replay's must be GC'd at startup — the manifest is

@@ -87,3 +87,18 @@ def test_streaming_detok_roundtrip(spark, tmp_path):
     rows = spark.sql("SELECT * FROM detok_roundtrip").collect()
     assert len(rows) == sum(len(lines) for _, lines in logs)
     assert all(r["same"] for r in rows)
+
+
+def test_detok_offsets_overflow_raises():
+    """Offsets past int32 would wrap into corrupt strings; a synthetic
+    offsets array pins the guard without a 2 GiB batch."""
+    import numpy as np
+
+    from team_goldo_combat_log_parser_spark.functions.grammar import (
+        _int32_offsets)
+
+    top = np.iinfo(np.int32).max
+    ok = _int32_offsets(np.array([0, 5, top], dtype=np.int64))
+    assert ok.dtype == np.int32 and ok[-1] == top
+    with pytest.raises(ValueError, match="overflows int32"):
+        _int32_offsets(np.array([0, 5, top + 1], dtype=np.int64))
