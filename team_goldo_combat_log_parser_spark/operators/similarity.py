@@ -2,7 +2,7 @@
 array<float>, label).
 
 Brute-force cosine top-k is the exactness baseline (DuckDB-oracled, with
-DECIMAL dot products so both engines sum exactly and hash identically);
+DECIMAL dot products so both engines agree on the e6 output grid);
 the LSH-bucketed variant is the scale path: random-hyperplane signatures
 turn the all-pairs search into an equi-join on (band, signature), the
 same banding trick as MinHash-LSH for text.
@@ -31,53 +31,74 @@ def _norm_decimal(col: str):
                        lambda a, x: (a + x).cast("decimal(38,18)"))
 
 
-def emb_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Brute-force cosine top-k for the first N_QUERIES vectors.
-
-    Round 9 (guide par.1.2 per-task work): the exact DECIMAL dot —
-    boxed BigDecimal arithmetic, ~10x per element vs a codegen'd double
-    fold — is now paid only by pairs that can actually reach the top-K.
-    A double-precision fold ranks all pairs first; every pair whose fast
-    cosine is within 1e-6 of its query's K-th fast cosine survives to
-    the exact pass. |fast - exact| is bounded by the decimal(18,9)
-    per-element rounding plus double summation error (~1e-8 total, six
-    orders under the margin), and the K-th order statistic of two lists
-    that differ elementwise by at most d itself differs by at most d —
-    so every true top-K pair clears the margin filter and the final
-    DECIMAL ranking (ties by vec_id) is identical to ranking all pairs.
-    Value parity is held by the unchanged DuckDB oracle."""
-    e = load(spark, sf_dir, "embeddings").withColumn(
-        "norm2", _norm_decimal("embedding"))
-    q = (e.filter(F.col("vec_id") < N_QUERIES)
-         .select(F.col("vec_id").alias("qid"), F.col("embedding").alias("qv"),
-                 F.col("norm2").alias("qnorm2")))
-    pairs = (q.crossJoin(F.broadcast(e).drop("label"))
-             .filter(F.col("qid") != F.col("vec_id")))
-    denom = (F.sqrt(F.col("qnorm2").cast("double"))
-             * F.sqrt(F.col("norm2").cast("double")))
-    fast = F.aggregate(
-        F.zip_with("qv", "embedding",
-                   lambda a, b: a.cast("double") * b.cast("double")),
-        F.lit(0.0), lambda acc, x: acc + x) / denom
-    w_fast = Window.partitionBy("qid").orderBy(F.desc("fast"), "vec_id")
-    kth = F.min(F.when(F.col("rf") <= TOP_K, F.col("fast"))).over(
-        Window.partitionBy("qid"))
-    surv = (pairs.withColumn("fast", fast)
-            .withColumn("rf", F.row_number().over(w_fast))
-            .withColumn("kth", kth)
-            .filter(F.col("fast")
-                    >= F.coalesce(F.col("kth"), F.lit(float("-inf")))
-                    - F.lit(1e-6)))
+def _dot_decimal(a: str, b: str):
+    """Decimal dot product: each element cast to decimal(18,9), products
+    exact in decimal(37,18), summed into a decimal(38,18) fold (Spark
+    rounds each partial sum to 17 decimals, see ``_cosine_slack``)."""
     prod = F.zip_with(
-        "qv", "embedding",
-        lambda a, b: a.cast("decimal(18,9)") * b.cast("decimal(18,9)"))
-    dot = F.aggregate(
-        prod, F.lit(0).cast("decimal(38,18)"),
-        lambda acc, x: (acc + x).cast("decimal(38,18)"))
-    scored = surv.withColumn("cosine", dot.cast("double") / denom)
+        a, b, lambda x, y: x.cast("decimal(18,9)") * y.cast("decimal(18,9)"))
+    return F.aggregate(prod, F.lit(0).cast("decimal(38,18)"),
+                       lambda acc, x: (acc + x).cast("decimal(38,18)"))
+
+
+def _dot_double(a: str, b: str):
+    """Double-precision left-fold dot product (codegen'd, no boxing)."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
+        F.lit(0.0), lambda acc, x: acc + x)
+
+
+def _norm_double(col: str):
+    return F.sqrt(F.aggregate(
+        F.transform(col, lambda x: x.cast("double") * x.cast("double")),
+        F.lit(0.0), lambda a, x: a + x))
+
+
+def _l1_double(col: str):
+    return F.aggregate(F.transform(col, lambda x: F.abs(x.cast("double"))),
+                       F.lit(0.0), lambda a, x: a + x)
+
+
+def _cosine_slack(l1a: str, l1b: str, denom, dim):
+    """Per-pair bound on |fast - exact| for the two-phase cosine scorers
+    (emb_cosine_topk, emb_cosine_near_dup). Both cosines divide by the
+    same ``denom`` (the product of the decimal norms), so only the
+    numerators differ. For float vectors q, e of dimension d, with
+    u = 2^-53 and x' = x cast to decimal(18,9) (HALF_UP, so
+    |x' - x| <= 5e-10 + u|x|), to first order:
+
+      - products q'e' differ from qe by at most
+        5e-10 (|q| + |e|) + 2.5e-19 + 2u|qe| each;
+      - the decimal fold (``_dot_decimal``) adds a decimal(37,18)
+        product to a decimal(38,18) sum; the result type would need 39
+        digits, so Spark rounds each partial sum to 17 decimals
+        (HALF_UP, at most 5e-18 per element);
+      - the double fold: float products are exact in double, and any
+        summation order errs by at most (d - 1) u sum|qe|;
+      - the decimal sum's cast to double and the two divisions add
+        u|dot| + 2u|cos| denom;
+      - sum|qe| and |dot| are at most |q|_2 |e|_2 ~ denom
+        (Cauchy-Schwarz).
+
+    So |fast - exact| <= (5e-10 (|q|_1 + |e|_1) + 5.25e-18 d) / denom
+    + 1.2e-16 (d + 4). The slack is twice that, which covers the
+    second-order terms (products of two rounding errors, the slack's
+    own double evaluation, the gap between |q|_2 |e|_2 and denom),
+    each at most ~d^1.5 u of the bound. The first
+    term dominates for small-magnitude vectors: at unit scale the slack
+    is ~1e-8, at elements near 1e-8 it is ~0.1, so no fixed margin is
+    safe. ``l1a``/``l1b`` name the per-vector double L1 norm columns
+    (``_l1_double``), taken next to ``norm2``."""
+    return 2 * ((5e-10 * (F.col(l1a) + F.col(l1b)) + dim * 5.25e-18)
+                / denom + (dim + 4) * 1.2e-16)
+
+
+def _top_k(scored: DataFrame) -> DataFrame:
+    """Per-query top-K by ``cosine`` (ties to the smaller vec_id), the
+    output shape every cosine query shares. floor(x*1e6) instead of
+    round(): round() tie-breaking on doubles differs between engines;
+    floor of identical doubles is identical."""
     w = Window.partitionBy("qid").orderBy(F.desc("cosine"), "vec_id")
-    # floor(x*1e6) instead of round(): round() tie-breaking on doubles
-    # differs between engines; floor of identical doubles is identical.
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= TOP_K)
@@ -85,6 +106,59 @@ def emb_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.floor(F.col("cosine") * 1e6).alias("cosine_e6"))
         .orderBy("qid", "rank")
     )
+
+
+def _rerank_double(cand: DataFrame) -> DataFrame:
+    """ANN re-rank: double left-fold cosine over (qid, qv, vec_id,
+    embedding) candidates, then the per-query top-K."""
+    return _top_k(cand.withColumn(
+        "cosine", _dot_double("qv", "embedding")
+        / (_norm_double("qv") * _norm_double("embedding"))))
+
+
+def emb_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Brute-force cosine top-k for the first N_QUERIES vectors.
+
+    Two-phase scoring: the exact DECIMAL dot — boxed BigDecimal
+    arithmetic, ~10x per element vs a codegen'd double fold — is paid
+    only by pairs that can reach the top-K. A double-precision fold
+    ranks all pairs first. Each pair's fast cosine is within its slack
+    ``s`` of the exact one (``_cosine_slack`` derives ``s`` from the
+    two vectors' L1 norms and dimension). The K pairs with the largest
+    fast cosines then have exact cosines >= kth - max(s), where kth is
+    the query's K-th fast cosine and the max is over the query's pairs,
+    so the exact K-th value is >= kth - max(s) too. A pair whose exact
+    cosine reaches that value has fast >= kth - max(s) - s. The plan
+    keeps exactly those pairs, so every true top-K pair (and every pair
+    tied with the K-th) reaches the exact pass and the final DECIMAL
+    ranking (ties by vec_id) is identical to ranking all pairs. max(s)
+    is taken over the same qid window as kth: no extra exchange.
+    Value parity is held by the unchanged DuckDB oracle."""
+    e = (load(spark, sf_dir, "embeddings")
+         .withColumn("norm2", _norm_decimal("embedding"))
+         .withColumn("l1", _l1_double("embedding")))
+    q = (e.filter(F.col("vec_id") < N_QUERIES)
+         .select(F.col("vec_id").alias("qid"), F.col("embedding").alias("qv"),
+                 F.col("norm2").alias("qnorm2"), F.col("l1").alias("ql1")))
+    pairs = (q.crossJoin(F.broadcast(e).drop("label"))
+             .filter(F.col("qid") != F.col("vec_id")))
+    denom = (F.sqrt(F.col("qnorm2").cast("double"))
+             * F.sqrt(F.col("norm2").cast("double")))
+    fast = _dot_double("qv", "embedding") / denom
+    slack = _cosine_slack("ql1", "l1", denom, F.size("qv"))
+    w_fast = Window.partitionBy("qid").orderBy(F.desc("fast"), "vec_id")
+    w_q = Window.partitionBy("qid")
+    kth = F.min(F.when(F.col("rf") <= TOP_K, F.col("fast"))).over(w_q)
+    surv = (pairs.withColumn("fast", fast)
+            .withColumn("slack", slack)
+            .withColumn("rf", F.row_number().over(w_fast))
+            .withColumn("kth", kth)
+            .withColumn("max_slack", F.max("slack").over(w_q))
+            .filter(F.col("fast")
+                    >= F.coalesce(F.col("kth"), F.lit(float("-inf")))
+                    - F.col("max_slack") - F.col("slack")))
+    return _top_k(surv.withColumn(
+        "cosine", _dot_decimal("qv", "embedding").cast("double") / denom))
 
 
 def emb_knn_label_vote(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -232,23 +306,7 @@ def emb_lsh_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Approximate NN via random-hyperplane LSH (see ``lsh_candidates``);
     exact cosine re-ranks candidates only. At 10^9+ vectors the banding
     join replaces the cross join; everything else is unchanged."""
-    cand = lsh_candidates(spark, sf_dir)
-    dot = F.aggregate(
-        F.zip_with("qv", "embedding", lambda a, b: a.cast("double") * b.cast("double")),
-        F.lit(0.0), lambda acc, x: acc + x)
-    qn = F.sqrt(F.aggregate(F.transform("qv", lambda x: x.cast("double") * x.cast("double")),
-                            F.lit(0.0), lambda a, x: a + x))
-    en = F.sqrt(F.aggregate(F.transform("embedding", lambda x: x.cast("double") * x.cast("double")),
-                            F.lit(0.0), lambda a, x: a + x))
-    scored = cand.withColumn("cosine", dot / (qn * en))
-    w = Window.partitionBy("qid").orderBy(F.desc("cosine"), "vec_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("qid", "rank", F.col("vec_id").alias("neighbor_id"),
-                F.floor(F.col("cosine") * 1e6).alias("cosine_e6"))
-        .orderBy("qid", "rank")
-    )
+    return _rerank_double(lsh_candidates(spark, sf_dir))
 
 
 # ------------------------------------------------------ IVF ANN (scale path 2)
@@ -340,22 +398,33 @@ def _ivf_seed_ids(ids: list[int], k: int) -> list[int]:
     return out
 
 
+def _centroid_cosine(cents: np.ndarray):
+    """Returns batch -> (n, K) cosine matrix of an Arrow batch of
+    embeddings against the (sum-vector) centroids: one numpy matmul.
+    A zero norm counts as 1, so a zero vector scores 0 everywhere."""
+    norms = np.linalg.norm(cents, axis=1)
+    norms[norms == 0] = 1.0
+
+    def cosine(emb: pd.Series) -> np.ndarray:
+        m = np.stack([np.asarray(v, dtype=np.float64) for v in emb])
+        mn = np.linalg.norm(m, axis=1)
+        mn[mn == 0] = 1.0
+        return (m @ cents.T) / np.outer(mn, norms)
+
+    return cosine
+
+
 def _ivf_assign_udf(cents: np.ndarray):
     """Pandas UDF assigning each vector to its nearest cell by cosine
     against the (sum-vector) centroids — one numpy matmul per Arrow
     batch. Ties break to the lowest cell id (argmax first-wins)."""
-    norms = np.linalg.norm(cents, axis=1)
-    norms[norms == 0] = 1.0
+    cosine = _centroid_cosine(cents)
 
     @F.pandas_udf(T.IntegerType())
     def assign(emb: pd.Series) -> pd.Series:
         if len(emb) == 0:
             return pd.Series([], dtype="int32")
-        m = np.stack([np.asarray(v, dtype=np.float64) for v in emb])
-        mn = np.linalg.norm(m, axis=1)
-        mn[mn == 0] = 1.0
-        cos = (m @ cents.T) / np.outer(mn, norms)
-        return pd.Series(np.argmax(cos, axis=1).astype("int32"))
+        return pd.Series(np.argmax(cosine(emb), axis=1).astype("int32"))
 
     # deterministic in value; the mark stops the optimizer duplicating
     # the matmul below its own pushed-down filters (guide par.4.4 — the
@@ -558,20 +627,16 @@ def emb_ivf_ann(spark: SparkSession, sf_dir: str,
     data = e.withColumn("cell", _ivf_assign_udf(cents)("embedding")).select(
         F.col("vec_id"), F.col("embedding"), "cell")
 
-    norms = np.linalg.norm(cents, axis=1)
-    norms[norms == 0] = 1.0
+    cosine = _centroid_cosine(cents)
 
     @F.pandas_udf(T.ArrayType(T.IntegerType()))
     def probe_cells(emb: pd.Series) -> pd.Series:
         if len(emb) == 0:
             return pd.Series([], dtype=object)
-        m = np.stack([np.asarray(v, dtype=np.float64) for v in emb])
-        mn = np.linalg.norm(m, axis=1)
-        mn[mn == 0] = 1.0
-        cos = (m @ cents.T) / np.outer(mn, norms)
+        cos = cosine(emb)
         # nprobe best cells, ties to lower id: sort by (-cos, cell)
         order = np.lexsort((np.arange(cos.shape[1])[None, :]
-                            .repeat(len(m), 0), -cos), axis=1)
+                            .repeat(len(emb), 0), -cos), axis=1)
         return pd.Series(list(order[:, :nprobe].astype("int32")))
 
     # non-deterministic mark: same duplication fix as _ivf_assign_udf
@@ -593,29 +658,10 @@ def emb_ivf_ann(spark: SparkSession, sf_dir: str,
     # side is O(n_queries x nprobe) rows — broadcast it so the corpus
     # side is never shuffled (BuildLeft instead of broadcasting the
     # whole assigned corpus, which is the side that GROWS).
-    cand = (F.broadcast(q).join(data, "cell")
-            .filter(F.col("qid") != F.col("vec_id"))
-            .select("qid", "qv", "vec_id", "embedding"))
-    dot = F.aggregate(
-        F.zip_with("qv", "embedding",
-                   lambda a, b: a.cast("double") * b.cast("double")),
-        F.lit(0.0), lambda acc, x: acc + x)
-    qn = F.sqrt(F.aggregate(
-        F.transform("qv", lambda x: x.cast("double") * x.cast("double")),
-        F.lit(0.0), lambda a, x: a + x))
-    en = F.sqrt(F.aggregate(
-        F.transform("embedding",
-                    lambda x: x.cast("double") * x.cast("double")),
-        F.lit(0.0), lambda a, x: a + x))
-    scored = cand.withColumn("cosine", dot / (qn * en))
-    w = Window.partitionBy("qid").orderBy(F.desc("cosine"), "vec_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("qid", "rank", F.col("vec_id").alias("neighbor_id"),
-                F.floor(F.col("cosine") * 1e6).alias("cosine_e6"))
-        .orderBy("qid", "rank")
-    )
+    return _rerank_double(
+        F.broadcast(q).join(data, "cell")
+        .filter(F.col("qid") != F.col("vec_id"))
+        .select("qid", "qv", "vec_id", "embedding"))
 
 
 NEAR_DUP_THRESHOLD = 0.35
@@ -624,10 +670,9 @@ NEAR_DUP_THRESHOLD = 0.35
 @F.pandas_udf(T.DoubleType())
 def _dot_f64_udf(xs: pd.Series, ys: pd.Series) -> pd.Series:
     """Double-precision dot product per row — one numpy einsum per Arrow
-    batch. Used ONLY as a prefilter signal behind a 1e-6 margin: numpy's
-    summation order differs from a left fold by ~1e-13 relative, six
-    orders below the margin, so prefilter decisions are unaffected (the
-    exact DECIMAL dot still decides every borderline pair)."""
+    batch. Used ONLY as a prefilter signal behind ``_cosine_slack``,
+    whose bound holds for any summation order (the exact DECIMAL dot
+    still decides every borderline pair)."""
     if len(xs) == 0:
         return pd.Series([], dtype="float64")
     a = np.stack([np.asarray(v, dtype=np.float64) for v in xs])
@@ -661,14 +706,15 @@ def emb_cosine_near_dup(spark: SparkSession, sf_dir: str,
     practice."""
     e = load(spark, sf_dir, "embeddings")
     # ONE checkpointed base relation (vec_id, embedding, band keys,
-    # decimal norm2) feeds all four consumers — both banding self-join
-    # sides and both attach sides. One corpus pass materializes the
-    # signature UDF and the per-element decimal norm fold ONCE (round 9;
-    # previously: the UDF ran twice per side — four times — and the norm
-    # fold twice; same localCheckpoint-not-cache rationale as
+    # decimal norm2, double L1 norm) feeds all four consumers — both
+    # banding self-join sides and both attach sides. One corpus pass
+    # materializes the signature UDF and the per-element norm folds ONCE
+    # (round 9; previously: the UDF ran twice per side — four times — and
+    # the norm fold twice; same localCheckpoint-not-cache rationale as
     # doc_minhash_lsh_pairs).
     base = (e.withColumn("bkeys", _band_keys_udf("embedding"))
             .withColumn("norm2", _norm_decimal("embedding"))
+            .withColumn("l1", _l1_double("embedding"))
             .localCheckpoint(eager=True))
     banded = base.select(
         "vec_id", F.posexplode("bkeys").alias("band", "bkey"))
@@ -681,34 +727,29 @@ def emb_cosine_near_dup(spark: SparkSession, sf_dir: str,
         .select(F.col("x.vec_id").alias("a"), F.col("y.vec_id").alias("b"))
         .distinct()
     )
-    n = base
-    ea = n.select(F.col("vec_id").alias("a"), F.col("embedding").alias("av"),
-                  F.col("norm2").alias("an2"))
-    eb = n.select(F.col("vec_id").alias("b"), F.col("embedding").alias("bv"),
-                  F.col("norm2").alias("bn2"))
+    ea = base.select(F.col("vec_id").alias("a"),
+                     F.col("embedding").alias("av"),
+                     F.col("norm2").alias("an2"), F.col("l1").alias("al1"))
+    eb = base.select(F.col("vec_id").alias("b"),
+                     F.col("embedding").alias("bv"),
+                     F.col("norm2").alias("bn2"), F.col("l1").alias("bl1"))
     # two-phase scoring: a cheap double-precision prefilter (round 9:
     # one numpy einsum per Arrow batch — the interpreted per-element
     # JVM fold it replaces was ~1s of this query at sf0.1) cuts the
     # ~100x-larger candidate set down to near-threshold pairs, and only
     # those pay the exact DECIMAL dot (boxed BigDecimal arithmetic,
-    # ~10x slower per element). The 1e-6 margin dwarfs both
-    # double-vs-decimal rounding and numpy-vs-fold summation order
-    # (~1e-13 relative), so the final decimal-based threshold decides
-    # every borderline pair — the prefilter can only drop pairs
-    # decisively below it.
-    dot_fast = _dot_f64_udf("av", "bv")
-    dot = F.aggregate(
-        F.zip_with("av", "bv",
-                   lambda x, y: x.cast("decimal(18,9)")
-                   * y.cast("decimal(18,9)")),
-        F.lit(0).cast("decimal(38,18)"),
-        lambda acc, x: (acc + x).cast("decimal(38,18)"))
+    # ~10x slower per element). A pair with exact cosine >= threshold
+    # has fast cosine >= threshold - slack (_cosine_slack), so the
+    # final decimal-based threshold decides every borderline pair — the
+    # prefilter can only drop pairs provably below it.
     denom = (F.sqrt(F.col("an2").cast("double"))
              * F.sqrt(F.col("bn2").cast("double")))
+    slack = _cosine_slack("al1", "bl1", denom, F.size("av"))
     scored = (
         pairs.join(ea, "a").join(eb, "b")
-        .filter(dot_fast / denom >= threshold - 1e-6)
-        .withColumn("cosine", dot.cast("double") / denom)
+        .filter(_dot_f64_udf("av", "bv") / denom >= threshold - slack)
+        .withColumn("cosine",
+                    _dot_decimal("av", "bv").cast("double") / denom)
         .filter(F.col("cosine") >= threshold)
     )
     return (scored.select("a", "b",
@@ -718,24 +759,22 @@ def emb_cosine_near_dup(spark: SparkSession, sf_dir: str,
 
 def emb_dup_clusters(spark: SparkSession, sf_dir: str,
                      threshold: float = NEAR_DUP_THRESHOLD,
-                     max_iters: int = 20,
-                     cc_shortcut: bool = False) -> DataFrame:
+                     max_iters: int = 20) -> DataFrame:
     """Embedding near-dup cluster resolution: connected components over
     the emb_cosine_near_dup pair graph — the vector-space mirror of
     doc_dup_clusters, closing the dedup lifecycle (pairs -> clusters ->
     keep-representative) for semantic duplicates the text sketches miss.
 
     Reuses the min-label-propagation fixpoint from the text operators
-    (see doc_dup_clusters for the sweep-cost and star-contraction scale
-    story); the pair plan stays the banding equi-join, and
-    localCheckpoint inside the loop cuts it off the per-sweep lineage.
+    (see doc_dup_clusters for the sweep-cost story); the pair plan stays
+    the banding equi-join, and localCheckpoint inside the loop cuts it
+    off the per-sweep lineage.
     The DuckDB oracle resolves the same fixpoint as a recursive CTE over
     the tabulated-banding pair oracle (golden/sketch_oracle.py)."""
     from .text import _connected_components
 
     pairs = emb_cosine_near_dup(spark, sf_dir, threshold).select("a", "b")
-    labels = _connected_components(pairs, max_iters=max_iters,
-                                   shortcut=cc_shortcut)
+    labels = _connected_components(pairs, max_iters=max_iters)
     sizes = labels.groupBy("lab").agg(F.count(F.lit(1)).alias("cluster_size"))
     return (labels.join(sizes, "lab")
             .select(F.col("node").alias("vec_id"),

@@ -485,8 +485,7 @@ def doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def doc_dup_clusters(spark: SparkSession, sf_dir: str,
-                     max_iters: int = 20,
-                     cc_shortcut: bool = False) -> DataFrame:
+                     max_iters: int = 20) -> DataFrame:
     """Near-dup cluster resolution: connected components over the
     doc_ngram_jaccard_pairs graph — every doc that appears in a near-dup
     pair, labeled with the smallest doc_id reachable from it (the cluster
@@ -499,11 +498,7 @@ def doc_dup_clusters(spark: SparkSession, sf_dir: str,
     edge list against the current labels and keeps the elementwise min.
     One hash shuffle per sweep; lineage is truncated with localCheckpoint
     so the plan does not grow with iterations; sweeps needed = component
-    diameter, and near-dup components are clique-like (diameter 2-3). A
-    10^12-doc deployment with long-chain components passes
-    ``cc_shortcut=True`` — the pointer-jumping sweep body
-    (_connected_components(shortcut=True), O(log diameter) rounds,
-    round-8: the prose swap is now code, parity-pinned by pytest).
+    diameter, and near-dup components are clique-like (diameter 2-3).
     Convergence is detected from sum(label): labels only ever decrease,
     so an unchanged sum is the fixpoint (one cheap agg per sweep, no
     extra self-join).
@@ -512,8 +507,7 @@ def doc_dup_clusters(spark: SparkSession, sf_dir: str,
     this is a full rows+schema+hash correctness entry despite the
     iterative implementation."""
     pairs = doc_ngram_jaccard_pairs(spark, sf_dir).select("a", "b")
-    labels = _connected_components(pairs, max_iters=max_iters,
-                                   shortcut=cc_shortcut)
+    labels = _connected_components(pairs, max_iters=max_iters)
     sizes = labels.groupBy("lab").agg(F.count(F.lit(1)).alias("cluster_size"))
     return (labels.join(sizes, "lab")
             .select(F.col("node").alias("doc_id"),
@@ -521,37 +515,21 @@ def doc_dup_clusters(spark: SparkSession, sf_dir: str,
             .orderBy("doc_id"))
 
 
-def _connected_components(pairs: DataFrame, max_iters: int = 20,
-                          shortcut: bool = False) -> DataFrame:
+def _connected_components(pairs: DataFrame, max_iters: int = 20) -> DataFrame:
     """Min-label propagation to fixpoint over an undirected pair list
     (columns ``a``, ``b``). Returns (node, lab) with lab = smallest node
     id in the component. See doc_dup_clusters for the scale story.
 
     Raises ``RuntimeError`` if the fixpoint is not reached within
     ``max_iters`` label-changing sweeps (i.e. component diameter >
-    max_iters in the default mode): partial labels would silently
+    max_iters): partial labels would silently
     merge-or-split clusters downstream, which is exactly the failure
     class this engine otherwise turns into loud errors (cf. the
     streaming reorder-buffer bound). The loop runs max_iters + 1
     iterations so the confirming sweep (sum unchanged) is NOT charged
     against the budget — a component whose propagation finishes exactly
     on sweep max_iters converges instead of raising (round-8 advice:
-    the old loop triggered one diameter early).
-
-    ``shortcut=True`` is the scale variant for long-diameter graphs
-    (VERDICT r7 next #2c — previously named in prose only): each sweep
-    additionally pointer-jumps through the label table (lab <-
-    min(lab, lab[lab], min over neighbors' labs)), the shortcutting
-    step of Shiloach-Vishkin / the star-contraction family (Kiveris et
-    al., "Connected Components in MapReduce and Beyond"). Labels then
-    travel 2^sweep hops, so convergence takes O(log diameter) sweeps —
-    a 10^6-link chain resolves in ~21 — at the cost of one extra
-    equi-join per sweep. Identical fixpoint (min node id reaches every
-    member either way; a label value is always a node id inside the
-    same component, so jumping can only tighten toward the same min);
-    parity vs the default is pytest-pinned on path/vee/clique graphs.
-    Near-dup components are clique-like (diameter 2-3), so the default
-    keeps the cheaper sweep body."""
+    the old loop triggered one diameter early)."""
     edges = pairs.union(
         pairs.select(F.col("b").alias("a"), F.col("a").alias("b")))
     # cut the (possibly expensive) pair plan off the loop: edges is
@@ -569,17 +547,6 @@ def _connected_components(pairs: DataFrame, max_iters: int = 20,
                    .select("node",
                            F.least("lab", F.coalesce("nbr_lab", "lab"))
                            .alias("lab")))
-        if shortcut:
-            # pointer jump: lab <- lab[lab]. Every lab value is itself a
-            # node in the label table (labels start as node ids and only
-            # ever take mins of other labels), so the inner join is total
-            # — left + coalesce kept for safety against future callers.
-            jump = stepped.select(F.col("node").alias("jnode"),
-                                  F.col("lab").alias("jlab"))
-            stepped = (stepped.join(jump, stepped.lab == jump.jnode, "left")
-                       .select("node",
-                               F.least("lab", F.coalesce("jlab", "lab"))
-                               .alias("lab")))
         labels = stepped.localCheckpoint(eager=True)
         cur = labels.agg(F.sum("lab")).collect()[0][0]
         if cur == prev_sum:
@@ -590,56 +557,13 @@ def _connected_components(pairs: DataFrame, max_iters: int = 20,
         raise RuntimeError(
             f"connected-components did not converge in {max_iters} sweeps "
             "(labels still changing: component diameter exceeds the sweep "
-            "budget); raise max_iters or pass shortcut=True (pointer-"
-            "jumping, O(log diameter) sweeps) — returning partial labels "
-            "would silently mis-cluster")
+            "budget); raise max_iters — returning partial labels would "
+            "silently mis-cluster")
     return labels
 
 
-def _hierarchical_cum(df: DataFrame, part_col: str, order_col: str,
-                      val_col: str, out_col: str,
-                      shard_docs: int) -> DataFrame:
-    """EXACT running sum of ``val_col`` over ``order_col`` within
-    ``part_col``, computed hierarchically — the 100x swap for the
-    per-source running-sum windows (VERDICT r7 next #2b, previously
-    named in prose in doc_clean_corpus/doc_pack_sequences):
-
-      1. shard = order_col div shard_docs — contiguous in the sort
-         order, so shards within a partition are totally ordered;
-      2. local running sums per (part, shard) window — parallelism is
-         sources x shards instead of sources;
-      3. per-shard totals (a dimension-sized table: sources x shards
-         rows), exclusive-prefix-summed per partition on that TINY
-         table, broadcast back, and added as the shard offset.
-
-    Integer arithmetic throughout, so the result is bit-identical to
-    the single-window form (pytest-pinned); float val_cols would need
-    an order-fixed fold instead. This is the standard two-level
-    scan-prefix decomposition — the same trick a packing writer uses to
-    keep shard tasks independent."""
-    shard = F.expr(f"{order_col} div {shard_docs}").alias("_shard")
-    sharded = df.withColumn("_shard", shard)
-    w_local = (Window.partitionBy(part_col, "_shard").orderBy(order_col)
-               .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    totals = (sharded.groupBy(part_col, "_shard")
-              .agg(F.sum(val_col).alias("_shard_tot")))
-    w_off = (Window.partitionBy(part_col).orderBy("_shard")
-             .rowsBetween(Window.unboundedPreceding, -1))
-    offsets = (totals
-               .withColumn("_shard_off",
-                           F.coalesce(F.sum("_shard_tot").over(w_off),
-                                      F.lit(0)))
-               .select(part_col, "_shard", "_shard_off"))
-    return (sharded
-            .join(F.broadcast(offsets), [part_col, "_shard"])
-            .withColumn(out_col,
-                        F.sum(val_col).over(w_local) + F.col("_shard_off"))
-            .drop("_shard", "_shard_off"))
-
-
 def doc_clean_corpus(spark: SparkSession, sf_dir: str,
-                     token_budget_per_source: int = 400,
-                     shard_docs: int | None = None) -> DataFrame:
+                     token_budget_per_source: int = 400) -> DataFrame:
     """Composite corpus cleaning — the nightly training-data shape, four
     stages in one declarative plan:
 
@@ -657,12 +581,7 @@ def doc_clean_corpus(spark: SparkSession, sf_dir: str,
     keys — no skew); stages 2-3 are scan-local filters fused into the same
     stage; stage 4 is one window shuffle on ``source``. A running sum
     cannot be salted, so a pathological single-source corpus serializes
-    stage 4 — ``shard_docs=N`` switches stage 4 to the hierarchical
-    two-level prefix (_hierarchical_cum: per-(source, shard) local sums
-    + broadcast shard offsets; round 8 — the prose swap is now code),
-    which is EXACTLY equal in integer arithmetic (pytest-pinned) and
-    makes stage-4 parallelism sources x shards. The default plan is two
-    exchanges and zero Python UDFs."""
+    stage 4. The plan is two exchanges and zero Python UDFs."""
     d = load(spark, sf_dir, "documents")
     toks = F.size(F.split(F.trim(F.col("text")), r"\s+"))
     stops = F.size(F.regexp_extract_all(F.col("text"), F.lit(STOPWORDS_RE), 0))
@@ -686,17 +605,10 @@ def doc_clean_corpus(spark: SparkSession, sf_dir: str,
         & (F.col("stop_ratio") <= 0.3)
         & (F.col("guess") == F.col("lang"))
     )
-    if shard_docs is not None:
-        budgeted = _hierarchical_cum(kept, "source", "doc_id", "n_tokens",
-                                     "cum_tokens", shard_docs)
-    else:
-        w_budget = (Window.partitionBy("source").orderBy("doc_id")
-                    .rowsBetween(Window.unboundedPreceding,
-                                 Window.currentRow))
-        budgeted = kept.withColumn("cum_tokens",
-                                   F.sum("n_tokens").over(w_budget))
+    w_budget = (Window.partitionBy("source").orderBy("doc_id")
+                .rowsBetween(Window.unboundedPreceding, Window.currentRow))
     return (
-        budgeted
+        kept.withColumn("cum_tokens", F.sum("n_tokens").over(w_budget))
         .filter(F.col("cum_tokens") <= token_budget_per_source)
         .select("doc_id", "source", "lang", "n_tokens", "cum_tokens")
         .orderBy("doc_id")
@@ -925,9 +837,7 @@ def doc_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("doc_id")
 
 
-def doc_unigram_nll(spark: SparkSession, sf_dir: str,
-                    scale_variant: bool = False,
-                    tercile_rel_err: float = 0.001) -> DataFrame:
+def doc_unigram_nll(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CCNet-style LM quality scoring (Wenzek et al. 2020): train a
     unigram language model on the corpus itself (token -> count / total),
     score each document by average negative log-likelihood (the
@@ -951,26 +861,14 @@ def doc_unigram_nll(spark: SparkSession, sf_dir: str,
     hash agg on token (Zipf skew is harmless — partial agg collapses hot
     tokens per partition before the shuffle); scoring joins the vocab
     back broadcast here (the synthetic vocab is tiny). The exact global
-    tercile is a single-partition window. ``scale_variant=True`` (round
-    8 — the prose swaps are now code, parity-pinned by pytest) flips
-    both 100x hazards: the vocab join becomes a shuffled hash equi-join
-    on token (a 10^8+-row vocab cannot broadcast; the 1-row corpus
-    total still does), and the NTILE(3) becomes bucketing against
-    approxQuantile cut points (``tercile_rel_err`` — exact at 0.0; the
-    only divergence from NTILE is then rank-ties AT a cut value, since
-    NTILE splits tie groups by position to equalize counts while a
-    value cut keeps them together). The variant runs one driver action
-    (the quantile sketch) before returning. No Python UDFs either
-    way."""
+    tercile is a single-partition window. No Python UDFs."""
     d = load(spark, sf_dir, "documents")
     toks = d.select(
         "doc_id",
         F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("tok"))
     vocab = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("c"))
     total = vocab.agg(F.sum("c").alias("n_corpus"))
-    vjoin = (vocab.hint("shuffle_hash") if scale_variant
-             else F.broadcast(vocab))
-    scored = toks.join(vjoin, "tok").crossJoin(F.broadcast(total))
+    scored = toks.join(F.broadcast(vocab), "tok").crossJoin(F.broadcast(total))
     nll = F.log(F.col("n_corpus").cast("double") / F.col("c").cast("double"))
     per_doc = (
         scored.groupBy("doc_id")
@@ -980,28 +878,17 @@ def doc_unigram_nll(spark: SparkSession, sf_dir: str,
                      / F.count(F.lit(1)) * 1e4)
              .alias("avg_nll_e4"))
     )
-    if scale_variant:
-        c1, c2 = per_doc.approxQuantile(
-            "avg_nll_e4", [1.0 / 3.0, 2.0 / 3.0], tercile_rel_err)
-        bucketed = per_doc.withColumn(
-            "ppl_bucket",
-            F.when(F.col("avg_nll_e4") <= F.lit(c1), F.lit("head"))
-            .when(F.col("avg_nll_e4") <= F.lit(c2), F.lit("middle"))
-            .otherwise(F.lit("tail")))
-    else:
-        w = Window.orderBy("avg_nll_e4", "doc_id")
-        bucket = F.ntile(3).over(w)
-        bucketed = per_doc.withColumn(
-            "ppl_bucket",
-            F.when(bucket == 1, F.lit("head"))
-            .when(bucket == 2, F.lit("middle"))
-            .otherwise(F.lit("tail")))
-    return bucketed.orderBy("doc_id")
+    bucket = F.ntile(3).over(Window.orderBy("avg_nll_e4", "doc_id"))
+    return (per_doc.withColumn(
+                "ppl_bucket",
+                F.when(bucket == 1, F.lit("head"))
+                .when(bucket == 2, F.lit("middle"))
+                .otherwise(F.lit("tail")))
+            .orderBy("doc_id"))
 
 
 def doc_pack_sequences(spark: SparkSession, sf_dir: str,
-                       seq_len: int = 256,
-                       shard_docs: int | None = None) -> DataFrame:
+                       seq_len: int = 256) -> DataFrame:
     """Sequence packing for pretraining: concatenate each source's
     documents in doc_id order and chunk the token stream into fixed
     ``seq_len`` training sequences (GPT-style concat-then-chunk packing).
@@ -1014,24 +901,14 @@ def doc_pack_sequences(spark: SparkSession, sf_dir: str,
     Scale notes: one window shuffle on ``source`` (the same running-sum
     shape and the same caveat as doc_clean_corpus's budget stage: a
     running sum cannot be salted, so packing parallelism = number of
-    sources). ``shard_docs=N`` switches to the hierarchical (source,
-    shard) two-level prefix (_hierarchical_cum; round 8 — the prose
-    swap is now code): per-shard local running sums + broadcast shard
-    offsets, bit-identical output (all-integer, pytest-pinned),
-    parallelism sources x shards — which is also what a real packer
-    does to keep writer tasks independent. No Python UDFs."""
+    sources). No Python UDFs."""
     d = load(spark, sf_dir, "documents")
     toks = F.size(F.split(F.trim(F.col("text")), r"\s+"))
     base = d.select("doc_id", "source", toks.alias("n_tokens"))
-    if shard_docs is not None:
-        cummed = _hierarchical_cum(base, "source", "doc_id", "n_tokens",
-                                   "_cum", shard_docs)
-    else:
-        w = (Window.partitionBy("source").orderBy("doc_id")
-             .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-        cummed = base.withColumn("_cum", F.sum("n_tokens").over(w))
+    w = (Window.partitionBy("source").orderBy("doc_id")
+         .rowsBetween(Window.unboundedPreceding, Window.currentRow))
     return (
-        cummed
+        base.withColumn("_cum", F.sum("n_tokens").over(w))
         .withColumn("start_off",
                     (F.col("_cum") - F.col("n_tokens")).cast("long"))
         .withColumn("first_seq",

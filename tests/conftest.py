@@ -1,6 +1,12 @@
+from pathlib import Path
+
 import pytest
 
 from team_goldo_combat_log_parser_spark.session import get_spark
+
+# the checkout these tests live in: subprocess launchers and the
+# --py-files zip must import and ship this tree, not another one
+REPO_ROOT = Path(__file__).resolve().parents[1]
 
 
 @pytest.fixture(scope="session")

@@ -3,13 +3,15 @@
 import json
 import sys
 
+from .conftest import REPO_ROOT
+
 
 def test_bw_at_reports_median_of_valid_readings(monkeypatch):
     """Round-6 advice: bw_at must not keep the MAX of its probe readings
     (upward bias on the attainable-speedup denominator) — it filters
     sub-10 GB/s transients, returns the median of the valid readings,
     and exposes the raw readings for the campaign JSON."""
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, str(REPO_ROOT))
     import bench_scaling as bs
 
     canned = iter([2.1, 30.0, 70.0])
@@ -29,7 +31,7 @@ def test_bw_at_reports_median_of_valid_readings(monkeypatch):
 
 
 def test_bw_at_all_transient_returns_best_transient(monkeypatch):
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, str(REPO_ROOT))
     import bench_scaling as bs
 
     canned = iter([0.1, 2.0, 1.5])
@@ -50,7 +52,7 @@ def test_bench_quiet_gate(monkeypatch):
     """bench.wait_for_quiet: proceeds gated the moment the canary clears
     0.85x the (CPUS-scaled) floor, polls while it doesn't, and falls
     through ungated at the deadline — recording the last reading."""
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, str(REPO_ROOT))
     import bench
 
     monkeypatch.setattr(bench, "CPUS", 32)
@@ -83,7 +85,7 @@ def test_bench_merge_attempts():
     attempts (a mid-run host collapse inflates only the attempt it hit),
     and the e2e bracket (run list, routed) follows the attempt owning
     the combat_e2e minimum."""
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, str(REPO_ROOT))
     import bench
 
     collapsed = {"queries": {"combat_e2e": 13.5, "doc_minhash_lsh_pairs": 12.0,

@@ -148,34 +148,14 @@ def test_clean_corpus_shuffle_budget(spark):
     assert not any("Python" in n for n in nodes), nodes
 
 
-def test_unigram_nll_scale_variant_plan(spark):
-    """The 100x variant (round 8) must actually change the physical
-    plan, not just the flag: vocab joined by a SHUFFLED hash join (a
-    10^8-row vocab cannot broadcast) and no single-partition NTILE
-    window anywhere — the terciles come from the approxQuantile sketch
-    run before the plan is built."""
+def test_unigram_nll_plan(spark):
+    """doc_unigram_nll joins the vocab by broadcast and buckets with a
+    single NTILE(3) window: no shuffled hash join on token, and the
+    terciles come from the window, not a driver-side quantile sketch."""
     from team_goldo_combat_log_parser_spark.operators import text
 
-    plan = plan_of(text.doc_unigram_nll(spark, SF, scale_variant=True))
-    assert "ShuffledHashJoin" in plan, plan
-    assert "ntile" not in plan, plan
-    default = plan_of(text.doc_unigram_nll(spark, SF))
-    assert "ntile" in default and "ShuffledHashJoin" not in default
-
-
-def test_hierarchical_cum_windows_are_sharded(spark):
-    """doc_pack_sequences(shard_docs=N): every window in the variant
-    plan partitions on (source, _shard) or runs on the dimension-sized
-    offset table — no window partitioned on bare source over the fact
-    stream survives (that serialization is what the variant removes)."""
-    from team_goldo_combat_log_parser_spark.operators import text
-
-    plan = plan_of(text.doc_pack_sequences(spark, SF, shard_docs=64))
-    win_parts = [ln for ln in plan.splitlines()
-                 if "windowspecdefinition(source" in ln.replace(" ", "")]
-    for ln in win_parts:
-        assert "_shard" in ln, ln
-    assert any("_shard" in ln for ln in plan.splitlines()), plan
+    plan = plan_of(text.doc_unigram_nll(spark, SF))
+    assert "ntile" in plan and "ShuffledHashJoin" not in plan, plan
 
 
 def test_results_page_plans_as_topk(spark):

@@ -17,6 +17,8 @@ from team_goldo_combat_log_parser_spark.plans.pipeline import run_pipeline
 from team_goldo_combat_log_parser_spark.streaming.stream_pipeline import (
     run_stream_once)
 
+from .conftest import REPO_ROOT
+
 
 def test_manifest_resume(spark, tmp_path):
     logs = dg.synth_corpus(dg.GenConfig(n_logs=3, fights_per_log=2,
@@ -46,7 +48,7 @@ def test_cli_end_to_end(tmp_path):
     """Drive the spark-submit entrypoint as a real subprocess, twice —
     the second invocation must be a no-op (resume from manifest)."""
     code = (
-        "import sys; sys.path.insert(0, '/root/repo'); "
+        f"import sys; sys.path.insert(0, {str(REPO_ROOT)!r}); "
         "from team_goldo_combat_log_parser_spark.session import get_spark; "
         "from team_goldo_combat_log_parser_spark.sources import datagen as dg; "
         "s = get_spark('cli-prep', cores=2); "
@@ -56,7 +58,7 @@ def test_cli_end_to_end(tmp_path):
     subprocess.run([sys.executable, "-c", code], check=True, timeout=300)
     env_args = ["--input", f"{tmp_path}/tokens", "--output", f"{tmp_path}/out",
                 "--checkpoint", f"{tmp_path}/ckpt"]
-    runner = ("import sys; sys.path.insert(0, '/root/repo'); "
+    runner = (f"import sys; sys.path.insert(0, {str(REPO_ROOT)!r}); "
               "from team_goldo_combat_log_parser_spark.session import get_spark; "
               "get_spark('cli', cores=2); "
               "from team_goldo_combat_log_parser_spark.runner.cli import main; "
@@ -794,7 +796,7 @@ def test_spark_submit_pyfiles_end_to_end(tmp_path):
         make_pyfiles_zip)
 
     code = (
-        "import sys; sys.path.insert(0, '/root/repo'); "
+        f"import sys; sys.path.insert(0, {str(REPO_ROOT)!r}); "
         "from team_goldo_combat_log_parser_spark.session import get_spark; "
         "from team_goldo_combat_log_parser_spark.sources import datagen as dg; "
         "s = get_spark('submit-prep', cores=2); "
@@ -803,13 +805,13 @@ def test_spark_submit_pyfiles_end_to_end(tmp_path):
     )
     subprocess.run([sys.executable, "-c", code], check=True, timeout=300)
 
-    zip_path = make_pyfiles_zip("/root/repo", str(tmp_path / "tglp.zip"))
+    zip_path = make_pyfiles_zip(str(REPO_ROOT), str(tmp_path / "tglp.zip"))
     # rebuild is byte-identical (checksummable artifact)
-    z2 = make_pyfiles_zip("/root/repo", str(tmp_path / "tglp2.zip"))
+    z2 = make_pyfiles_zip(str(REPO_ROOT), str(tmp_path / "tglp2.zip"))
     assert open(zip_path, "rb").read() == open(z2, "rb").read()
 
     job = str(tmp_path / "spark_job.py")
-    shutil.copy("/root/repo/spark_job.py", job)
+    shutil.copy(REPO_ROOT / "spark_job.py", job)
     env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
     r = subprocess.run(
         ["spark-submit", "--master", "local[2]",
@@ -896,7 +898,7 @@ def test_doc_stream_dedup_state_is_watermark_bounded(spark, tmp_path):
     100 rows (the wave being ingested + the previous wave not yet
     evicted at batch start — eviction uses the checkpointed watermark,
     which trails one batch), never the lifetime 150. SCALE.md records
-    the same shape at 10x via scripts/diag_doc_stream_state.py."""
+    the same shape at 10x (6 waves x 5,000 docs)."""
     from datetime import datetime
 
     from team_goldo_combat_log_parser_spark.streaming.doc_stream import (

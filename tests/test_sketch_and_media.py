@@ -7,6 +7,8 @@
   stubbed decode path.
 """
 
+import math
+
 import numpy as np
 import pytest
 
@@ -209,23 +211,14 @@ def test_sketch_queries_leave_no_sql_cache(spark, sf001):
         assert cm.isEmpty(), f"{fn.__name__} left a CacheManager entry"
 
 
-def test_cosine_near_dup_matches_bruteforce(spark, sf001):
-    """emb_cosine_near_dup == independent numpy re-derivation: candidate
-    pairs from the banding definition, exact cosines, threshold filter —
-    shared with the Spark path only through the hash-family definition
-    (_planes_matrix)."""
-    import duckdb as ddb
-    import numpy as np
+def _band_candidates(m):
+    """Row-index pairs (i < j) of ``m`` sharing at least one LSH band key,
+    derived from the hash-family definition (_planes_matrix) alone."""
     from collections import defaultdict
 
     from team_goldo_combat_log_parser_spark.operators.similarity import (
-        BAND_BITS, N_BANDS, NEAR_DUP_THRESHOLD, _planes_matrix,
-        emb_cosine_near_dup)
+        BAND_BITS, N_BANDS, _planes_matrix)
 
-    rows = ddb.sql(f"SELECT vec_id, embedding FROM "
-                   f"'{sf001}/embeddings.parquet' ORDER BY vec_id").fetchall()
-    ids = [r[0] for r in rows]
-    m = np.stack([np.asarray(r[1], dtype=np.float64) for r in rows])
     bits = (m @ _planes_matrix(m.shape[1])) > 0
     w = 1 << np.arange(BAND_BITS)
     cand = set()
@@ -238,10 +231,27 @@ def test_cosine_near_dup_matches_bruteforce(spark, sf001):
             for x in range(len(v)):
                 for y in range(x + 1, len(v)):
                     cand.add((v[x], v[y]))
+    return cand
+
+
+def test_cosine_near_dup_matches_bruteforce(spark, sf001):
+    """emb_cosine_near_dup == independent numpy re-derivation: candidate
+    pairs from the banding definition, exact cosines, threshold filter —
+    shared with the Spark path only through the hash-family definition
+    (_planes_matrix)."""
+    import duckdb as ddb
+
+    from team_goldo_combat_log_parser_spark.operators.similarity import (
+        NEAR_DUP_THRESHOLD, emb_cosine_near_dup)
+
+    rows = ddb.sql(f"SELECT vec_id, embedding FROM "
+                   f"'{sf001}/embeddings.parquet' ORDER BY vec_id").fetchall()
+    ids = [r[0] for r in rows]
+    m = np.stack([np.asarray(r[1], dtype=np.float64) for r in rows])
     norms = np.linalg.norm(m, axis=1)
     want = sorted(
         (ids[i], ids[j])
-        for i, j in cand
+        for i, j in _band_candidates(m)
         if (m[i] @ m[j]) / (norms[i] * norms[j]) >= NEAR_DUP_THRESHOLD)
     got = [(r["a"], r["b"]) for r in emb_cosine_near_dup(spark, sf001).collect()]
     assert got == want and len(got) > 10, (len(got), len(want))
@@ -491,6 +501,66 @@ def test_near_dup_planted_recall_at_production_threshold(spark, tmp_path):
     assert recall >= 0.95, (recall, len(truth), len(got))
     # precision is 1.0 by construction (exact rescore >= threshold)
     assert got <= truth
+
+
+def _exact_cosine(u, v) -> float:
+    """The cosine the exact Spark scorers compute: each float element
+    cast to decimal(18,9) (HALF_UP), decimal products, a decimal fold
+    whose partial sums Spark rounds to 17 decimals (decimal(38,18) +
+    decimal(37,18) needs 39 digits; HALF_UP), then double sqrt and
+    division."""
+    from decimal import ROUND_HALF_UP, Decimal, localcontext
+
+    def fold(xs, ys):
+        acc = Decimal(0)
+        for p, r in zip(xs, ys):
+            acc = (acc + p * r).quantize(Decimal("1e-17"), ROUND_HALF_UP)
+        return float(acc)
+
+    step = Decimal("1e-9")
+    with localcontext() as ctx:
+        ctx.prec = 60
+        x = [Decimal(repr(float(a))).quantize(step, ROUND_HALF_UP) for a in u]
+        y = [Decimal(repr(float(a))).quantize(step, ROUND_HALF_UP) for a in v]
+        dot, n1, n2 = fold(x, y), fold(x, x), fold(y, y)
+    return dot / (math.sqrt(n1) * math.sqrt(n2))
+
+
+def test_cosine_prefilters_exact_at_small_magnitude(spark, tmp_path):
+    """At element magnitudes near 1e-8 the decimal(18,9) rounding moves
+    the exact cosine far more than 1e-6 away from the double one, so a
+    fixed prefilter margin drops true results. emb_cosine_topk and
+    emb_cosine_near_dup must still equal an exact Python re-derivation
+    (decimal elements, candidate pairs from the banding definition) on
+    a planted-cluster corpus scaled by 3e-8."""
+    from team_goldo_combat_log_parser_spark.sources.datagen import (
+        clustered_embeddings)
+
+    ids, mat = clustered_embeddings(300, noise=0.45)
+    mat = (mat * np.float32(3e-8)).astype(np.float32)
+    d = tmp_path / "tiny"
+    d.mkdir()
+    _write_embeddings(str(d / "embeddings.parquet"), ids, mat)
+
+    def e6(i, j):
+        return math.floor(_exact_cosine(mat[i], mat[j]) * 1e6)
+
+    want = []
+    for q in range(similarity.N_QUERIES):
+        cos = {j: _exact_cosine(mat[q], mat[j]) for j in ids if j != q}
+        top = sorted(cos, key=lambda j: (-cos[j], j))[:similarity.TOP_K]
+        want += [(q, r + 1, j, e6(q, j)) for r, j in enumerate(top)]
+    got = [tuple(r) for r in
+           similarity.emb_cosine_topk(spark, str(d)).collect()]
+    assert got == want
+
+    cand = _band_candidates(mat.astype(np.float64))
+    want_pairs = sorted(
+        (i, j, e6(i, j)) for i, j in cand
+        if _exact_cosine(mat[i], mat[j]) >= similarity.NEAR_DUP_THRESHOLD)
+    got_pairs = [tuple(r) for r in
+                 similarity.emb_cosine_near_dup(spark, str(d)).collect()]
+    assert got_pairs == want_pairs and len(got_pairs) > 0
 
 
 def test_ivf_empty_modulus_sample_falls_back_to_full_corpus(
@@ -805,58 +875,6 @@ def test_minhash_signature_has_no_shuffle(spark, sf01):
     assert "Exchange" not in buf.getvalue(), buf.getvalue()
 
 
-def test_clean_corpus_hierarchical_budget_parity(spark, sf01):
-    """The (source, shard) two-level budget (VERDICT r7 next #2b) must
-    be BIT-identical to the single-window running sum — all-integer
-    arithmetic, so exact equality, at two shard widths (one that splits
-    sources mid-stream, one wider than most sources)."""
-    base = [tuple(r) for r in text.doc_clean_corpus(spark, sf01).collect()]
-    assert len(base) > 0
-    for width in (7, 64):
-        got = [tuple(r) for r in text.doc_clean_corpus(
-            spark, sf01, shard_docs=width).collect()]
-        assert got == base, f"shard_docs={width}"
-
-
-def test_pack_sequences_hierarchical_parity(spark, sf01):
-    """doc_pack_sequences(shard_docs=N): the per-shard prefix + broadcast
-    offset decomposition must reproduce every packing coordinate
-    exactly (start_off/first_seq/last_seq are all integers)."""
-    base = [tuple(r) for r in text.doc_pack_sequences(spark, sf01).collect()]
-    assert len(base) > 0
-    for width in (13, 128):
-        got = [tuple(r) for r in text.doc_pack_sequences(
-            spark, sf01, shard_docs=width).collect()]
-        assert got == base, f"shard_docs={width}"
-
-
-def test_unigram_nll_scale_variant_boundary_tolerant_parity(spark, sf01):
-    """doc_unigram_nll(scale_variant=True) at rel_err=0.0: scores
-    (doc_id, n_tokens, avg_nll_e4) are identical; buckets may differ
-    from NTILE(3) ONLY for docs whose score EQUALS a tercile cut value
-    (NTILE splits rank-tie groups by position to equalize counts; a
-    value cut keeps them together)."""
-    exact = {r["doc_id"]: (r["n_tokens"], r["avg_nll_e4"], r["ppl_bucket"])
-             for r in text.doc_unigram_nll(spark, sf01).collect()}
-    var = {r["doc_id"]: (r["n_tokens"], r["avg_nll_e4"], r["ppl_bucket"])
-           for r in text.doc_unigram_nll(
-               spark, sf01, scale_variant=True,
-               tercile_rel_err=0.0).collect()}
-    assert set(exact) == set(var)
-    assert all(exact[d][:2] == var[d][:2] for d in exact)  # scores equal
-    scores = spark.createDataFrame(
-        [(v[1],) for v in exact.values()], "avg_nll_e4 long")
-    c1, c2 = scores.approxQuantile("avg_nll_e4", [1 / 3, 2 / 3], 0.0)
-    mism = [d for d in exact if exact[d][2] != var[d][2]]
-    assert all(exact[d][1] in (c1, c2) for d in mism), (
-        f"non-boundary bucket mismatch: "
-        f"{[(d, exact[d], var[d]) for d in mism][:5]} cuts=({c1},{c2})")
-    # and the variant must not be degenerate: buckets still partition
-    # the corpus into three non-empty classes
-    got_buckets = {v[2] for v in var.values()}
-    assert got_buckets == {"head", "middle", "tail"}
-
-
 def test_connected_components_path_graph(spark):
     """The label-propagation loop must reach the fixpoint on a diameter-9
     path (forces multiple sweeps, not just one), leave separate
@@ -900,40 +918,6 @@ def test_connected_components_budget_boundary(spark, monkeypatch):
     assert got == {n: 0 for n in range(6)}
     with pytest.raises(RuntimeError, match="did not converge"):
         text._connected_components(df, max_iters=4).collect()
-
-
-def test_connected_components_shortcut_parity_and_log_rounds(spark):
-    """The pointer-jumping scale variant (VERDICT r7 next #2c): exact
-    label parity with the default sweep on mixed shapes, and O(log
-    diameter) convergence — a 24-node path that exhausts the default's
-    20-sweep budget resolves under shortcut=True within 8 sweeps
-    (labels travel 2^sweep hops)."""
-    edges = [(i, i + 1) for i in range(9)]           # path, rep 0
-    edges += [(20, 21), (22, 21)]                    # vee, rep 20
-    edges += [(30 + i, 30 + j) for i in range(4) for j in range(i)]  # clique
-    df = spark.createDataFrame(edges, "a long, b long")
-    base = {r["node"]: r["lab"]
-            for r in text._connected_components(df).collect()}
-    fast = {r["node"]: r["lab"]
-            for r in text._connected_components(df, shortcut=True).collect()}
-    assert fast == base
-    chain = spark.createDataFrame([(i, i + 1) for i in range(23)],
-                                  "a long, b long")
-    with pytest.raises(RuntimeError, match="did not converge"):
-        text._connected_components(chain, max_iters=8).collect()
-    got = {r["node"]: r["lab"] for r in text._connected_components(
-        chain, max_iters=8, shortcut=True).collect()}
-    assert got == {n: 0 for n in range(24)}
-
-
-def test_dup_clusters_shortcut_parity(spark, near_dup_dir):
-    """doc_dup_clusters(cc_shortcut=True) — the flagged 100x variant —
-    must return the identical cluster table on the planted corpus."""
-    a = [tuple(r) for r in text.doc_dup_clusters(spark, near_dup_dir)
-         .collect()]
-    b = [tuple(r) for r in text.doc_dup_clusters(
-        spark, near_dup_dir, cc_shortcut=True).collect()]
-    assert a == b and len(a) > 0
 
 
 def test_dup_clusters_groups_transitive_pairs(spark, near_dup_dir):
