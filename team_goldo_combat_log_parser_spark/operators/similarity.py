@@ -254,15 +254,14 @@ def _banded_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
     return banded.localCheckpoint(eager=True)
 
 
-def lsh_candidates(spark: SparkSession, sf_dir: str,
-                   probe_radius: int = 1) -> DataFrame:
+def lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(qid, qv, vec_id, embedding) candidate pairs from the banding join.
 
     Data side: exact (band, key) postings — ONE row per (vector, band),
     the inverted index a real deployment would precompute and bucket-join.
     Query side: multi-probe — each query also probes every key within
-    Hamming distance ``probe_radius`` of its own band key, which buys
-    recall on weakly-correlated neighbors without growing the index.
+    Hamming distance 1 of its own band key, which buys recall on
+    weakly-correlated neighbors without growing the index.
 
     Round 9 (guide par.2.3 "shuffle keys, not payloads"): the banding
     join and the candidate dedup operate on (qid, vec_id) IDS ONLY; the
@@ -274,13 +273,8 @@ def lsh_candidates(spark: SparkSession, sf_dir: str,
     dedup compares two longs."""
     banded = _banded_postings(spark, sf_dir)
     q0 = banded.filter(F.col("vec_id") < N_QUERIES)
-    probes = [F.col("bkey")]
-    if probe_radius >= 1:
-        probes += [F.col("bkey").bitwiseXOR(F.lit(1 << i))
-                   for i in range(BAND_BITS)]
-    if probe_radius >= 2:
-        probes += [F.col("bkey").bitwiseXOR(F.lit((1 << i) | (1 << j)))
-                   for i in range(BAND_BITS) for j in range(i + 1, BAND_BITS)]
+    probes = [F.col("bkey")] + [F.col("bkey").bitwiseXOR(F.lit(1 << i))
+                                for i in range(BAND_BITS)]
     q = q0.select(
         F.col("vec_id").alias("qid"), "band",
         F.explode(F.array(*probes)).alias("bkey"))

@@ -15,17 +15,16 @@ batch and stream read every amount, threat and damage type alike.
 
 Scope notes (extension surface, not reference parity — the reference is
 batch-only):
- * default mode: rows are processed in line_no order within each batch;
-   cross-batch order relies on an ordered source (file source reads
-   files in order). ``stream_pulls(..., reorder=True)`` lifts that
-   assumption: a per-log REORDER BUFFER in the state delivers rows to
-   the parser strictly by line_no no matter how batches interleave —
-   exact (sequence-based, not time-watermark-based: line_no is
-   contiguous per log, so "can I advance?" is decidable without a
-   lateness heuristic), at the cost of buffering rows that arrive ahead
-   of a gap. A line that never arrives stalls that log's emission;
-   ``reorder_max_buffer`` bounds the buffer so a lost line surfaces as
-   a loud error, not an executor OOM.
+ * line order: the parser is a row-at-a-time state machine, so a per-log
+   LINE-ORDER BUFFER in the state delivers rows to it strictly by
+   line_no, however the source splits or orders them — across files,
+   micro-batches, or the Arrow chunks (``maxRecordsPerBatch`` rows) one
+   group reaches Python in. Exact (sequence-based, not
+   time-watermark-based: line_no is contiguous per log, so "can I
+   advance?" is decidable without a lateness heuristic), at the cost of
+   buffering rows that arrive ahead of a gap. A line that never arrives
+   stalls that log's emission; ``reorder_max_buffer`` bounds the buffer
+   so a lost line surfaces as a loud error, not an executor OOM.
  * cross-log duplicate-pull suppression (Datastore probe) is a global
    lookup, out of scope for per-log state; run the batch dedup downstream.
 """
@@ -175,18 +174,15 @@ def _rows(pdf: pd.DataFrame) -> list[tuple]:
     return list(pdf[list(_FOLD_COLS)].itertuples(index=False, name=None))
 
 
-def _make_state_fn(reorder: bool, max_buffer: int):
-    """The per-log state function. It loads the parser state once and
-    feeds every row to ``_fold``:
+def _make_state_fn(max_buffer: int):
+    """The per-log state function. It loads the parser state once, puts
+    every row into a per-log buffer keyed by line_no and feeds ``_fold``
+    strictly in sequence (line_no is contiguous from 0 per log), so any
+    chunking or cross-batch order — a log split over Arrow chunks, a late
+    marker, a shuffled replay — produces EXACTLY the ordered result.
+    Rows ahead of a gap wait in the state.
 
-    * ``reorder=False``: rows in ``line_no`` order within each chunk;
-    * ``reorder=True``: rows enter a per-log buffer keyed by line_no and
-      are fed strictly in sequence (line_no is contiguous from 0 per
-      log), so arbitrary cross-batch reordering — a late marker, a
-      shuffled replay — produces EXACTLY the ordered result. Rows ahead
-      of a gap wait in the state.
-
-    Built as a closure so the options ship with the pickled function to
+    Built as a closure so the bound ships with the pickled function to
     the executors."""
 
     def fn(key: tuple, pdfs: Iterator[pd.DataFrame],
@@ -194,10 +190,16 @@ def _make_state_fn(reorder: bool, max_buffer: int):
         log_id = key[0]
         if state.exists:
             st = json.loads(state.get[0])
+            if "_next" not in st:
+                # resuming such a state would wait for line 0 forever
+                raise ValueError(
+                    f"parser state for {log_id} has no line position: the "
+                    "checkpoint predates the line-order buffer; start a "
+                    "fresh checkpoint")
         else:
             st = {"in_combat": False, "player": None, "healer": None,
                   "seq": 0, "start": None, "target": None, "dmg": 0,
-                  "heal": 0, "threat": 0}
+                  "heal": 0, "threat": 0, "_buf": [], "_next": 0}
         done: list[dict] = []
 
         def feed(row) -> None:
@@ -207,25 +209,21 @@ def _make_state_fn(reorder: bool, max_buffer: int):
                 done.append(pull)
 
         buf: dict[int, list] = {}
-        next_line = 0
-        if reorder:
-            # a bare row list — line_no is row[0], so no str-keyed dict
-            # copies hit the blob (SCALE.md "Reorder-buffer state cost")
-            for row in st.pop("_buf", []):
-                if len(row) != len(_FOLD_COLS):
-                    raise ValueError(
-                        f"reorder buffer for {log_id} holds a row of "
-                        f"{len(row)} fields, expected {len(_FOLD_COLS)}: "
-                        "the checkpoint predates the typed row layout; "
-                        "start a fresh checkpoint")
-                buf[row[0]] = row
-            next_line = st.pop("_next", 0)
+        # a bare row list — line_no is row[0], so no str-keyed dict
+        # copies hit the blob (SCALE.md "Reorder-buffer state cost")
+        for row in st.pop("_buf"):
+            if len(row) != len(_FOLD_COLS):
+                raise ValueError(
+                    f"reorder buffer for {log_id} holds a row of "
+                    f"{len(row)} fields, expected {len(_FOLD_COLS)}: "
+                    "the checkpoint predates the typed row layout; "
+                    "start a fresh checkpoint")
+            buf[row[0]] = row
+        next_line = st.pop("_next")
         for pdf in pdfs:
-            if not reorder:
-                for row in _rows(pdf.sort_values("line_no")):
-                    feed(row)
-                continue
-            for row in _rows(pdf):
+            # sorted, so a chunk's in-sequence rows go straight to the
+            # parser instead of waiting in the buffer
+            for row in _rows(pdf.sort_values("line_no")):
                 if row[0] < next_line:
                     # already delivered to the parser — an at-least-once
                     # source replaying a row; keeping it would park it in
@@ -244,9 +242,8 @@ def _make_state_fn(reorder: bool, max_buffer: int):
                         f"reorder buffer for {log_id} exceeds {max_buffer} "
                         f"rows waiting on line {next_line} — line lost "
                         "upstream?")
-        if reorder:
-            st["_buf"] = list(buf.values())
-            st["_next"] = next_line
+        st["_buf"] = list(buf.values())
+        st["_next"] = next_line
         state.update((json.dumps(st),))
         if done:
             yield pd.DataFrame(done)[[f.name for f in PULL_OUT_SCHEMA.fields]]
@@ -254,11 +251,10 @@ def _make_state_fn(reorder: bool, max_buffer: int):
     return fn
 
 
-def stream_pulls(tokens_stream: DataFrame, reorder: bool = False,
+def stream_pulls(tokens_stream: DataFrame,
                  reorder_max_buffer: int = REORDER_MAX_BUFFER) -> DataFrame:
-    """Streaming token table -> stream of finished pulls. reorder=True
-    tolerates out-of-order arrival across micro-batches (see module
-    docstring) at the cost of a per-log line buffer in the state."""
+    """Streaming token table -> stream of finished pulls, each log read
+    in line order through the per-log buffer (see module docstring)."""
     parsed = grammar.parse_lines(tokens_stream)
     slim = parsed.select(
         "log_id",
@@ -266,7 +262,7 @@ def stream_pulls(tokens_stream: DataFrame, reorder: bool = False,
           for c in _FOLD_COLS],
         *[F.col(c).isNotNull().alias(f"{c}_ok") for c in _NULLABLE])
     return slim.groupBy("log_id").applyInPandasWithState(
-        _make_state_fn(reorder, reorder_max_buffer), PULL_OUT_SCHEMA,
+        _make_state_fn(reorder_max_buffer), PULL_OUT_SCHEMA,
         STATE_SCHEMA, "append", GroupStateTimeout.NoTimeout)
 
 
@@ -349,11 +345,10 @@ class GoldoMetricsListener(StreamingQueryListener):
 
 
 def reorder_buffer_depths(spark, checkpoint_dir: str) -> dict[str, int]:
-    """Per-log undrained-row count (reorder mode), read from the
-    checkpointed state via Spark's ``statestore`` reader — the
-    observability hook for "how far behind is each log's gap?" without
-    touching a running query. Empty dict for non-reorder checkpoints
-    (no ``_buf`` in the blob).
+    """Per-log undrained-row count, read from the checkpointed state via
+    Spark's ``statestore`` reader — the observability hook for "how far
+    behind is each log's gap?" without touching a running query. Every
+    log in the state reports a depth, 0 once drained.
 
     The depth is computed inside the DataFrame (``get_json_object`` +
     ``json_array_length``, both JVM-side) and only the per-log summary is
@@ -361,52 +356,36 @@ def reorder_buffer_depths(spark, checkpoint_dir: str) -> dict[str, int]:
     every 100k-row buffer blob in driver Python would be the exact
     driver-side loop the rest of the engine avoids."""
     df = spark.read.format("statestore").load(checkpoint_dir)
-    rows = (
-        df.select(
-            F.col("key.log_id").alias("log_id"),
-            F.json_array_length(
-                F.get_json_object("value.groupState.blob", "$._buf"))
-            .alias("depth"))
-        .filter(F.col("depth").isNotNull())
-        .collect()
-    )
+    rows = df.select(
+        F.col("key.log_id").alias("log_id"),
+        F.json_array_length(
+            F.get_json_object("value.groupState.blob", "$._buf"))
+        .alias("depth")).collect()
     return {r["log_id"]: r["depth"] for r in rows}
 
 
 def run_stream_once(spark, input_dir: str, checkpoint_dir: str,
-                    query_name: str = "pulls_stream",
-                    output_dir: str | None = None,
-                    reorder: bool = False,
+                    output_dir: str,
                     reorder_max_buffer: int = REORDER_MAX_BUFFER,
                     metrics: list | None = None) -> DataFrame:
     """Drive the stream over all currently-available input (availableNow
-    trigger). Default sink is memory (smoke path; NOT checkpoint-
-    recoverable). Pass ``output_dir`` for a parquet sink — the deployable
-    shape, and the one that resumes from the checkpoint: a later
-    invocation with the same checkpoint processes only new files and
-    restores the per-log parser state (tested with a mid-fight split in
+    trigger) into the parquet sink at ``output_dir`` and return the
+    sink's contents. A later invocation with the same checkpoint
+    processes only new files and restores the per-log parser state
+    (tested with a mid-fight split in
     test_streaming_state_survives_restart_mid_fight)."""
     schema = "doc_id string, tokens array<int>, n_tok int, source string"
     stream = spark.readStream.schema(schema).parquet(input_dir)
-    pulls = stream_pulls(stream, reorder=reorder,
-                         reorder_max_buffer=reorder_max_buffer)
+    pulls = stream_pulls(stream, reorder_max_buffer=reorder_max_buffer)
     # observed metric rides each micro-batch's progress event — no extra
     # action, no second pass (pass ``metrics=[]`` to receive them)
     pulls = pulls.observe("goldo_pulls",
                           F.count(F.lit(1)).alias("pulls_out"))
-    if output_dir is not None:
-        q = (pulls.writeStream.outputMode("append").format("parquet")
-             .option("path", output_dir)
-             .option("checkpointLocation", checkpoint_dir)
-             .trigger(availableNow=True).start())
-        q.awaitTermination()
-        if metrics is not None:
-            metrics.extend(stream_batch_metrics(q))
-        return spark.read.parquet(output_dir)
-    q = (pulls.writeStream.outputMode("append").format("memory")
-         .queryName(query_name).option("checkpointLocation", checkpoint_dir)
+    q = (pulls.writeStream.outputMode("append").format("parquet")
+         .option("path", output_dir)
+         .option("checkpointLocation", checkpoint_dir)
          .trigger(availableNow=True).start())
     q.awaitTermination()
     if metrics is not None:
         metrics.extend(stream_batch_metrics(q))
-    return spark.sql(f"SELECT * FROM {query_name}")
+    return spark.read.parquet(output_dir)
