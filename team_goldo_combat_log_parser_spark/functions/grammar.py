@@ -242,14 +242,20 @@ def with_typed_columns(df: DataFrame) -> DataFrame:
     )
 
 
+def log_date(name: Column) -> Column:
+    """A log's date from its file name or log_id: the second
+    '_'-separated field (reference main.py:112: filename.split('_', 2)[1]),
+    whatever the prefix before it."""
+    return F.split(name, "_").getItem(1)
+
+
 def with_identity_columns(df: DataFrame) -> DataFrame:
-    """log_id / line_no from doc_id; log date from the source filename
-    (reference main.py:112: filename.split('_', 2)[1])."""
+    """log_id / line_no from doc_id; log date from the source filename."""
     return df.select(
         "*",
         F.substring_index("doc_id", ":", 1).alias("log_id"),
         F.substring_index("doc_id", ":", -1).cast("long").alias("line_no"),
-        F.split(F.col("source"), "_").getItem(1).alias("log_date"),
+        log_date(F.col("source")).alias("log_date"),
     )
 
 

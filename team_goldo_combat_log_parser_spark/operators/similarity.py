@@ -305,8 +305,8 @@ def emb_lsh_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ------------------------------------------------------ IVF ANN (scale path 2)
 
-# Coarse quantizer: K cells (derived from corpus size by default, see
-# ivf_k_for), stride-seeded, IVF_ITERS Lloyd rounds. Everything is
+# Coarse quantizer: K cells (derived from corpus size, see ivf_k_for),
+# stride-seeded, IVF_ITERS Lloyd rounds. Everything is
 # DETERMINISTIC by construction so the sequential oracle reproduces it
 # bit-for-bit: (1) assignment compares cosine to the cell's
 # SUM vector (cosine is scale-invariant, so the mean's division — whose
@@ -316,7 +316,6 @@ def emb_lsh_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (3) the training sample is a vec_id modulus, not df.sample() (whose
 # row order dependence no oracle could reproduce);
 # (4) K itself is a pure function of the corpus row count.
-IVF_K = 16  # legacy fixed K, kept as an explicit override for experiments
 IVF_K_MIN = 4
 IVF_K_MAX = 65536
 IVF_NPROBE = 4
@@ -324,8 +323,7 @@ IVF_ITERS = 2
 
 
 def ivf_k_for(n: int) -> int:
-    """Cell count for an n-vector corpus: K ~ sqrt(n) (round-7 — was
-    prose in the emb_ivf_ann docstring, now the derived default). With
+    """Cell count for an n-vector corpus: K ~ sqrt(n). With
     K = sqrt(n) and fixed nprobe the candidate set per query is
     ~ nprobe * sqrt(n): sub-linear serve cost as the corpus grows. To
     HOLD recall while the corpus grows instead, scale nprobe with K
@@ -362,17 +360,11 @@ def ivf_train_target(n: int) -> int:
     oracle derives the sample with this same function."""
     return max(IVF_TRAIN_TARGET, IVF_TRAIN_PER_CELL * ivf_k_for(n))
 
-# one-train-many-queries: trained models memoized per corpus dir (and
-# optionally persisted to parquet via model_path) so repeated queries
-# never re-run Lloyd. train_runs is a test hook counting actual trainings.
+# one-train-many-queries: trained models memoized per (corpus dir,
+# corpus fingerprint) so repeated queries never re-run Lloyd or count the
+# corpus. train_runs is a test hook counting actual trainings.
 _ivf_model_cache: dict[str, np.ndarray] = {}
 _ivf_train_stats = {"train_runs": 0}
-# corpus row count per (dir, fingerprint): deriving K = ivf_k_for(n) ran
-# a count() job on EVERY serve call even when the model itself was
-# memoized — the count is part of the model's identity, so it shares the
-# fingerprint-keyed memo lifecycle (round 9, guide par.1: one fewer job
-# on the steady-state serve path)
-_ivf_n_cache: dict[str, int] = {}
 
 
 def _ivf_seed_ids(ids: list[int], k: int) -> list[int]:
@@ -426,24 +418,21 @@ def _ivf_assign_udf(cents: np.ndarray):
     return assign.asNondeterministic()
 
 
-def ivf_train_centroids(spark: SparkSession, sf_dir: str,
-                        k: int | None = None) -> np.ndarray:
+def ivf_train_centroids(spark: SparkSession, sf_dir: str) -> np.ndarray:
     """Train the coarse quantizer distributed, on a bounded sample: keep
     vec_id % mod == 0 rows (mod sized for ~IVF_TRAIN_TARGET survivors —
     deterministic, so the sequential oracle reproduces it), seed by
     position stride over the sorted sample ids, then IVF_ITERS Lloyd
     rounds of (distributed assignment -> per-cell order-fixed component
     folds -> K x dim driver-side model update). Only the K x dim centroid
-    state and the sample id list ever reach the driver. ``k`` defaults
-    to ivf_k_for(corpus size) — the sqrt(n) rule as code; pass a fixed
-    value to pin the quantizer width (e.g. for A/B recall curves)."""
+    state and the sample id list ever reach the driver. K is
+    ivf_k_for(corpus size), from the count this pass already takes."""
     _ivf_train_stats["train_runs"] += 1
     e = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     n = e.count()
     if n == 0:
         raise ValueError("cannot train an IVF model on an empty corpus")
-    if k is None:
-        k = ivf_k_for(n)
+    k = ivf_k_for(n)
     mod = max(n // ivf_train_target(n), 1)
     train = e.filter((F.col("vec_id") % mod) == 0) if mod > 1 else e
     ids = sorted(r["vec_id"] for r in train.select("vec_id").collect())
@@ -486,39 +475,6 @@ def ivf_train_centroids(spark: SparkSession, sf_dir: str,
     return cents
 
 
-def save_ivf_model(spark: SparkSession, cents: np.ndarray,
-                   model_path: str, trained_k: int | None = None) -> None:
-    """Persist the K x dim centroid model as a tiny parquet table — the
-    serve-side artifact a production deployment ships separately from
-    the corpus (train once offline, load everywhere). ``trained_k``
-    stamps the REQUESTED quantizer width (k_eff == cents.shape[0] can be
-    smaller after seed dedup); it defaults to cents.shape[0] for
-    hand-saved models. Round-8 advice: without the stamp, a legacy
-    fixed-k model (cells <= derived k) was silently served for a
-    derived-k request and the oracle — which always derives k —
-    mismatched with no hint why."""
-    tk = int(trained_k) if trained_k is not None else int(cents.shape[0])
-    rows = [(int(i), [float(x) for x in cents[i]], tk)
-            for i in range(cents.shape[0])]
-    (spark.createDataFrame(
-        rows, "cell int, centroid array<double>, trained_k int")
-     .coalesce(1).write.mode("overwrite").parquet(model_path))
-
-
-def load_ivf_model(spark: SparkSession,
-                   model_path: str) -> tuple[np.ndarray, int | None]:
-    """Returns (centroids, trained_k). trained_k is None for legacy
-    models persisted before the stamp existed — the caller treats that
-    as a mismatch and retrains (fail-safe, never fail-parity)."""
-    df = spark.read.parquet(model_path)
-    rows = df.orderBy("cell").collect()
-    tk = (int(rows[0]["trained_k"])
-          if rows and "trained_k" in df.columns else None)
-    cents = np.stack([np.asarray(r["centroid"], dtype=np.float64)
-                      for r in rows])
-    return cents, tk
-
-
 def _corpus_fingerprint(sf_dir: str) -> str:
     """Cheap fingerprint of the embeddings corpus (total bytes + max
     mtime of the parquet file/dir) so the in-memory model memo
@@ -541,82 +497,33 @@ def _corpus_fingerprint(sf_dir: str) -> str:
     return f"{size}:{mtime:.6f}"
 
 
-def _corpus_dim(spark: SparkSession, sf_dir: str) -> int | None:
-    row = (load(spark, sf_dir, "embeddings")
-           .select("embedding").limit(1).collect())
-    return len(row[0]["embedding"]) if row else None
-
-
-def ivf_model(spark: SparkSession, sf_dir: str,
-              model_path: str | None = None,
-              k: int | None = None) -> np.ndarray:
-    """Load-or-train: in-memory memo per (corpus dir, corpus
-    fingerprint, K), then the persisted parquet model if ``model_path``
-    is given, readable, AND valid for this request (centroid dim ==
-    embedding dim — a model trained on a different corpus would
-    otherwise fail later with an opaque matmul shape error — and the
-    persisted ``trained_k`` stamp == the requested K: round-8 advice,
-    a legacy fixed-k model with cells <= K was silently served for a
-    derived-k request, breaking oracle parity with no hint why), then a
-    fresh training run (persisted back to ``model_path`` when given).
-    One train, many queries — ``emb_ivf_ann`` never re-runs Lloyd for a
-    corpus this session. ``k`` defaults to ivf_k_for(corpus size)."""
-    import logging
+def ivf_model(spark: SparkSession, sf_dir: str) -> np.ndarray:
+    """Train once per corpus: the in-memory memo is keyed by (corpus
+    dir, corpus fingerprint), so ``emb_ivf_ann`` never re-runs Lloyd,
+    nor the count that derives K, for a corpus this session."""
     import os
 
-    log = logging.getLogger(__name__)
-    base_key = f"{os.path.realpath(sf_dir)}|{_corpus_fingerprint(sf_dir)}"
-    if k is None:
-        n = _ivf_n_cache.get(base_key)
-        if n is None:
-            n = load(spark, sf_dir, "embeddings").select("vec_id").count()
-            _ivf_n_cache[base_key] = n
-        k = ivf_k_for(n)
-    key = f"{base_key}|k={k}"
+    key = f"{os.path.realpath(sf_dir)}|{_corpus_fingerprint(sf_dir)}"
     cents = _ivf_model_cache.get(key)
-    if cents is None and model_path is not None:
-        try:
-            cents, trained_k = load_ivf_model(spark, model_path)
-        except Exception as exc:
-            log.warning("IVF model load from %s failed (%s) — retraining",
-                        model_path, exc)
-            cents = None
-        if cents is not None:
-            dim = _corpus_dim(spark, sf_dir)
-            if ((dim is not None and cents.shape[1] != dim)
-                    or trained_k != k):
-                log.warning(
-                    "IVF model at %s has shape %s / trained_k %s but this "
-                    "request is corpus dim %s / K=%d — rejecting and "
-                    "retraining", model_path, cents.shape, trained_k,
-                    dim, k)
-                cents = None
     if cents is None:
-        cents = ivf_train_centroids(spark, sf_dir, k=k)
-        if model_path is not None:
-            save_ivf_model(spark, cents, model_path, trained_k=k)
-    _ivf_model_cache[key] = cents
+        cents = _ivf_model_cache[key] = ivf_train_centroids(spark, sf_dir)
     return cents
 
 
-def emb_ivf_ann(spark: SparkSession, sf_dir: str,
-                nprobe: int = IVF_NPROBE,
-                model_path: str | None = None,
-                k: int | None = None) -> DataFrame:
+def emb_ivf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF approximate NN — the second scale path next to the LSH one:
     vectors are bucketed by nearest coarse centroid (inverted file), a
-    query probes its ``nprobe`` nearest cells, and the exact left-fold
+    query probes its IVF_NPROBE nearest cells, and the exact left-fold
     cosine re-ranks candidates only. The candidate join is an equi-join
-    on cell id; candidates per query ~ nprobe * n / K. ``k`` defaults
-    to ivf_k_for(corpus size) — K = sqrt(n) as code (round 7), so the
-    candidate set stays ~ nprobe * sqrt(n) as the corpus grows; the
-    sequential oracle (sketch_oracle.ivf_ann_sql) derives K identically,
-    so the driver's value-parity gate holds at any corpus size. The
-    model comes from ``ivf_model`` (load-or-train, memoized) — no Lloyd
-    pass on the query path."""
-    cents = ivf_model(spark, sf_dir, model_path=model_path, k=k)
-    k_eff = cents.shape[0]
-    nprobe = min(nprobe, k_eff)
+    on cell id; candidates per query ~ nprobe * n / K. K is
+    ivf_k_for(corpus size), so the candidate set stays ~ nprobe *
+    sqrt(n) as the corpus grows; the sequential oracle
+    (sketch_oracle.ivf_ann_sql) derives K and reads IVF_NPROBE
+    identically, so the driver's value-parity gate holds at any corpus
+    size. The model comes from ``ivf_model`` (memoized) — no Lloyd pass
+    on the query path."""
+    cents = ivf_model(spark, sf_dir)
+    nprobe = min(IVF_NPROBE, cents.shape[0])
     e = load(spark, sf_dir, "embeddings")
     data = e.withColumn("cell", _ivf_assign_udf(cents)("embedding")).select(
         F.col("vec_id"), F.col("embedding"), "cell")

@@ -43,7 +43,6 @@ class PipelineResult:
 def run_pipeline(
     spark: SparkSession,
     token_df: DataFrame,
-    broadcast_fights: bool = True,
     cache: bool = True,
     cache_lines: bool = True,
 ) -> PipelineResult:
@@ -102,7 +101,7 @@ def run_pipeline(
     if cache:
         fights = fights.cache()
 
-    assigned = assign_fights(parsed, fights, broadcast_fights=broadcast_fights)
+    assigned = assign_fights(parsed, fights)
     routed = with_routes(assigned)
     if cache:
         routed = routed.persist()

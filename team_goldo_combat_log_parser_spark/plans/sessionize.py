@@ -87,24 +87,20 @@ def build_fights(parsed: DataFrame) -> DataFrame:
         "is_duplicate", F.col("finished") & (prior_written >= 1))
 
 
-def assign_fights(parsed: DataFrame, fights: DataFrame,
-                  broadcast_fights: bool = True) -> DataFrame:
+def assign_fights(parsed: DataFrame, fights: DataFrame) -> DataFrame:
     """Left-join each event to its enclosing fight (if any).
 
     Equi-key log_id drives the hash join; the line-range predicate is a
-    residual filter. ``broadcast_fights`` suits any corpus whose fights
-    table fits an executor (the usual case — fights are ~1e-3 of rows);
-    disable for the shuffle-hash path when it does not.
+    residual filter. The fights table is broadcast: fights are ~1e-3 of
+    rows, so it fits an executor.
     """
-    f = fights.select(
+    f = F.broadcast(fights.select(
         F.col("log_id").alias("f_log_id"),
         "fight_seq",
         F.col("player_id").alias("fight_player"),
         "start_line", "end_line", "start_ts", "stop_ts",
         "finished", "is_duplicate",
-    )
-    if broadcast_fights:
-        f = F.broadcast(f)
+    ))
     cond = (
         (parsed["log_id"] == f["f_log_id"])
         & (parsed["line_no"] >= f["start_line"])

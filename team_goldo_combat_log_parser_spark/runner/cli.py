@@ -9,7 +9,8 @@ Usage (cluster or local):
 
 Each invocation processes only sources absent from the manifest, writes the
 five event sinks + aggregate tables partitioned by (commit, log_date) —
-log_date is the YYYY-MM-DD prefix of log_id, so readers prune by day —
+log_date is the date field of log_id (``grammar.log_date``, the rule the
+parse uses), so readers prune by day —
 and commits a manifest record with per-sink counts (the run's metrics).
 With an ``iceberg:<catalog.namespace>`` output, tables are written through
 the Iceberg catalog instead (per-commit overwrite = the same exactly-once
@@ -25,6 +26,7 @@ import sys
 from pyspark.sql import Observation, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions import grammar
 from ..plans.pipeline import run_pipeline
 from .checkpoint import Manifest, filter_unprocessed
 
@@ -119,9 +121,8 @@ def write_table(df, output: str, name: str, commit_id: str) -> None:
     writer = df
     partition_cols = []
     if "log_id" in df.columns:
-        # log_id format: combat_YYYY-MM-DD_HH_MM_SS_<name> (datagen +
-        # reference upload naming) -> chars 8..17 are the day
-        writer = writer.withColumn("log_date", F.substring("log_id", 8, 10))
+        writer = writer.withColumn("log_date",
+                                   grammar.log_date(F.col("log_id")))
         partition_cols = ["log_date"]
     w = writer.write.mode("overwrite")
     if partition_cols:

@@ -10,22 +10,11 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.grammar import retokenize_udf
 from . import datagen as dg
-
-
-def lines_df(spark: SparkSession, logs: list[tuple[str, list[str]]],
-             partitions: int = 32) -> DataFrame:
-    rows = []
-    for fname, lines in logs:
-        log_name = fname.rsplit(".", 1)[0]
-        rows.extend((f"{log_name}:{i:08d}", line, fname)
-                    for i, line in enumerate(lines))
-    return spark.createDataFrame(rows, "doc_id string, line string, source string") \
-        .repartition(partitions, "source")
 
 
 def materialize_token_table(spark: SparkSession, cfg: dg.GenConfig,

@@ -39,7 +39,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.streaming import StreamingQueryListener
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..functions import grammar
@@ -266,82 +265,36 @@ def stream_pulls(tokens_stream: DataFrame,
         STATE_SCHEMA, "append", GroupStateTimeout.NoTimeout)
 
 
-def _progress_metrics_row(d: dict) -> dict:
-    """Shape ONE progress event (plain-dict JSON form) into the ops
-    metric row both the pull path (``stream_batch_metrics``) and the
-    push path (``GoldoMetricsListener``) emit."""
-    om = (d.get("observedMetrics") or {}).get("goldo_pulls", {})
-    so = d.get("stateOperators") or []
-    return {
-        "batch_id": d.get("batchId"),
-        "rows_in": int(d.get("numInputRows") or 0),
-        "pulls_out": int((om or {}).get("pulls_out") or 0),
-        "state_rows": sum(int(s.get("numRowsTotal") or 0) for s in so),
-        "state_bytes": sum(int(s.get("memoryUsedBytes") or 0) for s in so),
-        "state_rows_updated": sum(int(s.get("numRowsUpdated") or 0)
-                                  for s in so),
-        "trigger_ms": (d.get("durationMs") or {}).get("triggerExecution"),
-    }
-
-
 def stream_batch_metrics(query) -> list[dict]:
     """Per-batch ops metrics from a streaming query's progress log: rows
     in, pulls out (the ``goldo_pulls`` observation attached by
     ``run_stream_once``), state-store row counts, and trigger latency —
     the numbers a production deployment alerts on.
 
-    Pull-based: reads ``recentProgress``, a BOUNDED driver-side buffer
-    (``spark.sql.streaming.numRecentProgressUpdates``, default 100) — a
-    poller that falls behind loses batches. ``GoldoMetricsListener`` is
-    the push-based variant without that window."""
+    Reads ``recentProgress``, a BOUNDED driver-side buffer
+    (``spark.sql.streaming.numRecentProgressUpdates``, default 100): a
+    caller that runs more batches than that between reads loses the
+    oldest ones. ``run_stream_once`` reads it once its availableNow
+    query has terminated."""
     rows = []
     for p in query.recentProgress:
         # always via the JSON form: the live object holds Row values
         # (no .get) inside observedMetrics; the JSON is plain dicts
         d = json.loads(p.json) if hasattr(p, "json") else p
-        rows.append(_progress_metrics_row(d))
+        om = (d.get("observedMetrics") or {}).get("goldo_pulls") or {}
+        so = d.get("stateOperators") or []
+        rows.append({
+            "batch_id": d.get("batchId"),
+            "rows_in": int(d.get("numInputRows") or 0),
+            "pulls_out": int(om.get("pulls_out") or 0),
+            "state_rows": sum(int(s.get("numRowsTotal") or 0) for s in so),
+            "state_bytes": sum(int(s.get("memoryUsedBytes") or 0)
+                               for s in so),
+            "state_rows_updated": sum(int(s.get("numRowsUpdated") or 0)
+                                      for s in so),
+            "trigger_ms": (d.get("durationMs") or {}).get("triggerExecution"),
+        })
     return rows
-
-
-class GoldoMetricsListener(StreamingQueryListener):
-    """Push-based metrics: Spark delivers every progress event to
-    ``onQueryProgress`` as it is emitted, so no batch is ever lost to
-    the bounded ``recentProgress`` window — the shape a production
-    deployment feeds its metrics bus from. Register with
-    ``spark.streams.addListener(listener)``; detach with
-    ``removeListener`` (or use it as a context manager bound to a
-    session). Collected rows are in ``.metrics`` (same dict shape as
-    ``stream_batch_metrics``); lifecycle events land in ``.events``."""
-
-    def __init__(self, spark=None):
-        self.metrics: list[dict] = []
-        self.events: list[tuple[str, str]] = []  # (kind, query name/id)
-        self._spark = spark
-
-    # -- context-manager attach/detach (needs the session passed in)
-    def __enter__(self):
-        if self._spark is None:
-            raise ValueError("pass the SparkSession to use the context "
-                             "manager form")
-        self._spark.streams.addListener(self)
-        return self
-
-    def __exit__(self, *exc):
-        self._spark.streams.removeListener(self)
-        return False
-
-    def onQueryStarted(self, event):
-        self.events.append(("started", event.name or str(event.id)))
-
-    def onQueryProgress(self, event):
-        d = json.loads(event.progress.json)
-        self.metrics.append(_progress_metrics_row(d))
-
-    def onQueryIdle(self, event):
-        self.events.append(("idle", str(event.id)))
-
-    def onQueryTerminated(self, event):
-        self.events.append(("terminated", str(event.id)))
 
 
 def reorder_buffer_depths(spark, checkpoint_dir: str) -> dict[str, int]:

@@ -5,8 +5,6 @@ rollover, revive exclusion, pre-combat Force Armor)."""
 
 import datetime as dt
 
-import pytest
-
 from team_goldo_combat_log_parser_spark.golden.oracle import run_oracle
 from team_goldo_combat_log_parser_spark.plans.pipeline import run_pipeline
 from team_goldo_combat_log_parser_spark.sources import datagen as dg
@@ -112,16 +110,6 @@ def test_adversarial_specifics(spark):
             for r in res.heal.collect()}
     assert heal[("combat_2012-08-01_20_00_00_advA", 1, "Zan'ik")] == 250
     assert heal[("combat_2012-08-01_20_00_00_advA", 1, "Orarah")] == 400
-
-
-@pytest.mark.parametrize("broadcast", [False])
-def test_shuffle_join_path(spark, broadcast):
-    """The non-broadcast fight-assignment path must agree too."""
-    logs = dg.adversarial_logs()
-    oracle = run_oracle(logs)
-    res = run_pipeline(spark, dg.token_df(spark, logs),
-                       broadcast_fights=broadcast, cache=False)
-    assert spark_pulls(res) == oracle_pulls(oracle)
 
 
 def test_cache_lines_plans_agree(spark):

@@ -116,6 +116,29 @@ def test_sink_partitioned_by_log_date(spark, tmp_path):
         F.col("log_date") == "2012-08-02").count()
 
 
+def test_cli_log_date_from_any_prefix(spark, tmp_path):
+    """The sinks' log_date partition uses the parse's rule (the second
+    '_' field of the file name), not a fixed-width slice of a 7-character
+    'combat_' prefix: a 'swtor_' log lands under log_date=2012-08-01."""
+    from team_goldo_combat_log_parser_spark.runner import cli
+
+    lines = dict(dg.adversarial_logs())["combat_2012-08-01_20_00_00_advA.txt"]
+    log = ("swtor_2012-08-01_20_00_00_x.txt", lines)
+    dg.write_token_table(spark, [log], str(tmp_path / "tokens"), 1)
+    out = tmp_path / "out"
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        rc = cli.main(["--input", str(tmp_path / "tokens"),
+                       "--output", str(out),
+                       "--checkpoint", str(tmp_path / "ckpt")])
+    summary = json.loads(buf.getvalue().strip().splitlines()[-1])
+    assert rc == 0 and summary["counts"]["pulls"] == 2
+    for table in ("pulls", "sink_damage"):
+        days = {os.path.basename(p) for p in
+                glob.glob(f"{out}/{table}/commit=*/log_date=*")}
+        assert days == {"log_date=2012-08-01"}, (table, days)
+
+
 def test_streaming_pulls_match_batch(spark, tmp_path):
     logs = dg.synth_corpus(dg.GenConfig(n_logs=3, fights_per_log=3,
                                         rows_per_fight=60, seed=11))
@@ -743,6 +766,10 @@ def test_streaming_observability_metrics(spark, tmp_path):
     m1: list = []
     run_stream_once(spark, in_dir, ck, output_dir=out,
                     metrics=m1).collect()
+    # the field names are the metrics vocabulary other surfaces build on
+    keys = {"batch_id", "rows_in", "pulls_out", "state_rows",
+            "state_bytes", "state_rows_updated", "trigger_ms"}
+    assert m1 and all(set(b) == keys for b in m1)
     assert sum(b["rows_in"] for b in m1) == len(rows) - (gap_end - gap_start)
     assert sum(b["pulls_out"] for b in m1) == 0  # gap: nothing closed
     assert all(b["trigger_ms"] is not None for b in m1)
@@ -759,56 +786,10 @@ def test_streaming_observability_metrics(spark, tmp_path):
     m2: list = []
     run_stream_once(spark, in_dir, ck, output_dir=out,
                     metrics=m2).collect()
+    assert m2 and all(set(b) == keys for b in m2)
     assert sum(b["rows_in"] for b in m2) == gap_end - gap_start
     assert sum(b["pulls_out"] for b in m2) == 2  # both fights closed
     assert reorder_buffer_depths(spark, ck) == {log_id: 0}
-
-
-def test_streaming_push_listener_metrics(spark, tmp_path):
-    """Round-6: push-based metrics — a StreamingQueryListener receives
-    every progress event as it is emitted (no bounded recentProgress
-    window to fall out of) and shapes it identically to the pull path,
-    plus started/terminated lifecycle events."""
-    import time
-
-    from team_goldo_combat_log_parser_spark.streaming.stream_pipeline import (
-        GoldoMetricsListener)
-
-    logs = dg.synth_corpus(dg.GenConfig(n_logs=2, fights_per_log=2,
-                                        rows_per_fight=30, seed=43))
-    dg.write_token_table(spark, logs, str(tmp_path / "tokens"), 2)
-
-    pulled: list = []
-    with GoldoMetricsListener(spark) as lis:
-        got = run_stream_once(spark, str(tmp_path / "tokens"),
-                              str(tmp_path / "ck"),
-                              output_dir=str(tmp_path / "out"),
-                              metrics=pulled)
-        n_pulls = got.count()
-        # listener events are delivered asynchronously on the driver's
-        # listener bus — give it a moment to drain
-        for _ in range(100):
-            if any(k == "terminated" for k, _ in lis.events):
-                break
-            time.sleep(0.1)
-
-    # an unnamed query reports its id on both lifecycle events
-    started = [q for k, q in lis.events if k == "started"]
-    assert started and started == [q for k, q in lis.events
-                                   if k == "terminated"]
-    # the push path saw the same batches as the pull path, same shape
-    assert len(lis.metrics) == len(pulled) >= 1
-    assert sum(m["pulls_out"] for m in lis.metrics) == n_pulls == 4
-    assert sum(m["rows_in"] for m in lis.metrics) == sum(
-        m["rows_in"] for m in pulled)
-    keys = {"batch_id", "rows_in", "pulls_out", "state_rows",
-            "state_bytes", "state_rows_updated", "trigger_ms"}
-    assert all(set(m) == keys for m in lis.metrics)
-    # detached on exit: a later query must not reach this listener
-    n_before = len(lis.metrics)
-    run_stream_once(spark, str(tmp_path / "tokens"), str(tmp_path / "ck2"),
-                    output_dir=str(tmp_path / "out2"))
-    assert len(lis.metrics) == n_before
 
 
 def test_spark_submit_pyfiles_end_to_end(tmp_path):
@@ -853,160 +834,3 @@ def test_spark_submit_pyfiles_end_to_end(tmp_path):
     out = json.loads(r.stdout.strip().splitlines()[-1])
     assert out["status"] == "committed" and out["new_sources"] == 3
     assert out["counts"]["pulls"] == 4  # same golden as test_cli_end_to_end
-
-
-def test_doc_stream_dedup_across_batches(spark, tmp_path):
-    """Streaming ingest dedup: a duplicate arriving in a LATER batch
-    (same checkpoint, new file) is dropped by the restored hash state;
-    new content still flows through."""
-    from datetime import datetime
-
-    from team_goldo_combat_log_parser_spark.streaming.doc_stream import (
-        DOC_STREAM_SCHEMA, run_doc_dedup_once)
-
-    in_dir = str(tmp_path / "in")
-    ck = str(tmp_path / "ck")
-    out = str(tmp_path / "out")
-    ts = datetime(2026, 1, 1, 12, 0, 0)
-
-    def feed(rows):
-        spark.createDataFrame(rows, DOC_STREAM_SCHEMA).coalesce(1) \
-            .write.mode("append").parquet(in_dir)
-
-    feed([(0, "alpha beta", "en", "s0", 0, ts),
-          (1, "gamma delta", "en", "s0", 0, ts)])
-    r1 = run_doc_dedup_once(spark, in_dir, ck, out).collect()
-    assert sorted(r["doc_id"] for r in r1) == [0, 1]
-
-    # batch 2: doc 2 repeats doc 0's text (drop), doc 3 is new (keep)
-    feed([(2, "alpha beta", "en", "s1", 0, ts),
-          (3, "epsilon zeta", "en", "s1", 0, ts)])
-    r2 = run_doc_dedup_once(spark, in_dir, ck, out).collect()
-    assert sorted(r["doc_id"] for r in r2) == [0, 1, 3]
-
-
-def test_doc_stream_dedup_matches_batch(spark, tmp_path):
-    """On an in-order feed (doc_id order, one batch per doc) the stream's
-    first-arrival winner per hash equals the batch doc_exact_dedup
-    min-doc_id winner."""
-    from datetime import datetime
-
-    from team_goldo_combat_log_parser_spark.operators import text
-    from team_goldo_combat_log_parser_spark.streaming.doc_stream import (
-        DOC_STREAM_SCHEMA, run_doc_dedup_once)
-
-    texts = ["one two", "three four", "one two", "five six", "three four"]
-    rows = [(i, t, "en", "s0", 0, datetime(2026, 1, 1, 12, 0, i))
-            for i, t in enumerate(texts)]
-    in_dir = str(tmp_path / "in")
-    ck = str(tmp_path / "ck")
-    out = str(tmp_path / "out")
-    got = None
-    for r in rows:  # one file + one availableNow pass per doc: in-order
-        spark.createDataFrame([r], DOC_STREAM_SCHEMA).coalesce(1) \
-            .write.mode("append").parquet(in_dir)
-        got = run_doc_dedup_once(spark, in_dir, ck, out)
-    stream_ids = sorted(r["doc_id"] for r in got.collect())
-
-    spark.createDataFrame(rows, DOC_STREAM_SCHEMA) \
-        .drop("ingest_ts").coalesce(1) \
-        .write.mode("overwrite").parquet(str(tmp_path / "documents.parquet"))
-    batch_ids = sorted(
-        r["keep_doc_id"]
-        for r in text.doc_exact_dedup(spark, str(tmp_path)).collect())
-    assert stream_ids == batch_ids == [0, 1, 3]
-
-
-def test_doc_stream_dedup_state_is_watermark_bounded(spark, tmp_path):
-    """The T28 memory claim as a NUMBER (VERDICT r7 next #6): the hash
-    state tracks distinct IN-HORIZON hashes (first-seen within the
-    watermark delay of max event time), not distinct-ever. Feed three
-    50-doc waves an hour apart with a 10-minute delay: state peaks at
-    100 rows (the wave being ingested + the previous wave not yet
-    evicted at batch start — eviction uses the checkpointed watermark,
-    which trails one batch), never the lifetime 150. SCALE.md records
-    the same shape at 10x (6 waves x 5,000 docs)."""
-    from datetime import datetime
-
-    from team_goldo_combat_log_parser_spark.streaming.doc_stream import (
-        DOC_STREAM_SCHEMA, run_doc_dedup_once)
-
-    in_dir = str(tmp_path / "in")
-    ck = str(tmp_path / "ck")
-    out = str(tmp_path / "out")
-
-    def feed(hour, lo):
-        rows = [(lo + i, f"text {lo + i} unique", "en", "s0", 0,
-                 datetime(2026, 1, 1, hour, 0, 0)) for i in range(50)]
-        spark.createDataFrame(rows, DOC_STREAM_SCHEMA).coalesce(1) \
-            .write.mode("append").parquet(in_dir)
-
-    per_pass = []
-    for p, hour in enumerate((12, 13, 14)):
-        feed(hour, 50 * p)
-        m: list = []
-        run_doc_dedup_once(spark, in_dir, ck, out, metrics=m)
-        assert m, "no progress metrics captured"
-        per_pass.append(m)
-
-    def max_state(ms):
-        return max(r["state_rows"] for r in ms)
-
-    # wave 1: all 50 hashes in horizon
-    assert max_state(per_pass[0]) == 50, per_pass[0]
-    # waves 2-3: at most previous wave (not yet evicted at batch start)
-    # + current wave = 100; NEVER the lifetime-distinct 150
-    peak = max(max_state(m) for m in per_pass)
-    assert peak == 100, [m for m in per_pass]
-    # bytes are reported too (the SCALE.md measurement uses them)
-    assert any(r["state_bytes"] > 0 for m in per_pass for r in m)
-    # and the sink kept every doc (all unique): dedup state bounded,
-    # output complete
-    assert spark.read.parquet(out).count() == 150
-
-
-def test_doc_stream_dedup_watermark_readmission(spark, tmp_path):
-    """The documented state/recall trade (doc_stream.py module docstring,
-    VERDICT r6 item 4): a duplicate whose hash state was evicted by the
-    watermark (event time advanced past first-seen ts + delay) is
-    RE-ADMITTED to the sink — bounded state costs late recall — and the
-    batch doc_exact_dedup pass over the sink catches exactly that row."""
-    from datetime import datetime
-
-    from team_goldo_combat_log_parser_spark.operators import text
-    from team_goldo_combat_log_parser_spark.streaming.doc_stream import (
-        DOC_STREAM_SCHEMA, run_doc_dedup_once)
-
-    in_dir = str(tmp_path / "in")
-    ck = str(tmp_path / "ck")
-    out = str(tmp_path / "out")
-
-    def feed(rows):
-        spark.createDataFrame(rows, DOC_STREAM_SCHEMA).coalesce(1) \
-            .write.mode("append").parquet(in_dir)
-
-    # pass 1: "alpha beta" first seen at 12:00; state expiry 12:10
-    feed([(0, "alpha beta", "en", "s0", 0, datetime(2026, 1, 1, 12, 0, 0))])
-    r1 = run_doc_dedup_once(spark, in_dir, ck, out).collect()
-    assert sorted(r["doc_id"] for r in r1) == [0]
-
-    # pass 2: unrelated doc at 13:00 advances the watermark to 12:50,
-    # past the 12:10 expiry — the alpha hash state is evicted
-    feed([(1, "filler text", "en", "s0", 0, datetime(2026, 1, 1, 13, 0, 0))])
-    r2 = run_doc_dedup_once(spark, in_dir, ck, out).collect()
-    assert sorted(r["doc_id"] for r in r2) == [0, 1]
-
-    # pass 3: the duplicate returns at 13:05 (within the watermark, but
-    # its state is gone) — re-admitted, as the module docstring trades
-    feed([(2, "alpha beta", "en", "s1", 0, datetime(2026, 1, 1, 13, 5, 0))])
-    r3 = run_doc_dedup_once(spark, in_dir, ck, out).collect()
-    assert sorted(r["doc_id"] for r in r3) == [0, 1, 2]
-
-    # the batch pass behind the stream catches the re-admitted copy:
-    # one hash row for "alpha beta" keeping doc 0 with 2 copies
-    spark.read.parquet(out).select(
-        "doc_id", "text", "lang", "source", "n_chars").coalesce(1) \
-        .write.mode("overwrite").parquet(str(tmp_path / "documents.parquet"))
-    dedup = {r["keep_doc_id"]: r["n_copies"]
-             for r in text.doc_exact_dedup(spark, str(tmp_path)).collect()}
-    assert dedup == {0: 2, 1: 1}

@@ -351,10 +351,9 @@ def _write_embeddings(path, ids, mat):
     pq.write_table(tbl, path)
 
 
-def test_ivf_model_trains_once_and_serves_from_parquet(spark, sf001,
-                                                       tmp_path):
+def test_ivf_model_trains_once_per_corpus(spark, sf001):
     """Train/serve split: two queries = one Lloyd training (in-memory
-    memo), and a persisted parquet model serves with ZERO trainings."""
+    memo), with equal rows."""
     from team_goldo_combat_log_parser_spark.operators import similarity as sim
 
     sim._ivf_model_cache.clear()
@@ -362,32 +361,25 @@ def test_ivf_model_trains_once_and_serves_from_parquet(spark, sf001,
     a = sim.emb_ivf_ann(spark, sf001).collect()
     b = sim.emb_ivf_ann(spark, sf001).collect()
     assert sim._ivf_train_stats["train_runs"] == n0 + 1
-    assert a == b
-    mp = str(tmp_path / "ivf_model")
     assert len(sim._ivf_model_cache) == 1
-    sim.save_ivf_model(spark, next(iter(sim._ivf_model_cache.values())), mp)
-    sim._ivf_model_cache.clear()
-    c = sim.emb_ivf_ann(spark, sf001, model_path=mp).collect()
-    assert sim._ivf_train_stats["train_runs"] == n0 + 1  # loaded, not trained
-    assert c == a
+    assert a == b
 
 
-def test_ivf_recall_monotone_in_nprobe(spark, sf001):
+def test_ivf_recall_monotone_in_nprobe(spark, sf001, monkeypatch):
     """More probed cells => recall vs brute force must not drop, and
     probing every cell must recover (nearly) the exact result — the
     measured recall-vs-nprobe curve, not just the single default point."""
-    from team_goldo_combat_log_parser_spark.operators.similarity import (
-        TOP_K, emb_cosine_topk, emb_ivf_ann)
-
     exact = {}
-    for r in emb_cosine_topk(spark, sf001).collect():
+    for r in similarity.emb_cosine_topk(spark, sf001).collect():
         exact.setdefault(r["qid"], set()).add(r["neighbor_id"])
 
     def recall(nprobe):
+        monkeypatch.setattr(similarity, "IVF_NPROBE", nprobe)
         got = {}
-        for r in emb_ivf_ann(spark, sf001, nprobe=nprobe).collect():
+        for r in similarity.emb_ivf_ann(spark, sf001).collect():
             got.setdefault(r["qid"], set()).add(r["neighbor_id"])
-        rs = [len(got.get(q, set()) & exact[q]) / TOP_K for q in exact]
+        rs = [len(got.get(q, set()) & exact[q]) / similarity.TOP_K
+              for q in exact]
         return sum(rs) / len(rs)
 
     # nprobe is clamped to the (derived) cell count, so 10**6 = all cells
@@ -398,15 +390,14 @@ def test_ivf_recall_monotone_in_nprobe(spark, sf001):
     assert rall >= 0.95, rall
 
 
-def test_ivf_scaled_k_beats_fixed_k_at_10x(spark, tmp_path):
+def test_ivf_scaled_k_beats_fixed_k_at_10x(spark, tmp_path, monkeypatch):
     """The sqrt(n) K rule as measurement (VERDICT r6 item 6): on a 10x
     planted-cluster corpus (n=4000, 64 overlapping clusters, noise 0.45)
-    the derived K (ivf_k_for(4000)=63) at the SAME scan fraction as the
-    legacy fixed config (nprobe/K = 4/16 -> nprobe=16/63) must recall at
-    least as much as fixed K=16 — finer cells track the clusters better
-    at equal candidate budget. Measured margins are wide (~0.98 vs
-    ~0.78); asserted with headroom. Ground truth is an independent numpy
-    brute force."""
+    the derived K (ivf_k_for(4000)=63) at the scan fraction of the old
+    fixed config (nprobe/K = 4/16 -> nprobe=16/63) must recall >= 0.9.
+    The fixed K=16 arm measured ~0.78 (BENCH/IVF_RECALL.md, row
+    fixed16); the derived K measures ~0.98. Ground truth is an
+    independent numpy brute force."""
     from team_goldo_combat_log_parser_spark.operators import similarity as sim
     from team_goldo_combat_log_parser_spark.sources.datagen import (
         clustered_embeddings)
@@ -429,26 +420,20 @@ def test_ivf_scaled_k_beats_fixed_k_at_10x(spark, tmp_path):
         exact[q] = set(sorted(exact[q],
                               key=lambda j: (-cos[q, j], j))[:sim.TOP_K])
 
-    def recall(**kw):
-        got = {}
-        for r in sim.emb_ivf_ann(spark, d, **kw).collect():
-            got.setdefault(r["qid"], set()).add(r["neighbor_id"])
-        rs = [len(got.get(q, set()) & exact[q]) / sim.TOP_K for q in exact]
-        return sum(rs) / len(rs)
-
+    assert sim.ivf_k_for(n) == 63
+    monkeypatch.setattr(sim, "IVF_NPROBE", 16)  # 16/63 ~ the old 4/16
     sim._ivf_model_cache.clear()
-    k_scaled = sim.ivf_k_for(n)
-    assert k_scaled == 63
-    np_eq = round(k_scaled * sim.IVF_NPROBE / sim.IVF_K)  # equal fraction
-    r_fixed = recall(k=sim.IVF_K, nprobe=sim.IVF_NPROBE)
-    r_scaled = recall(nprobe=np_eq)  # derived K
+    got = {}
+    for r in sim.emb_ivf_ann(spark, d).collect():
+        got.setdefault(r["qid"], set()).add(r["neighbor_id"])
     sim._ivf_model_cache.clear()
-    assert r_scaled >= r_fixed, (r_scaled, r_fixed)
-    assert r_scaled >= 0.9, r_scaled
+    rs = [len(got.get(q, set()) & exact[q]) / sim.TOP_K for q in exact]
+    recall = sum(rs) / len(rs)
+    assert recall >= 0.9, recall
 
 
 def test_ivf_small_gapped_corpus_matches_oracle(spark, tmp_path):
-    """Round-4 advice: n < IVF_K with non-contiguous vec_ids must not
+    """Round-4 advice: n < K with non-contiguous vec_ids must not
     KeyError in stride seeding — engine and sequential oracle agree."""
     import duckdb as ddb
 
@@ -622,81 +607,6 @@ def test_ivf_model_cache_invalidates_on_corpus_rewrite(spark, tmp_path):
     b = sim.emb_ivf_ann(spark, str(d)).collect()
     assert sim._ivf_train_stats["train_runs"] == n0 + 2  # retrained
     assert a != b  # new corpus, new answers — not the stale model
-    sim._ivf_model_cache.clear()
-
-
-def test_ivf_rejects_model_trained_on_wrong_corpus(spark, tmp_path):
-    """Round-6 advice: a model_path that LOADS fine but was trained on a
-    different corpus (wrong embedding dim) must be rejected up front and
-    retrained — not used as-is to fail later inside a matmul."""
-    from team_goldo_combat_log_parser_spark.operators import similarity as sim
-
-    rng = np.random.default_rng(19)
-    d16 = tmp_path / "c16"
-    d64 = tmp_path / "c64"
-    d16.mkdir()
-    d64.mkdir()
-    _write_embeddings(str(d16 / "embeddings.parquet"), list(range(30)),
-                      rng.normal(size=(30, 16)))
-    _write_embeddings(str(d64 / "embeddings.parquet"), list(range(30)),
-                      rng.normal(size=(30, 64)))
-    sim._ivf_model_cache.clear()
-    mp = str(tmp_path / "model16")
-    sim.emb_ivf_ann(spark, str(d16), model_path=mp).collect()  # persists 16-dim
-    sim._ivf_model_cache.clear()
-    n0 = sim._ivf_train_stats["train_runs"]
-    want = [tuple(r) for r in sim.emb_ivf_ann(spark, str(d64)).collect()]
-    sim._ivf_model_cache.clear()
-    # wrong-dim model on disk: must retrain and match the fresh result
-    got = [tuple(r)
-           for r in sim.emb_ivf_ann(spark, str(d64), model_path=mp).collect()]
-    assert sim._ivf_train_stats["train_runs"] == n0 + 2
-    assert got == want
-    sim._ivf_model_cache.clear()
-
-
-def test_ivf_rejects_model_with_mismatched_trained_k(spark, sf001,
-                                                     tmp_path):
-    """Round-8 advice: a persisted model trained at a PINNED smaller k
-    (legacy fixed IVF_K=16 deployments) must be rejected for a derived-k
-    request — cells <= k used to slip through the shape check and serve
-    stale quantization that the always-derives-k oracle could never
-    match. Also: a legacy model file without the trained_k stamp is
-    treated as mismatched (fail-safe)."""
-    from team_goldo_combat_log_parser_spark.operators import similarity as sim
-
-    sim._ivf_model_cache.clear()
-    mp = str(tmp_path / "model_k4")
-    # persist a k=4 model (4 < derived k for the sf001 corpus)
-    sim.emb_ivf_ann(spark, sf001, model_path=mp, k=4).collect()
-    sim._ivf_model_cache.clear()
-    n0 = sim._ivf_train_stats["train_runs"]
-    want = [tuple(r) for r in sim.emb_ivf_ann(spark, sf001).collect()]
-    sim._ivf_model_cache.clear()
-    got = [tuple(r)
-           for r in sim.emb_ivf_ann(spark, sf001, model_path=mp).collect()]
-    assert sim._ivf_train_stats["train_runs"] == n0 + 2  # both retrained
-    assert got == want
-    # the derived-k retrain overwrote the k=4 model with its own stamp:
-    # a repeat derived-k load now serves without training
-    sim._ivf_model_cache.clear()
-    again = [tuple(r)
-             for r in sim.emb_ivf_ann(spark, sf001, model_path=mp).collect()]
-    assert sim._ivf_train_stats["train_runs"] == n0 + 2
-    assert again == want
-    # legacy file without the stamp: loadable but k-unknown -> retrain
-    cents, tk = sim.load_ivf_model(spark, mp)
-    assert tk is not None
-    legacy = str(tmp_path / "model_legacy")
-    rows = [(int(i), [float(x) for x in cents[i]])
-            for i in range(cents.shape[0])]
-    (spark.createDataFrame(rows, "cell int, centroid array<double>")
-     .coalesce(1).write.mode("overwrite").parquet(legacy))
-    sim._ivf_model_cache.clear()
-    got2 = [tuple(r) for r in
-            sim.emb_ivf_ann(spark, sf001, model_path=legacy).collect()]
-    assert sim._ivf_train_stats["train_runs"] == n0 + 3
-    assert got2 == want
     sim._ivf_model_cache.clear()
 
 
