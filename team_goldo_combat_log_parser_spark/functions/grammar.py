@@ -191,12 +191,10 @@ def with_typed_columns(df: DataFrame) -> DataFrame:
         _pre_brace(F.expr("substring(tgt_raw, 2)")).alias("tgt_name"),
         _pre_brace(F.expr("substring(skill_raw, 2)")).alias("skill"),
         # --- typed ids (J2): numeric ids inside the braces — spell id from
-        # the skill field, verb/effect ids from the two braced groups of
-        # the effect field ("ApplyEffect {vid}: Damage {eid}")
+        # the skill field, effect id from the second braced group of the
+        # effect field ("ApplyEffect {vid}: Damage {eid}")
         F.regexp_extract(F.col("skill_raw"), r"\{(\d+)\}", 1)
         .try_cast("long").alias("spell_id"),
-        F.regexp_extract(effect, r"^[^{]*\{(\d+)\}", 1)
-        .try_cast("long").alias("verb_id"),
         F.regexp_extract(effect, r":[^{]*\{(\d+)\}", 1)
         .try_cast("long").alias("effect_id"),
         # --- amount grammar. The reference takes the leading digits /
@@ -247,6 +245,14 @@ def log_date(name: Column) -> Column:
     '_'-separated field (reference main.py:112: filename.split('_', 2)[1]),
     whatever the prefix before it."""
     return F.split(name, "_").getItem(1)
+
+
+def has_log_date(name: Column) -> Column:
+    """Whether ``log_date(name)`` exists and is the yyyy-MM-dd day that
+    ``with_timestamp`` parses; unlike either, it never raises (ANSI)."""
+    day = F.get(F.split(name, "_"), 1)
+    return F.try_to_timestamp(F.concat_ws(" ", day, F.lit("00:00:00.000")),
+                              F.lit("yyyy-MM-dd HH:mm:ss.SSS")).isNotNull()
 
 
 def with_identity_columns(df: DataFrame) -> DataFrame:

@@ -671,7 +671,7 @@ def emb_dup_clusters(spark: SparkSession, sf_dir: str,
     the banding equi-join, and localCheckpoint inside the loop cuts it
     off the per-sweep lineage.
     The DuckDB oracle resolves the same fixpoint as a recursive CTE over
-    the tabulated-banding pair oracle (golden/sketch_oracle.py)."""
+    the tabulated-banding pair oracle (sketch_oracle.py)."""
     from .text import _connected_components
 
     pairs = emb_cosine_near_dup(spark, sf_dir, threshold).select("a", "b")

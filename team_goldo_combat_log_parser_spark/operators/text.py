@@ -15,11 +15,8 @@ LSH banding turns the O(n^2) pair search into an equi-join on
 
 from __future__ import annotations
 
-import re
-
 import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .relational import load
@@ -49,6 +46,13 @@ def doc_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 BPE_ISH_RE = r"'(?:s|t|re|ve|m|ll|d)| ?[A-Za-z]+| ?[0-9]+| ?[^A-Za-z0-9\s']+|'+"
 
 
+def _ws_tokens() -> Column:
+    """Whitespace tokens of ``text``, ``split(trim(text), '\\s+')``: the
+    one tokenization rule of the SQL operators (the oracles'
+    ``regexp_split_to_array(trim(text), '\\s+')``)."""
+    return F.split(F.trim(F.col("text")), r"\s+")
+
+
 def doc_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token counting (T2 + T3 in one scan-only pass — absorbed the
     former doc_bpe_token_count entry so the full queries() registry fits
@@ -57,7 +61,7 @@ def doc_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     pre-tokenizer count, and the bpe/ws ratio (floor e6 — the fertility
     proxy a training-data pipeline budgets GPU hours with)."""
     d = load(spark, sf_dir, "documents")
-    toks = F.split(F.trim(F.col("text")), r"\s+")
+    toks = _ws_tokens()
     bpe = F.size(F.regexp_extract_all(F.col("text"), F.lit(BPE_ISH_RE), 0))
     return d.select(
         "doc_id",
@@ -73,7 +77,7 @@ def doc_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 def doc_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quality scoring: stopword density + length band (heuristic filter)."""
     d = load(spark, sf_dir, "documents")
-    toks = F.size(F.split(F.trim(F.col("text")), r"\s+"))
+    toks = F.size(_ws_tokens())
     stops = F.size(F.regexp_extract_all(F.col("text"), F.lit(STOPWORDS_RE), 0))
     score = F.round(stops.cast("double") / toks.cast("double"), 6)
     return d.select(
@@ -92,16 +96,21 @@ LANG_MARKERS = [
 ]
 
 
-def doc_lang_guess(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Language-ID heuristic: first marker-set with >=2 hits wins, else en.
-    Agreement with the labeled `lang` column is reported per language."""
-    d = load(spark, sf_dir, "documents")
+def _lang_guess() -> Column:
+    """The first marker set with >= 2 hits in ``text`` wins, else 'en'."""
     guess = F.lit("en")
     for lang, pat in reversed(LANG_MARKERS):
         hits = F.size(F.regexp_extract_all(F.col("text"), F.lit(pat), 0))
         guess = F.when(hits >= 2, F.lit(lang)).otherwise(guess)
+    return guess
+
+
+def doc_lang_guess(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Language-ID heuristic: first marker-set with >=2 hits wins, else en.
+    Agreement with the labeled `lang` column is reported per language."""
+    d = load(spark, sf_dir, "documents")
     return (
-        d.withColumn("guess", guess)
+        d.withColumn("guess", _lang_guess())
         .groupBy("lang")
         .agg(F.count(F.lit(1)).alias("n_docs"),
              F.sum((F.col("guess") == F.col("lang")).cast("int"))
@@ -190,106 +199,144 @@ _AB = [(((17 + 13 * i) * 2654435761) % _P or 1, ((23 + 7 * i) * 40503) % _P)
        for i in range(MINHASH_K)]
 
 
-# Signatures are numpy inside a pandas UDF because per-shingle JVM
+# Signatures are numpy inside Arrow-batch UDFs because per-shingle JVM
 # expression work measured slower on this engine (explode + 32
 # min-aggregates, or higher-order functions that evaluate interpreted per
 # element — BENCH/MINHASH_AB.md, OPTIMIZATION_r09.md). One vectorized
-# pass per Arrow batch computes the exact xxh64 over 3-byte windows and
-# the 32 lane minima, with zero shuffles.
+# pass per Arrow batch hashes every shingle or token of the batch with
+# the exact xxh64 below, with zero shuffles.
 
 
 _U64 = (1 << 64) - 1
 _XP1 = 0x9E3779B185EBCA87
 _XP2 = 0xC2B2AE3D27D4EB4F
 _XP3 = 0x165667B19E3779F9
+_XP4 = 0x85EBCA77C2B2AE63
 _XP5 = 0x27D4EB2F165667C5
 _XXH_SEED = 42  # Spark's fixed xxhash64 seed
 
 
-def _xxh64_3b_vec(b0, b1, b2):
-    """Vectorized XXH64 (seed 42) of exactly-3-byte inputs — the tail
-    path of the public spec (no 8/4-byte blocks for n=3): per byte
-    h ^= b*P5; h = rotl(h,11)*P1, then the avalanche. uint64 numpy
-    arithmetic wraps mod 2^64 exactly like the spec's masking; parity
-    with Spark's xxhash64 is pinned in tests (and golden/xxh.py is the
-    scalar reference)."""
-    p1 = np.uint64(_XP1)
-    p5 = np.uint64(_XP5)
-    h = np.uint64((_XXH_SEED + _XP5 + 3) & _U64)
-    h = np.full(b0.shape, h, dtype=np.uint64)
-    for b in (b0, b1, b2):
-        h ^= b.astype(np.uint64) * p5
-        h = ((h << np.uint64(11)) | (h >> np.uint64(53))) * p1
-    h ^= h >> np.uint64(33)
-    h *= np.uint64(_XP2)
-    h ^= h >> np.uint64(29)
-    h *= np.uint64(_XP3)
-    h ^= h >> np.uint64(32)
-    return h
+def _rotl(x, r: int):
+    """Rotate the uint64 array ``x`` left by ``r`` bits, in place."""
+    t = x >> np.uint64(64 - r)
+    x <<= np.uint64(r)
+    x |= t
+    return x
 
 
-def _minhash_lanes_np(h31, sh_offs):
-    """32 affine-permutation minima per doc from a flat uint64 array of
-    31-bit shingle hashes and doc boundary offsets (len n_docs+1)."""
-    p = np.uint64(_P)
-    out = np.empty((len(sh_offs) - 1, MINHASH_K), dtype=np.int64)
-    starts = sh_offs[:-1]
-    for i, (a, b) in enumerate(_AB):
-        lane = (h31 * np.uint64(a) + np.uint64(b)) % p
-        out[:, i] = np.minimum.reduceat(lane, starts).astype(np.int64)
+def _xxh_round(acc, lane):
+    x = _rotl(acc + lane * np.uint64(_XP2), 31)
+    x *= np.uint64(_XP1)
+    return x
+
+
+def _xxh64_spans(buf: np.ndarray, starts: np.ndarray,
+                 lens: np.ndarray) -> np.ndarray:
+    """XXH64, seed 42, of every byte span ``buf[s:s + n]`` (uint64 out).
+
+    The spec's steps (32-byte stripes, 8-byte words, a 4-byte word, single
+    bytes, the avalanche) depend only on the span length, so they run once
+    per distinct length as straight-line numpy over all its spans, words
+    read through unaligned little-endian views of ``buf``."""
+    p1, p2, p3, p4, p5 = (np.uint64(p) for p in (_XP1, _XP2, _XP3, _XP4,
+                                                  _XP5))
+    w8, w4 = (np.ndarray((max(len(buf) - k + 1, 0),), dtype=f"<u{k}",
+                         buffer=buf, strides=(1,)) for k in (8, 4))
+    out = np.empty(len(starts), dtype=np.uint64)
+    counts = np.bincount(lens)
+    for n in np.flatnonzero(counts).tolist():
+        sel = (slice(None) if counts[n] == len(lens)
+               else np.flatnonzero(lens == n))
+        s = starts[sel]
+        i = 0
+        if n >= 32:
+            v = [np.full(len(s), x & _U64, dtype=np.uint64) for x in
+                 (_XXH_SEED + _XP1 + _XP2, _XXH_SEED + _XP2, _XXH_SEED,
+                  _XXH_SEED - _XP1)]
+            while i + 32 <= n:
+                v = [_xxh_round(v[j], w8[i + 8 * j:][s]) for j in range(4)]
+                i += 32
+            h = sum(_rotl(x.copy(), r) for x, r in zip(v, (1, 7, 12, 18)))
+            for acc in v:
+                h ^= _xxh_round(np.uint64(0), acc)
+                h *= p1
+                h += p4
+            h += np.uint64(n)
+        else:
+            h = np.full(len(s), (_XXH_SEED + _XP5 + n) & _U64,
+                        dtype=np.uint64)
+        while i + 8 <= n:
+            h ^= _xxh_round(np.uint64(0), w8[i:][s])
+            h = _rotl(h, 27) * p1 + p4
+            i += 8
+        if i + 4 <= n:
+            h ^= w4[i:][s].astype(np.uint64) * p1
+            h = _rotl(h, 23) * p2 + p3
+            i += 4
+        while i < n:
+            h ^= buf[i:][s].astype(np.uint64) * p5
+            h = _rotl(h, 11)
+            h *= p1
+            i += 1
+        h ^= h >> np.uint64(33)
+        h *= p2
+        h ^= h >> np.uint64(29)
+        h *= p3
+        h ^= h >> np.uint64(32)
+        out[sel] = h
     return out
 
 
-def _minhash_sig_rows(texts: pd.Series) -> pd.DataFrame:
-    """Per-batch signature computation: ASCII docs of
-    >=3 chars take the fully vectorized path (flat byte buffer, 3-byte
-    windows, vectorized xxh64, reduceat minima); NULL, short, and
-    non-ASCII docs take a per-doc fallback through golden/xxh.py that
-    keeps Spark's shingling semantics (substring over
-    sequence(1, greatest(length - 2, 1))): NULL -> xxhash64(NULL), the
-    bare seed; len<3 -> one whole-text shingle; non-ASCII -> per-CHAR
-    windows hashed over their UTF-8 bytes."""
-    from ..golden.xxh import xxh64
+def _utf8_spans(arr) -> tuple[np.ndarray, np.ndarray]:
+    """(UTF-8 bytes, int64 offsets from 0) of a pyarrow string array; a
+    null slot is an empty span."""
+    _, offs, data = arr.buffers()
+    offs = np.frombuffer(offs, dtype=np.int32)[
+        arr.offset:arr.offset + len(arr) + 1].astype(np.int64)
+    return np.frombuffer(data, dtype=np.uint8)[offs[0]:offs[-1]], \
+        offs - offs[0]
 
-    n = len(texts)
-    out = np.empty((n, MINHASH_K), dtype=np.int64)
-    fast_rows: list[int] = []
-    fast_bufs: list[bytes] = []
-    fast_lens: list[int] = []
-    mask31 = (1 << 31) - 1
-    for r, t in enumerate(texts):
-        if t is None:
-            h = np.array([_XXH_SEED & mask31], dtype=np.uint64)
-            out[r] = _minhash_lanes_np(h, np.array([0, 1]))[0]
-            continue
-        b = t.encode("utf-8")
-        if len(b) == len(t) and len(t) >= 3:
-            fast_rows.append(r)
-            fast_bufs.append(b)
-            fast_lens.append(len(b))
-        else:
-            if len(t) < 3:
-                hs = [xxh64(b, _XXH_SEED) & mask31]
-            else:  # non-ASCII: 3-CHAR windows over UTF-8 bytes
-                hs = [xxh64(t[i:i + 3].encode("utf-8"), _XXH_SEED) & mask31
-                      for i in range(len(t) - 2)]
-            h = np.asarray(hs, dtype=np.uint64)
-            out[r] = _minhash_lanes_np(h, np.array([0, len(h)]))[0]
-    if fast_rows:
-        buf = np.frombuffer(b"".join(fast_bufs), dtype=np.uint8)
-        lens = np.asarray(fast_lens, dtype=np.int64)
-        offs = np.zeros(len(lens) + 1, dtype=np.int64)
-        np.cumsum(lens, out=offs[1:])
-        valid = np.ones(len(buf), dtype=bool)
-        valid[offs[1:] - 1] = False
-        valid[offs[1:] - 2] = False
-        widx = np.flatnonzero(valid)
-        h31 = (_xxh64_3b_vec(buf[widx], buf[widx + 1], buf[widx + 2])
-               & np.uint64(mask31))
-        sh_offs = np.zeros(len(lens) + 1, dtype=np.int64)
-        np.cumsum(lens - 2, out=sh_offs[1:])
-        out[np.asarray(fast_rows)] = _minhash_lanes_np(h31, sh_offs)
-    return pd.DataFrame({f"mh{i}": out[:, i] for i in range(MINHASH_K)})
+
+def _minhash_batches(batches):
+    """(doc_id, text) Arrow batches -> (doc_id, mh0..mh31) batches, with
+    Spark's shingling (substring over sequence(1, greatest(length - 2,
+    1)), in characters): a doc of c >= 3 characters has c - 2 windows,
+    each from a character start (a UTF-8 lead byte) to the start 3
+    characters later; a shorter doc is one whole-text shingle; NULL
+    hashes to xxhash64(NULL), the bare seed. Every window of a batch
+    goes through one ``_xxh64_spans`` call; reduceat takes the minima."""
+    import pyarrow as pa
+
+    for batch in batches:
+        texts = batch.column(1)
+        buf, offs = _utf8_spans(texts)
+        # character starts, then len(buf) as the end of the last one
+        starts = np.flatnonzero(np.append((buf & 0xC0) != 0x80, True))
+        first = np.searchsorted(starts, offs)  # each doc's first char
+        nc = np.diff(first)
+        # a window starts at every character but each doc's last two
+        window = np.ones(len(starts) - 1, dtype=bool)
+        window[first[1:][nc >= 1] - 1] = False
+        window[first[1:][nc >= 2] - 2] = False
+        w = np.flatnonzero(window)
+        short = np.flatnonzero(nc < 3)
+        h = _xxh64_spans(buf, np.concatenate([starts[w], offs[short]]),
+                         np.concatenate([starts[3:][w] - starts[w],
+                                         offs[short + 1] - offs[short]]))
+        h[len(w):][texts.is_null().to_numpy(zero_copy_only=False)[short]] \
+            = _XXH_SEED
+        h &= np.uint64((1 << 31) - 1)
+        docs = np.concatenate([np.flatnonzero(nc >= 3), short])
+        k = nc[nc >= 3] - 2
+        seg = np.concatenate([np.cumsum(k) - k,
+                              len(w) + np.arange(len(short))])
+        lanes = np.empty((MINHASH_K, len(texts)), dtype=np.int64)
+        for lane, (a, b) in zip(lanes, _AB):
+            lane[docs] = np.minimum.reduceat(
+                (h * np.uint64(a) + np.uint64(b)) % np.uint64(_P), seg)
+        yield pa.RecordBatch.from_arrays(
+            [batch.column(0), *map(pa.array, lanes)],
+            names=["doc_id"] + [f"mh{i}" for i in range(MINHASH_K)])
 
 
 def doc_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -299,16 +346,10 @@ def doc_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     shingles, so no set-dedup is needed."""
     from pyspark.sql import types as T
 
-    d = load(spark, sf_dir, "documents")
-    sig_udf = F.pandas_udf(
-        _minhash_sig_rows,
-        T.StructType([T.StructField(f"mh{i}", T.LongType())
-                      for i in range(MINHASH_K)]))
-    # non-deterministic mark: stop the optimizer from duplicating the UDF
-    # below future filters (guide par.4.4); values are deterministic
-    sig_udf = sig_udf.asNondeterministic()
-    return (d.select("doc_id", sig_udf("text").alias("_s"))
-            .select("doc_id", "_s.*"))
+    d = load(spark, sf_dir, "documents").select("doc_id", "text")
+    return d.mapInArrow(_minhash_batches, T.StructType(
+        [d.schema["doc_id"]] + [T.StructField(f"mh{i}", T.LongType())
+                                for i in range(MINHASH_K)]))
 
 
 def doc_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -366,58 +407,52 @@ def doc_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Java \s is ASCII-only: [ \t\n\x0B\f\r]. Python's \s would additionally
-# match unicode spaces (e.g. \xa0), which Spark's split does NOT.
-_JAVA_WS_RE = re.compile("[ \t\n\x0b\f\r]+")
+# Java \s is ASCII-only: [ \t\n\x0B\f\r]. RE2's \s would omit \x0B, and
+# Python's would additionally match unicode spaces (e.g. \xa0), which
+# Spark's split does NOT — so the class is spelled out.
+_JAVA_WS_RE = "[ \t\n\x0b\f\r]+"
+
+
+def _simhash_batches(batches):
+    """(doc_id, text) Arrow batches -> (doc_id, simhash) batches: pyarrow
+    tokenizes, every token of a batch hashes in one ``_xxh64_spans``
+    call, and ``np.add.reduceat`` counts each doc's votes, bit by bit."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    for batch in batches:
+        text_col = batch.column(1)
+        keep = text_col.is_valid()  # explode(split(trim(NULL))): no row
+        toks = pc.split_pattern_regex(
+            pc.utf8_trim(text_col.filter(keep), " "), _JAVA_WS_RE)
+        buf, offs = _utf8_spans(toks.flatten())
+        h = _xxh64_spans(buf, offs[:-1], np.diff(offs))
+        doc_offs = np.asarray(toks.offsets, dtype=np.int64)
+        doc_offs = doc_offs - doc_offs[0]
+        n_tok = np.diff(doc_offs)
+        sims = np.zeros(len(n_tok), dtype=np.int64)
+        for b in range(63):
+            ones = np.add.reduceat((h >> np.uint64(b)) & np.uint64(1),
+                                   doc_offs[:-1])
+            sims |= (2 * ones > n_tok).astype(np.int64) << b
+        yield pa.RecordBatch.from_arrays(
+            [batch.column(0).filter(keep).cast(pa.int64()), pa.array(sims)],
+            names=["doc_id", "simhash"])
 
 
 def doc_simhash64(spark: SparkSession, sf_dir: str) -> DataFrame:
     """64-bit SimHash over whitespace tokens:
     token -> xxhash64 -> per-bit +/- vote -> sign vector -> u64.
 
-    One mapInPandas pass with zero shuffles (a 63-vote JVM aggregate
+    One mapInArrow pass with zero shuffles (a 63-vote JVM aggregate
     over exploded tokens measured slower, OPTIMIZATION_r09.md) that keeps
     Spark's ``split(trim(text), '\\s+')`` tokenization: trim strips 0x20
     only, split keeps leading/trailing empty tokens, and the class is
-    the ASCII [ \\t\\n\\x0B\\f\\r]+. Tokens hash through a memoized
-    golden/xxh.py; bit 63 is never set (the result stays a positive
+    ``_JAVA_WS_RE``. Bit 63 is never set (the result stays a positive
     long). A NULL-text doc emits no row, like explode(NULL)."""
     d = load(spark, sf_dir, "documents")
-
-    def compute(batches):
-        from ..golden.xxh import xxh64
-
-        memo: dict[str, int] = {}
-        shifts = np.arange(63, dtype=np.uint64)
-        pow2 = np.uint64(1) << shifts
-        for pdf in batches:
-            ids: list[int] = []
-            sims: list[int] = []
-            for doc_id, t in zip(pdf["doc_id"], pdf["text"]):
-                if t is None:
-                    continue  # explode(split(trim(NULL))) emits no row
-                if len(memo) > 1_000_000:
-                    # bound the per-task hash memo on pathological
-                    # vocabularies (normal corpora never get close)
-                    memo.clear()
-                toks = _JAVA_WS_RE.split(t.strip(" "))
-                hs = np.empty(len(toks), dtype=np.uint64)
-                for j, tok in enumerate(toks):
-                    h = memo.get(tok)
-                    if h is None:
-                        h = xxh64(tok.encode("utf-8"), _XXH_SEED)
-                        memo[tok] = h
-                    hs[j] = h
-                c = ((hs[:, None] >> shifts) & np.uint64(1)).sum(axis=0)
-                votes = 2 * c.astype(np.int64) - len(toks)
-                ids.append(doc_id)
-                sims.append(int(pow2[votes > 0].sum()))
-            yield pd.DataFrame({"doc_id": pd.Series(ids, dtype="int64"),
-                                "simhash": pd.Series(sims,
-                                                     dtype="int64")})
-
     return (d.select("doc_id", "text")
-            .mapInPandas(compute, "doc_id long, simhash long")
+            .mapInArrow(_simhash_batches, "doc_id long, simhash long")
             .orderBy("doc_id"))
 
 
@@ -583,20 +618,15 @@ def doc_clean_corpus(spark: SparkSession, sf_dir: str,
     cannot be salted, so a pathological single-source corpus serializes
     stage 4. The plan is two exchanges and zero Python UDFs."""
     d = load(spark, sf_dir, "documents")
-    toks = F.size(F.split(F.trim(F.col("text")), r"\s+"))
+    toks = F.size(_ws_tokens())
     stops = F.size(F.regexp_extract_all(F.col("text"), F.lit(STOPWORDS_RE), 0))
-
-    guess = F.lit("en")
-    for lang, pat in reversed(LANG_MARKERS):
-        hits = F.size(F.regexp_extract_all(F.col("text"), F.lit(pat), 0))
-        guess = F.when(hits >= 2, F.lit(lang)).otherwise(guess)
 
     w_dup = Window.partitionBy(F.md5("text")).orderBy("doc_id")
     staged = (
         d.withColumn("n_tokens", toks)
         .withColumn("stop_ratio",
                     F.round(stops.cast("double") / toks.cast("double"), 6))
-        .withColumn("guess", guess)
+        .withColumn("guess", _lang_guess())
         .withColumn("dup_rank", F.row_number().over(w_dup))
     )
     kept = staged.filter(
@@ -630,7 +660,7 @@ def doc_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     the per-doc base is doc_id-to-doc_id (co-partitioned by the same
     hash). No Python UDFs."""
     d = load(spark, sf_dir, "documents")
-    t = d.select("doc_id", F.split(F.trim(F.col("text")), r"\s+").alias("toks"))
+    t = d.select("doc_id", _ws_tokens().alias("toks"))
     n = F.size("toks")
     base = t.select(
         "doc_id",
@@ -732,7 +762,7 @@ def doc_decontaminate(spark: SparkSession, sf_dir: str,
     # distinct word n-grams per doc; docs shorter than n tokens emit none
     grams = (
         d.select("doc_id",
-                 F.split(F.trim(F.col("text")), r"\s+").alias("toks"))
+                 _ws_tokens().alias("toks"))
         .select("doc_id", F.explode(F.expr(
             f"transform(slice(toks, 1, greatest(size(toks) - {n - 1}, 0)),"
             f" (x, i) -> concat_ws(' ', slice(toks, i + 1, {n})))"
@@ -772,7 +802,7 @@ def doc_mix_weights(spark: SparkSession, sf_dir: str,
     corpus size; no skew surface (the agg output, not the scan, carries
     the per-source key)."""
     d = load(spark, sf_dir, "documents")
-    toks = F.size(F.split(F.trim(F.col("text")), r"\s+"))
+    toks = F.size(_ws_tokens())
     per = (
         d.select("source", toks.alias("n_tokens"))
         .groupBy("source")
@@ -865,7 +895,7 @@ def doc_unigram_nll(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents")
     toks = d.select(
         "doc_id",
-        F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("tok"))
+        F.explode(_ws_tokens()).alias("tok"))
     vocab = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("c"))
     total = vocab.agg(F.sum("c").alias("n_corpus"))
     scored = toks.join(F.broadcast(vocab), "tok").crossJoin(F.broadcast(total))
@@ -903,7 +933,7 @@ def doc_pack_sequences(spark: SparkSession, sf_dir: str,
     running sum cannot be salted, so packing parallelism = number of
     sources). No Python UDFs."""
     d = load(spark, sf_dir, "documents")
-    toks = F.size(F.split(F.trim(F.col("text")), r"\s+"))
+    toks = F.size(_ws_tokens())
     base = d.select("doc_id", "source", toks.alias("n_tokens"))
     w = (Window.partitionBy("source").orderBy("doc_id")
          .rowsBetween(Window.unboundedPreceding, Window.currentRow))
@@ -936,14 +966,10 @@ def doc_corpus_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     pass. Scan-dominated; no skew surface beyond the hot-source
     partial aggs, which map-side combine collapses."""
     d = load(spark, sf_dir, "documents")
-    toks = F.size(F.split(F.trim(F.col("text")), r"\s+"))
-    guess = F.lit("en")
-    for lang, pat in reversed(LANG_MARKERS):
-        hits = F.size(F.regexp_extract_all(F.col("text"), F.lit(pat), 0))
-        guess = F.when(hits >= 2, F.lit(lang)).otherwise(guess)
+    toks = F.size(_ws_tokens())
     per = (
         d.select("source", "lang", toks.alias("n_tokens"),
-                 F.md5("text").alias("th"), guess.alias("guess"))
+                 F.md5("text").alias("th"), _lang_guess().alias("guess"))
         .groupBy("source")
         .agg(F.count(F.lit(1)).alias("n_docs"),
              F.countDistinct("th").alias("n_unique_texts"),

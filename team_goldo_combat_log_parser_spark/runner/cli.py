@@ -12,6 +12,8 @@ five event sinks + aggregate tables partitioned by (commit, log_date) —
 log_date is the date field of log_id (``grammar.log_date``, the rule the
 parse uses), so readers prune by day —
 and commits a manifest record with per-sink counts (the run's metrics).
+A source whose file name has no such date (``grammar.has_log_date``) is
+left out of the commit and named in the printed ``rejected_sources``.
 With an ``iceberg:<catalog.namespace>`` output, tables are written through
 the Iceberg catalog instead (per-commit overwrite = the same exactly-once
 replay semantics; jar-gated, like the read branch).
@@ -148,9 +150,16 @@ def main(argv: list[str] | None = None) -> int:
 
     tokens = read_tokens(spark, args.input)
     todo = filter_unprocessed(tokens, manifest)
-    sources = [r["source"] for r in todo.select("source").distinct().collect()]
+    # a source without a log date would fail the parse of every source
+    found = todo.select("source", grammar.has_log_date(F.col("source"))
+                        .alias("ok")).distinct().collect()
+    sources = [r["source"] for r in found if r["ok"]]
+    rejected = sorted(r["source"] for r in found if not r["ok"])
+    if rejected:
+        todo = todo.filter(~F.col("source").isin(rejected))
     if not sources:
-        print(json.dumps({"status": "up-to-date", "new_sources": 0}))
+        print(json.dumps({"status": "up-to-date", "new_sources": 0,
+                          "rejected_sources": rejected}))
         return 0
 
     res = run_pipeline(spark, todo)
@@ -185,6 +194,7 @@ def main(argv: list[str] | None = None) -> int:
                              commit_id=commit_id)
     print(json.dumps({"status": "committed", "commit_id": commit,
                       "new_sources": len(sources), "counts": counts,
+                      "rejected_sources": rejected,
                       "gc_orphans": gc_removed}))
     return 0
 

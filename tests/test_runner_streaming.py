@@ -139,6 +139,30 @@ def test_cli_log_date_from_any_prefix(spark, tmp_path):
         assert days == {"log_date=2012-08-01"}, (table, days)
 
 
+def test_cli_rejects_sources_without_log_date(spark, tmp_path):
+    """A source whose name has no '_' date field, or one that is not a
+    day, is left out and named; the good log next to it still commits."""
+    from team_goldo_combat_log_parser_spark.runner import cli
+
+    name = "combat_2012-08-01_20_00_00_advA.txt"
+    lines = dict(dg.adversarial_logs())[name]
+    bad = ["raidlog.txt", "combat_notadate_x.txt"]
+    dg.write_token_table(spark, [(name, lines)] + [(b, lines) for b in bad],
+                         str(tmp_path / "tokens"), 1)
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        rc = cli.main(["--input", str(tmp_path / "tokens"),
+                       "--output", str(tmp_path / "out"),
+                       "--checkpoint", str(tmp_path / "ckpt")])
+    summary = json.loads(buf.getvalue().strip().splitlines()[-1])
+    assert rc == 0 and summary["status"] == "committed"
+    assert summary["new_sources"] == 1 and summary["counts"]["pulls"] == 2
+    assert summary["rejected_sources"] == sorted(bad)
+    with open(tmp_path / "ckpt" / "manifest"
+              / f"{summary['commit_id']}.json") as fh:
+        assert json.loads(fh.readline())["sources"] == [name]
+
+
 def test_streaming_pulls_match_batch(spark, tmp_path):
     logs = dg.synth_corpus(dg.GenConfig(n_logs=3, fights_per_log=3,
                                         rows_per_fight=60, seed=11))

@@ -714,38 +714,58 @@ def _simhash_reference(spark, sf_dir):
     return sorted(out)
 
 
+def test_xxh64_spans_matches_reference():
+    """The vectorized kernel equals golden/xxh.py for every length
+    0-160 (stripe, 8-byte, 4-byte and byte tails), several spans per
+    length at unaligned starts, one of them ending the buffer."""
+    from team_goldo_combat_log_parser_spark.golden.xxh import xxh64
+
+    rng = np.random.default_rng(5)
+    buf = rng.integers(0, 256, 4096, dtype=np.uint8)
+    lens = np.repeat(np.arange(161), 3)
+    starts = rng.integers(0, len(buf) - lens)
+    starts[-1] = len(buf) - lens[-1]
+    got = text._xxh64_spans(buf, starts, lens)
+    assert [int(h) for h in got] == [
+        xxh64(buf[s:s + n].tobytes(), 42) for s, n in zip(starts, lens)]
+
+
 def test_minhash_arrow_mode_bit_identical(spark, sf01):
-    """The numpy signature path (vectorized xxh64 over 3-byte windows,
-    32 lane minima) reproduces the golden/xxh.py reference bit-for-bit
-    on the real corpus."""
+    """The numpy signature path (vectorized xxh64 over 3-character
+    windows, 32 lane minima) reproduces the golden/xxh.py reference
+    bit-for-bit on the real corpus."""
     got = sorted(tuple(r) for r in text.doc_minhash_signatures(
         spark, sf01).collect())
     assert len(got) > 0 and got == _minhash_reference(spark, sf01)
 
 
 def test_minhash_arrow_mode_edge_docs(spark, tmp_path):
-    """The signature's fallback lanes match the reference: NULL text
+    """The signature's edge windows match the reference: NULL text
     (a signature row from the bare-seed hash, not a dropped doc), len<3
     (one whole-text shingle), non-ASCII (3-char windows hashed over
-    UTF-8 bytes), and empty text."""
+    UTF-8 bytes, 2- to 4-byte characters), empty text, and a word
+    longer than a 32-byte stripe."""
     rows = [(0, "s", "the quick brown fox jumps over the lazy dog"),
             (1, "s", None),
             (2, "s", "ab"),
             (3, "s", ""),
             (4, "s", "café naïve résumé déjà vu"),
             (5, "s", "x"),
-            (6, "s", "éé")]
+            (6, "s", "éé"),
+            (7, "s", "𝄞𝄞𝄞"),
+            (8, "s", "日本"),
+            (9, "s", "antidisestablishmentarianism-supercalifragilistic")]
     spark.createDataFrame(
         rows, "doc_id long, source string, text string"
     ).coalesce(1).write.mode("overwrite").parquet(
         str(tmp_path / "documents.parquet"))
     got = sorted(tuple(r) for r in text.doc_minhash_signatures(
         spark, str(tmp_path)).collect())
-    assert len(got) == 7 and got == _minhash_reference(spark, str(tmp_path))
+    assert len(got) == 10 and got == _minhash_reference(spark, str(tmp_path))
 
 
 def test_simhash_arrow_mode_bit_identical(spark, sf01):
-    """The mapInPandas simhash reproduces the golden/xxh.py reference
+    """The mapInArrow simhash reproduces the golden/xxh.py reference
     bit-for-bit on the real corpus."""
     got = sorted(tuple(r) for r in text.doc_simhash64(spark, sf01).collect())
     assert len(got) > 0 and got == _simhash_reference(spark, sf01)
@@ -762,14 +782,17 @@ def test_simhash_arrow_mode_edge_docs(spark, tmp_path):
             (4, "s", "x\xa0y"),                  # nbsp is ONE token
             (5, "s", ""),                        # one empty token
             (6, "s", "\x0b a \x0c"),             # VT/FF are whitespace
-            (7, "s", "caf\xe9 na\xefve")]        # non-ascii token bytes
+            (7, "s", "caf\xe9 na\xefve"),        # non-ascii token bytes
+            (8, "s", "\U0001d11e\U0001d11e\U0001d11e"),  # 4-byte chars
+            (9, "s", "\u65e5\u672c"),               # 2-char non-ascii doc
+            (10, "s", "x " + "y" * 40 + " z")]   # token past one stripe
     spark.createDataFrame(
         rows, "doc_id long, source string, text string"
     ).coalesce(1).write.mode("overwrite").parquet(
         str(tmp_path / "documents.parquet"))
     got = sorted(tuple(r) for r in text.doc_simhash64(
         spark, str(tmp_path)).collect())
-    assert len(got) == 7 and got == _simhash_reference(spark, str(tmp_path))
+    assert len(got) == 10 and got == _simhash_reference(spark, str(tmp_path))
 
 
 def test_minhash_signature_has_no_shuffle(spark, sf01):
