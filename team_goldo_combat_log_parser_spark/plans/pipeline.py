@@ -129,10 +129,3 @@ def run_pipeline(
 
 # NOTE: sink materialization lives in runner/cli.py (`run` + Observation
 # row counts — ONE job per sink, no write-then-recount re-execution).
-
-def token_equality_violations(token_df: DataFrame) -> int:
-    """Per-row invariant (BASELINE.json): retokenize(detokenize(tokens))
-    must equal tokens. Returns the number of violating rows (expect 0)."""
-    df = grammar.detokenize_lines(token_df)
-    df = df.withColumn("tokens2", grammar.retokenize_udf(F.col("line")))
-    return df.filter(F.col("tokens") != F.col("tokens2")).count()

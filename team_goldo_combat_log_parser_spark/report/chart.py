@@ -10,8 +10,8 @@ the raw log.  This module reproduces exactly that read path: filter the
 pull_json output to ONE (log_id, fight_seq), ``from_json``-decode the
 blob, and explode/aggregate the decoded struct into one long-format
 DataFrame that carries all nine tables (section column = which gviz
-table the row belongs to).  ``report.gviz`` renders the long frame into
-the gviz DataTable JSON shape the reference's templates embed.
+table the row belongs to); the frame itself is the report, served as the
+``combat_chart`` registry query.
 
 Scale shape: the blob join/filter is a partition-prunable point lookup
 (at 100 TB the pulls table is partitioned by log_date, so the scan

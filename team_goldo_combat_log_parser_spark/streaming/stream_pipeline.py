@@ -267,7 +267,8 @@ def stream_pulls(tokens_stream: DataFrame,
 
 def stream_batch_metrics(query) -> list[dict]:
     """Per-batch ops metrics from a streaming query's progress log: rows
-    in, pulls out (the ``goldo_pulls`` observation attached by
+    in, rows dropped for a source without a log date and pulls out (the
+    ``goldo_input`` and ``goldo_pulls`` observations attached by
     ``run_stream_once``), state-store row counts, and trigger latency —
     the numbers a production deployment alerts on.
 
@@ -281,12 +282,15 @@ def stream_batch_metrics(query) -> list[dict]:
         # always via the JSON form: the live object holds Row values
         # (no .get) inside observedMetrics; the JSON is plain dicts
         d = json.loads(p.json) if hasattr(p, "json") else p
-        om = (d.get("observedMetrics") or {}).get("goldo_pulls") or {}
+        om = d.get("observedMetrics") or {}
         so = d.get("stateOperators") or []
         rows.append({
             "batch_id": d.get("batchId"),
             "rows_in": int(d.get("numInputRows") or 0),
-            "pulls_out": int(om.get("pulls_out") or 0),
+            "rejected_rows": int((om.get("goldo_input") or {})
+                                 .get("rejected_rows") or 0),
+            "pulls_out": int((om.get("goldo_pulls") or {})
+                             .get("pulls_out") or 0),
             "state_rows": sum(int(s.get("numRowsTotal") or 0) for s in so),
             "state_bytes": sum(int(s.get("memoryUsedBytes") or 0)
                                for s in so),
@@ -329,6 +333,12 @@ def run_stream_once(spark, input_dir: str, checkpoint_dir: str,
     test_streaming_state_survives_restart_mid_fight)."""
     schema = "doc_id string, tokens array<int>, n_tok int, source string"
     stream = spark.readStream.schema(schema).parquet(input_dir)
+    # a source without a log date would fail every micro-batch it lands
+    # in (and the replay after it): drop its rows before the parse, as
+    # cli.main does, and count them per batch
+    dated = grammar.has_log_date(F.col("source"))
+    stream = stream.observe(
+        "goldo_input", F.count_if(~dated).alias("rejected_rows")).filter(dated)
     pulls = stream_pulls(stream, reorder_max_buffer=reorder_max_buffer)
     # observed metric rides each micro-batch's progress event — no extra
     # action, no second pass (pass ``metrics=[]`` to receive them)

@@ -1,9 +1,10 @@
-"""E3 chart composite + gviz renderer tests (reference main.py:375-557)."""
+"""E3 chart composite and E2 /results listing (reference main.py:333-557),
+read straight from the registry queries that serve them."""
 
-import json
+import io
+from contextlib import redirect_stdout
 
 import __spark_entry__ as entry_mod
-from team_goldo_combat_log_parser_spark.report import gviz
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -32,52 +33,17 @@ def test_chart_sections_complete(spark):
     assert per_skill == per_player > 0
 
 
-def test_gviz_render_shape(spark):
-    """pull_chart_tables emits the gviz DataTable JSON shape ({cols with
-    id/label/type, rows of {c:[{v:..}]}}) with the reference's column
-    labels and the bar charts' rate = amount / duration."""
-    df = _chart_df(spark)
-    out = gviz.pull_chart_tables(df)
-    assert out["pull_target"]
-    assert out["pull_duration_ms"] > 0
-    skills = out["skills"]
-    assert [c["label"] for c in skills["cols"]] == [
-        "Player", "Skill", "Hits", "Dodged", "Missed", "Total Damage"]
-    assert all(len(r["c"]) == len(skills["cols"]) for r in skills["rows"])
-    received = out["received"]
-    assert [c["id"] for c in received["cols"]] == [
-        "player", "attacker", "skill", "hit", "missed", "dodged",
-        "shielded", "resisted", "total_damage", "dmg_type"]
-    # bar DPS rows mirror the damage pie rows, divided by the duration
-    pie = out["damage_players"]["rows"]
-    bar = out["dps"]["rows"]
-    assert len(pie) == len(bar) >= 1
-    secs = out["pull_duration_ms"] / 1000.0
-    for p, b in zip(pie, bar):
-        assert p["c"][0]["v"] == b["c"][0]["v"]  # same player order
-        want = p["c"][1]["v"] / secs
-        assert abs(b["c"][1]["v"] - want) < 1e-5 * max(1.0, want)
-    # full JSON string is valid and deterministic
-    j1 = gviz.pull_chart_json(df)
-    assert json.loads(j1)["pull_target"] == out["pull_target"]
+def _results_df(spark):
+    return entry_mod.queries()["combat_results"](spark, SF_DIR)
 
 
 def test_results_listing_gviz(spark):
-    """/results gviz table: reference column set, pull_start DESC order,
-    synthetic pull_id."""
-    df = entry_mod.queries()["combat_results"](spark, SF_DIR)
-    tbl = gviz.results_table(df)
-    assert [c["id"] for c in tbl["cols"]] == [
-        "pull_start_time", "pull_target", "pull_duration", "total_damage",
-        "players_number", "pull_id"]
-    starts = [r["c"][0]["v"] for r in tbl["rows"]]
+    """The reference's /results gviz listing, as ``combat_results`` serves
+    it: pull_start DESC, and the sort lives in the engine plan (visible as
+    a Sort node), not in a renderer's Python."""
+    df = _results_df(spark)
+    starts = [r["pull_start_paris"] for r in df.collect()]
     assert starts == sorted(starts, reverse=True) and len(starts) >= 2
-    assert all("#" in r["c"][5]["v"] for r in tbl["rows"])
-    # VERDICT r4 item 6: the DESC sort lives in the engine plan (visible
-    # as a Sort node), not in results_table's Python
-    import io
-    from contextlib import redirect_stdout
-
     buf = io.StringIO()
     with redirect_stdout(buf):
         df.explain("formatted")
@@ -86,17 +52,9 @@ def test_results_listing_gviz(spark):
 
 
 def test_results_listing_pagination(spark):
-    """A generous limit leaves the gviz JSON byte-identical to the
-    unlimited listing; a tight limit returns exactly the newest rows of
-    the full listing (same total order, truncated)."""
-    df = entry_mod.queries()["combat_results"](spark, SF_DIR)
-    full = gviz.results_table(df)
-    assert gviz.results_table_json(df) == json.dumps(
-        gviz.results_table(df, limit=1000), sort_keys=True)
-    page = gviz.results_table(df, limit=3)
-    assert page["rows"] == full["rows"][:3]
-
+    """``combat_results_page`` is exactly the newest 5 rows of the full
+    listing: same total order, truncated."""
+    full = [tuple(r) for r in _results_df(spark).collect()]
     paged_q = entry_mod.queries()["combat_results_page"](spark, SF_DIR)
     got = [tuple(r) for r in paged_q.collect()]
-    want = [tuple(r) for r in df.limit(5).collect()]
-    assert got == want and len(got) == 5
+    assert got == full[:5] and len(got) == 5

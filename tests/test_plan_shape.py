@@ -118,6 +118,37 @@ def test_healer_asof_sparse_equals_full_window(spark):
     assert sparse == full
 
 
+def test_healer_asof_sparse_equals_full_window_entry_corpus(spark):
+    """The same sparse-vs-full healer_asof check over the registry's own
+    combat corpus (fixture + synth + adversarial: absorb credits and a
+    Force-Armor healer set before combat), which needs no sample file."""
+    from pyspark.sql import functions as F
+
+    import __spark_entry__ as entry_mod
+    from team_goldo_combat_log_parser_spark.plans.pipeline import run_pipeline
+    from team_goldo_combat_log_parser_spark.plans.route import healer_asof
+    from team_goldo_combat_log_parser_spark.sources import datagen as dg
+
+    res = run_pipeline(spark, dg.token_df(spark, entry_mod._combat_corpus()),
+                       cache=False)
+    routed = res.routed
+    credit = (F.col("r_damage_received") & F.col("m_absorb")
+              & ~F.col("m_miss") & (F.col("absorbed") <= F.col("amount"))
+              & F.col("fight_seq").isNotNull() & F.col("finished")
+              & ~F.coalesce(F.col("is_duplicate"), F.lit(False)))
+
+    def healers(rows):
+        return {(r["log_id"], r["line_no"]): r["healer_id"]
+                for r in healer_asof(rows).filter(credit)
+                .select("log_id", "line_no", "healer_id").collect()}
+
+    full = healers(routed)
+    sparse = healers(routed.filter(F.col("r_fa") | F.col("is_exit_row")
+                                   | credit))
+    assert len(full) > 0
+    assert sparse == full
+
+
 def test_near_dup_plan_is_banded_not_cartesian(spark, sf001):
     """emb_cosine_near_dup must stay an equi-join on (band, key): a
     regression to CartesianProduct/BroadcastNestedLoop would be brute

@@ -163,6 +163,34 @@ def test_cli_rejects_sources_without_log_date(spark, tmp_path):
         assert json.loads(fh.readline())["sources"] == [name]
 
 
+def test_streaming_skips_sources_without_log_date(spark, tmp_path):
+    """The stream drops a source without a log date before the parse and
+    counts its rows as rejected_rows; the good log landed in the same
+    file still streams, equal to batch, and a replay adds nothing."""
+    name = "combat_2012-08-01_20_00_00_advA.txt"
+    lines = dict(dg.adversarial_logs())[name]
+    bad = ["raidlog.txt", "combat_notadate_x.txt"]
+    in_dir, ck = str(tmp_path / "tokens"), str(tmp_path / "ck")
+    out = str(tmp_path / "out")
+    dg.write_token_table(spark, [(name, lines)] + [(b, lines) for b in bad],
+                         in_dir, 1)
+    m1: list = []
+    got = run_stream_once(spark, in_dir, ck, output_dir=out,
+                          metrics=m1).collect()
+    key = ("log_id", "fight_seq", "pull_start", "total_damage")
+    want = run_pipeline(spark, dg.token_df(spark, [(name, lines)]),
+                        cache=False).pulls.select(
+        "log_id", "fight_seq",
+        F.date_format("pull_start", "yyyy-MM-dd HH:mm:ss.SSS")
+        .alias("pull_start"), "total_damage").collect()
+    assert len(want) == 2
+    assert (sorted(tuple(r[k] for k in key) for r in got)
+            == sorted(tuple(r) for r in want))
+    assert sum(b["rejected_rows"] for b in m1) == len(bad) * len(lines)
+    again = run_stream_once(spark, in_dir, ck, output_dir=out).collect()
+    assert sorted(map(tuple, again)) == sorted(map(tuple, got))
+
+
 def test_streaming_pulls_match_batch(spark, tmp_path):
     logs = dg.synth_corpus(dg.GenConfig(n_logs=3, fights_per_log=3,
                                         rows_per_fight=60, seed=11))
@@ -791,8 +819,8 @@ def test_streaming_observability_metrics(spark, tmp_path):
     run_stream_once(spark, in_dir, ck, output_dir=out,
                     metrics=m1).collect()
     # the field names are the metrics vocabulary other surfaces build on
-    keys = {"batch_id", "rows_in", "pulls_out", "state_rows",
-            "state_bytes", "state_rows_updated", "trigger_ms"}
+    keys = {"batch_id", "rows_in", "rejected_rows", "pulls_out",
+            "state_rows", "state_bytes", "state_rows_updated", "trigger_ms"}
     assert m1 and all(set(b) == keys for b in m1)
     assert sum(b["rows_in"] for b in m1) == len(rows) - (gap_end - gap_start)
     assert sum(b["pulls_out"] for b in m1) == 0  # gap: nothing closed

@@ -3,9 +3,19 @@ retokenize(detokenize(tokens)) == tokens, through the real Arrow path,
 over a corpus including non-ASCII ISO-8859-1 player names."""
 
 import pytest
+from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
-from team_goldo_combat_log_parser_spark.plans.pipeline import token_equality_violations
+from team_goldo_combat_log_parser_spark.functions import grammar
 from team_goldo_combat_log_parser_spark.sources import datagen as dg
+
+
+def token_equality_violations(token_df: DataFrame) -> int:
+    """Per-row invariant (BASELINE.json): retokenize(detokenize(tokens))
+    must equal tokens. Returns the number of violating rows (expect 0)."""
+    df = grammar.detokenize_lines(token_df)
+    df = df.withColumn("tokens2", grammar.retokenize_udf(F.col("line")))
+    return df.filter(F.col("tokens") != F.col("tokens2")).count()
 
 
 def test_roundtrip_fixtures_and_synth(spark):
@@ -66,8 +76,6 @@ def test_streaming_detok_roundtrip(spark, tmp_path):
     """The streaming detok is the same mapInArrow transcode as batch:
     retokenize(detokenize(tokens)) == tokens on a readStream over the
     adversarial corpus plus >=128 latin-1 bytes and empty lines."""
-    from pyspark.sql import functions as F
-
     from team_goldo_combat_log_parser_spark.functions.grammar import (
         detokenize_lines, retokenize_udf)
 
