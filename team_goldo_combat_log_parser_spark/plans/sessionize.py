@@ -40,6 +40,16 @@ FIGHTS_SCHEMA = (
 )
 
 
+def fight_edge(in_combat: bool, player: str | None, r) -> bool:
+    """The one rule that bounds a fight, for batch and stream: does row
+    ``r`` flip ``in_combat``? Out of combat, an EnterCombat row opens a
+    fight; in combat, a Death/ExitCombat row whose *to* field contains
+    the fight's player closes it."""
+    if not in_combat:
+        return bool(r.is_enter)
+    return bool(r.is_leave or r.is_death) and player in r.tgt_raw
+
+
 def _fight_state_machine(pdf: pd.DataFrame) -> pd.DataFrame:
     """Boundary pairing for one log's marker rows (already tiny)."""
     pdf = pdf.sort_values("line_no")
@@ -49,15 +59,16 @@ def _fight_state_machine(pdf: pd.DataFrame) -> pd.DataFrame:
     seq = 0
     player = start_line = start_ts = None
     for r in pdf.itertuples(index=False):
-        if not in_combat and r.is_enter:
+        if not fight_edge(in_combat, player, r):
+            continue
+        if in_combat:
+            out.append((log_id, seq, player, start_line, r.line_no,
+                        start_ts, r.ts, True))
+        else:
             seq += 1
             player = r.src_player
             start_line, start_ts = r.line_no, r.ts
-            in_combat = True
-        elif in_combat and (r.is_leave or r.is_death) and player in r.tgt_raw:
-            out.append((log_id, seq, player, start_line, r.line_no,
-                        start_ts, r.ts, True))
-            in_combat = False
+        in_combat = not in_combat
     if in_combat:
         out.append((log_id, seq, player, start_line, None, start_ts, None, False))
     return pd.DataFrame(out, columns=["log_id", "fight_seq", "player_id",

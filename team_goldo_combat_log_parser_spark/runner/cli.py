@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 
 from ..functions import grammar
 from ..plans.pipeline import run_pipeline
+from ..sources.datagen import TOKEN_TABLE_SCHEMA
 from .checkpoint import Manifest, filter_unprocessed
 
 
@@ -95,7 +96,9 @@ def gc_orphan_commits(spark: SparkSession, output: str,
 def read_tokens(spark: SparkSession, path: str):
     if path.startswith("iceberg:"):
         return spark.read.format("iceberg").load(path[len("iceberg:"):])
-    return spark.read.parquet(path)
+    # declared, so an empty landing dir reads as 0 rows, not a failed
+    # schema inference
+    return spark.read.schema(TOKEN_TABLE_SCHEMA).parquet(path)
 
 
 def write_table(df, output: str, name: str, commit_id: str) -> None:

@@ -3,15 +3,21 @@
 Fight boundaries are explicit events (EnterCombat/ExitCombat/Death), not
 time gaps, so ``session_window`` doesn't apply; instead the per-log parser
 state machine runs under ``applyInPandasWithState`` keyed by ``log_id``:
-the state carries (in_combat, player, healer, fight_seq, accumulators)
-across micro-batches and a finished pull row is emitted the moment its
-exit marker is processed.
+the state carries (in_combat, player, fight_seq, pull start, target,
+total_damage) across micro-batches and a finished pull's header row is
+emitted the moment its exit marker is processed. What opens and closes a
+fight is ``sessionize.fight_edge``, the rule batch applies too.
+
+The stream emits the pull header only (``PULL_OUT_SCHEMA``: the
+reference's Pull entity without its per-fight ``data`` blob). The
+per-fight breakdowns — damage done and received per skill, heal, threat,
+``pull_json`` — are the batch tables, checked against the oracle.
 
 The line grammar lives in one place, ``grammar.parse_lines``: the stream
 runs the same native parse as batch (the mapInArrow detok and every
 typed/flag expression) and hands the stateful operator only the typed
 columns the fold reads. The stateful operator parses nothing itself, so
-batch and stream read every amount, threat and damage type alike.
+batch and stream read every amount alike.
 
 Scope notes (extension surface, not reference parity — the reference is
 batch-only):
@@ -42,6 +48,8 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..functions import grammar
+from ..plans import sessionize
+from ..sources.datagen import TOKEN_TABLE_SCHEMA
 
 PULL_OUT_SCHEMA = T.StructType([
     T.StructField("log_id", T.StringType()),
@@ -51,24 +59,6 @@ PULL_OUT_SCHEMA = T.StructType([
     T.StructField("target", T.StringType()),
     T.StructField("player", T.StringType()),
     T.StructField("total_damage", T.LongType()),
-    T.StructField("player_heal", T.LongType()),
-    T.StructField("threat", T.LongType()),
-    T.StructField("dmg_rcvd", T.LongType()),
-    # per-healer heal credits (direct + absorb) as a JSON object — the
-    # streaming mirror of the batch heal_per_healer table for this fight
-    T.StructField("heal_map", T.StringType()),
-    # per-skill damage-done as a JSON object {skill: [hit, dodged, missed,
-    # total_damage]} — the streaming mirror of batch damage_done_skills
-    # (A2); same zero-split semantics (dodged iff the DODGE id, else
-    # missed) and the same trailing-space skill keys
-    T.StructField("dd_map", T.StringType()),
-    # per-(attacker, skill) damage-received as nested JSON
-    # {attacker: {skill: [hit, dodged, shielded, missed, resisted,
-    # total_damage, dmg_type]}} — the streaming mirror of batch
-    # damage_received_skills (A4) incl. mitigation precedence (miss >
-    # resist > dodge/parry/deflect; shielded only on landed hits) and
-    # first-seen dmg_type from rows with a non-zero amount
-    T.StructField("dr_map", T.StringType()),
 ])
 
 STATE_SCHEMA = T.StructType([T.StructField("blob", T.StringType())])
@@ -77,15 +67,9 @@ STATE_SCHEMA = T.StructType([T.StructField("blob", T.StringType())])
 # (line_no first: the buffer keys on row[0])
 _FOLD_COLS = (
     "line_no", "log_date", "time_str", "src_raw", "tgt_raw", "src_player",
-    "src_name", "tgt_name", "skill", "amount", "dmg_type", "absorbed",
-    "threat", "has_threat", "is_enter", "is_leave", "is_death", "is_damage",
-    "is_heal_eff", "is_fa", "tgt_has_at", "skill_has_revive", "m_miss",
-    "m_absorb", "m_resist", "m_dodge", "m_dodge_single", "m_shield",
+    "tgt_name", "amount", "is_enter", "is_leave", "is_death", "is_damage",
     "m_immune")
 _Row = namedtuple("_Row", _FOLD_COLS)
-# nullable longs cross as coalesce(x, 0) plus an ``x_ok`` flag: one null
-# turns an Arrow long column float64 in pandas, which rounds past 2^53
-_NULLABLE = ("amount", "absorbed", "threat")
 
 REORDER_MAX_BUFFER = 100_000
 
@@ -93,84 +77,23 @@ REORDER_MAX_BUFFER = 100_000
 def _fold(st: dict, r: _Row) -> dict | None:
     """Advance one row through the per-log parser state; returns a finished
     pull dict when the row closes a fight (semantics mirror golden/oracle)."""
-    if not st["in_combat"] and r.is_enter:
-        st.update(in_combat=True, player=r.src_player, seq=st["seq"] + 1,
-                  start=f"{r.log_date} {r.time_str}", target=None,
-                  dmg=0, heal=0, threat=0, dmg_rcvd=0,
-                  heal_by={r.src_player: 0}, dd_by={}, dr_by={})
-        return None
+    edge = sessionize.fight_edge(st["in_combat"], st["player"], r)
     if not st["in_combat"]:
-        if r.is_fa and r.tgt_has_at:
-            st["healer"] = r.src_player
+        if edge:
+            st.update(in_combat=True, player=r.src_player, seq=st["seq"] + 1,
+                      start=f"{r.log_date} {r.time_str}", target=None, dmg=0)
         return None
     player = st["player"]
-    n = r.amount
     if r.is_damage and player in r.src_raw and not r.m_immune:
         st["target"] = r.tgt_name
-        entry = st["dd_by"].setdefault(r.skill, [0, 0, 0, 0])
-        if n:
-            st["dmg"] += n
-            entry[0] += 1          # hit
-            entry[3] += n          # total_damage
-        elif n == 0:
-            # amount==0 splits dodged-vs-missed on the DODGE id only,
-            # same as batch m_dodge_single (main.py:163-167)
-            entry[1 if r.m_dodge_single else 2] += 1
-    if r.is_damage and player in r.tgt_raw:
-        # damage-received accounting + absorb-to-healer credit (the batch
-        # heal_per_healer / damage_received_players semantics)
-        if not (r.m_miss or r.m_resist or r.m_dodge) and n is not None:
-            st["dmg_rcvd"] += n
-        # per-(attacker, skill) breakdown, batch damage_received_skills
-        # precedence: miss > resist > dodged; shielded on landed hits only
-        d = st["dr_by"].setdefault(r.src_name, {}).setdefault(
-            r.skill, [0, 0, 0, 0, 0, 0, None])
-        if r.m_miss:
-            d[3] += 1
-        elif r.m_resist:
-            d[4] += 1
-        elif r.m_dodge:
-            d[1] += 1
-        else:
-            d[0] += 1
-            if r.m_shield:
-                d[2] += 1
-            if n is not None:
-                d[5] += n
-        if d[6] is None and n:
-            d[6] = r.dmg_type
-        if (r.m_absorb and not r.m_miss and r.absorbed is not None
-                and n is not None and r.absorbed <= n):
-            k = st["healer"] if st["healer"] is not None else "null"
-            st["heal_by"][k] = st["heal_by"].get(k, 0) + r.absorbed
-    if r.is_fa and r.tgt_has_at:
-        st["healer"] = r.src_player
-    if r.is_heal_eff and player in r.src_raw and not r.skill_has_revive:
-        h = n or 0
-        st["heal"] += h
-        st["heal_by"][player] = st["heal_by"].get(player, 0) + h
-    if (r.is_death or r.is_leave) and player in r.tgt_raw:
-        out = dict(fight_seq=st["seq"], pull_start=st["start"],
-                   pull_stop=f"{r.log_date} {r.time_str}",
-                   target=st["target"], player=player,
-                   total_damage=st["dmg"], player_heal=st["heal"],
-                   threat=st["threat"], dmg_rcvd=st["dmg_rcvd"],
-                   heal_map=json.dumps(st["heal_by"], sort_keys=True),
-                   dd_map=json.dumps(st["dd_by"], sort_keys=True),
-                   dr_map=json.dumps(st["dr_by"], sort_keys=True))
-        st.update(in_combat=False, player=None, healer=None)
-        return out
-    if r.has_threat and player in r.src_raw and r.threat is not None:
-        st["threat"] += r.threat
+        st["dmg"] += r.amount
+    if edge:
+        st.update(in_combat=False, player=None)
+        return dict(fight_seq=st["seq"], pull_start=st["start"],
+                    pull_stop=f"{r.log_date} {r.time_str}",
+                    target=st["target"], player=player,
+                    total_damage=st["dmg"])
     return None
-
-
-def _rows(pdf: pd.DataFrame) -> list[tuple]:
-    """One input chunk -> fold rows of Python scalars: exact ints, None
-    for a null long, and JSON-ready for the reorder buffer."""
-    for c in _NULLABLE:
-        pdf[c] = pdf[c].astype(object).where(pdf[f"{c}_ok"], None)
-    return list(pdf[list(_FOLD_COLS)].itertuples(index=False, name=None))
 
 
 def _make_state_fn(max_buffer: int):
@@ -196,9 +119,9 @@ def _make_state_fn(max_buffer: int):
                     "checkpoint predates the line-order buffer; start a "
                     "fresh checkpoint")
         else:
-            st = {"in_combat": False, "player": None, "healer": None,
-                  "seq": 0, "start": None, "target": None, "dmg": 0,
-                  "heal": 0, "threat": 0, "_buf": [], "_next": 0}
+            st = {"in_combat": False, "player": None, "seq": 0,
+                  "start": None, "target": None, "dmg": 0,
+                  "_buf": [], "_next": 0}
         done: list[dict] = []
 
         def feed(row) -> None:
@@ -215,14 +138,15 @@ def _make_state_fn(max_buffer: int):
                 raise ValueError(
                     f"reorder buffer for {log_id} holds a row of "
                     f"{len(row)} fields, expected {len(_FOLD_COLS)}: "
-                    "the checkpoint predates the typed row layout; "
+                    "the checkpoint predates this row layout; "
                     "start a fresh checkpoint")
             buf[row[0]] = row
         next_line = st.pop("_next")
         for pdf in pdfs:
             # sorted, so a chunk's in-sequence rows go straight to the
             # parser instead of waiting in the buffer
-            for row in _rows(pdf.sort_values("line_no")):
+            rows = pdf.sort_values("line_no")[list(_FOLD_COLS)]
+            for row in rows.itertuples(index=False, name=None):
                 if row[0] < next_line:
                     # already delivered to the parser — an at-least-once
                     # source replaying a row; keeping it would park it in
@@ -255,11 +179,11 @@ def stream_pulls(tokens_stream: DataFrame,
     """Streaming token table -> stream of finished pulls, each log read
     in line order through the per-log buffer (see module docstring)."""
     parsed = grammar.parse_lines(tokens_stream)
-    slim = parsed.select(
-        "log_id",
-        *[F.coalesce(F.col(c), F.lit(0)).alias(c) if c in _NULLABLE else c
-          for c in _FOLD_COLS],
-        *[F.col(c).isNotNull().alias(f"{c}_ok") for c in _NULLABLE])
+    # a null-free long column arrives in pandas as exact int64 (one null
+    # would make it float64, which rounds past 2^53); a null amount adds
+    # nothing to total_damage either way
+    slim = parsed.withColumn(
+        "amount", F.coalesce("amount", F.lit(0))).select("log_id", *_FOLD_COLS)
     return slim.groupBy("log_id").applyInPandasWithState(
         _make_state_fn(reorder_max_buffer), PULL_OUT_SCHEMA,
         STATE_SCHEMA, "append", GroupStateTimeout.NoTimeout)
@@ -331,8 +255,7 @@ def run_stream_once(spark, input_dir: str, checkpoint_dir: str,
     processes only new files and restores the per-log parser state
     (tested with a mid-fight split in
     test_streaming_state_survives_restart_mid_fight)."""
-    schema = "doc_id string, tokens array<int>, n_tok int, source string"
-    stream = spark.readStream.schema(schema).parquet(input_dir)
+    stream = spark.readStream.schema(TOKEN_TABLE_SCHEMA).parquet(input_dir)
     # a source without a log date would fail every micro-batch it lands
     # in (and the replay after it): drop its rows before the parse, as
     # cli.main does, and count them per batch
@@ -351,4 +274,5 @@ def run_stream_once(spark, input_dir: str, checkpoint_dir: str,
     q.awaitTermination()
     if metrics is not None:
         metrics.extend(stream_batch_metrics(q))
-    return spark.read.parquet(output_dir)
+    # the declared schema reads an empty sink (no file yet) as 0 rows
+    return spark.read.schema(PULL_OUT_SCHEMA).parquet(output_dir)
