@@ -1,8 +1,9 @@
 """SparkSession factory tuned for this engine.
 
-Local mode is the test/bench environment; the same config block is what we
-would ship to a real cluster via spark-submit --py-files (see runner/cli.py),
-minus the master/driver-memory overrides.
+Local mode is the test/bench environment. ``ENGINE_CONF`` is the part that
+ships to a real cluster: ``runner/cli.py``'s spark-submit session applies
+it too, while master, cores, shuffle partitions, driver memory and the UI
+stay local-mode choices made here.
 """
 
 from __future__ import annotations
@@ -40,6 +41,29 @@ def iceberg_conf(warehouse: str, catalog: str = "local",
     return conf
 
 
+# Settings every session of this engine runs with, whoever builds it.
+ENGINE_CONF = {
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    # pulls are parsed and written as UTC wall time, whatever the JVM's
+    # default zone
+    "spark.sql.session.timeZone": "UTC",
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+    "spark.sql.execution.arrow.maxRecordsPerBatch": "20000",
+    # parquet scans: bigger splits keep task count sane on wide scans
+    "spark.sql.files.maxPartitionBytes": "268435456",
+    # dictionary/RLE compression of cached wide string columns costs
+    # ~7x the cache-build time for this workload; raw columnar is fine
+    "spark.sql.inMemoryColumnarStorage.compressed": "false",
+    # one landing cycles through ~230 generated classes; at the default
+    # 100 entries the LRU never hits and every landing recompiles them.
+    # Static: the JVM's first compile fixes the size, so it must be in the
+    # conf of the session that starts the JVM
+    "spark.sql.codegen.cache.maxEntries": "1000",
+}
+
+
 def get_spark(
     app_name: str = "team_goldo_spark",
     cores: int | None = None,
@@ -71,24 +95,13 @@ def get_spark(
     b = (
         SparkSession.builder.master(master)
         .appName(app_name)
+        .config(map=ENGINE_CONF)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "20000")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
         .config("spark.ui.enabled", "false")
-        # parquet scans: bigger splits keep task count sane on wide scans
-        .config("spark.sql.files.maxPartitionBytes", "268435456")
-        # dictionary/RLE compression of cached wide string columns costs
-        # ~7x the cache-build time for this workload; raw columnar is fine
-        .config("spark.sql.inMemoryColumnarStorage.compressed", "false")
     )
     if extra_conf:
-        for k, v in extra_conf.items():
-            b = b.config(k, v)
+        b = b.config(map=extra_conf)
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark

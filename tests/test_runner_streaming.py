@@ -8,6 +8,7 @@ import subprocess
 import sys
 from contextlib import redirect_stdout
 
+import pytest
 from pyspark.sql import functions as F
 
 from team_goldo_combat_log_parser_spark.runner.checkpoint import (
@@ -161,6 +162,72 @@ def test_cli_rejects_sources_without_log_date(spark, tmp_path):
     with open(tmp_path / "ckpt" / "manifest"
               / f"{summary['commit_id']}.json") as fh:
         assert json.loads(fh.readline())["sources"] == [name]
+
+
+def _land(spark, logs, in_dir, ck, out):
+    """Append ``logs`` to the landing dir and commit them with cli.main;
+    returns the printed summary."""
+    from team_goldo_combat_log_parser_spark.runner import cli
+
+    dg.token_df(spark, logs).coalesce(1).write.mode("append").parquet(in_dir)
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        assert cli.main(["--input", in_dir, "--output", out,
+                         "--checkpoint", ck]) == 0
+    return json.loads(buf.getvalue().strip().splitlines()[-1])
+
+
+def test_warm_landing_reuses_generated_code(spark, tmp_path):
+    """A landing's generated classes stay in Spark's code cache, so the
+    next landing of the same shape compiles almost none. At the default
+    100-entry cache every landing recompiles ~210 classes."""
+    logs = dg.synth_corpus(dg.GenConfig(n_logs=2, fights_per_log=2,
+                                        rows_per_fight=40, seed=29))
+    compiles = (spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+                .METRIC_COMPILATION_TIME())
+    paths = [str(tmp_path / d) for d in ("in", "ckpt", "out")]
+    _land(spark, logs[:1], *paths)
+    before = compiles.getCount()
+    summary = _land(spark, logs[1:], *paths)
+    assert summary["status"] == "committed" and summary["new_sources"] == 1
+    assert compiles.getCount() - before <= 20
+
+
+def test_failed_write_commits_nothing(spark, tmp_path, monkeypatch):
+    """One table write failing inside the concurrent writes fails the run
+    before the manifest commit; the replay then commits every table once,
+    under the same commit id."""
+    from team_goldo_combat_log_parser_spark.runner import cli
+
+    real = cli.write_table
+
+    def write_table(df, output, name, commit_id):
+        if name == "heal":
+            raise RuntimeError("disk full")
+        real(df, output, name, commit_id)
+
+    in_dir, ck, out = (str(tmp_path / d) for d in ("in", "ckpt", "out"))
+    logs = dg.adversarial_logs()
+    monkeypatch.setattr(cli, "write_table", write_table)
+    with pytest.raises(RuntimeError, match="disk full"):
+        _land(spark, logs, in_dir, ck, out)
+    assert Manifest(ck).records() == []
+    monkeypatch.undo()
+
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        assert cli.main(["--input", in_dir, "--output", out,
+                         "--checkpoint", ck]) == 0
+    summary = json.loads(buf.getvalue().strip().splitlines()[-1])
+    assert summary["status"] == "committed" and summary["new_sources"] == 3
+    assert [r["commit_id"] for r in Manifest(ck).records()] == [
+        summary["commit_id"]]
+    assert list(summary["counts"])[-6:] == [
+        "pulls", "damage_done_skills", "damage_received_skills", "heal",
+        "threat", "rates"]
+    for table in summary["counts"]:
+        assert os.listdir(f"{out}/{table}") == [
+            f"commit={summary['commit_id']}"], table
 
 
 def test_empty_landing_dir_is_up_to_date(spark, tmp_path):
@@ -774,12 +841,13 @@ def test_streaming_observability_metrics(spark, tmp_path):
     assert reorder_buffer_depths(spark, ck) == {log_id: 0}
 
 
-def test_spark_submit_pyfiles_end_to_end(tmp_path):
+def test_spark_submit_pyfiles_end_to_end(spark, tmp_path):
     """Round-6: the REAL deployment shape — spark-submit --py-files with
     the package zipped, the launcher copied OUT of the repo, and cwd off
     the repo, so the package can only resolve from the zip (driver and
     executor python workers both). Must commit the same counts as the
-    in-process CLI path."""
+    in-process CLI path. The driver JVM runs in a non-UTC zone: the
+    committed pulls must still hold the log's wall times as UTC."""
     import shutil
 
     from team_goldo_combat_log_parser_spark.runner.shipping import (
@@ -807,6 +875,7 @@ def test_spark_submit_pyfiles_end_to_end(tmp_path):
         ["spark-submit", "--master", "local[2]",
          "--conf", "spark.sql.shuffle.partitions=4",
          "--conf", "spark.ui.enabled=false",
+         "--driver-java-options", "-Duser.timezone=America/Los_Angeles",
          "--py-files", zip_path, job,
          "--input", f"{tmp_path}/tokens", "--output", f"{tmp_path}/out",
          "--checkpoint", f"{tmp_path}/ckpt"],
@@ -816,3 +885,11 @@ def test_spark_submit_pyfiles_end_to_end(tmp_path):
     out = json.loads(r.stdout.strip().splitlines()[-1])
     assert out["status"] == "committed" and out["new_sources"] == 3
     assert out["counts"]["pulls"] == 4  # same golden as test_cli_end_to_end
+    starts = {(r[0], r[1]) for r in spark.read.parquet(f"{tmp_path}/out/pulls")
+              .select("log_id", F.date_format(
+                  "pull_start", "yyyy-MM-dd HH:mm:ss.SSS")).collect()}
+    assert starts == {
+        ("combat_2012-08-01_20_00_00_advA", "2012-08-01 20:00:10.000"),
+        ("combat_2012-08-01_20_00_00_advA", "2012-08-01 20:01:00.000"),
+        ("combat_2012-08-01_20_00_00_advB", "2012-08-01 20:30:00.000"),
+        ("combat_2012-08-02_23_58_00_advC", "2012-08-02 23:59:00.000")}
