@@ -29,6 +29,3 @@ PLAYER_TAG = "@"
 
 # the six ']'-delimited raw fields of a log line (reference main.py:33)
 RAW_FIELDS = ("time_raw", "src_raw", "tgt_raw", "skill_raw", "effect_raw", "amount_raw")
-
-# sink names for the per-event-type fan-out (SURVEY.md S7)
-SINKS = ("damage", "heal", "cast_event", "aura", "death")

@@ -36,6 +36,7 @@ from ..constants import (
     NO_DAMAGE,
     PARRY,
     PLAYER_TAG,
+    RAW_FIELDS,
     RESIST,
     REVIVE,
     SHIELD,
@@ -158,9 +159,8 @@ def split_fields(df: DataFrame, line_col: str = "line") -> DataFrame:
     repeated split() work per field.
     """
     out = df.select("*", F.split(F.col(line_col), "\\]").alias("_parts"))
-    names = ["time_raw", "src_raw", "tgt_raw", "skill_raw", "effect_raw", "amount_raw"]
     cols = []
-    for i, n in enumerate(names):
+    for i, n in enumerate(RAW_FIELDS):
         # F.get (not getItem): a malformed line with <6 fields must yield
         # null, not an ANSI ArrayIndexOutOfBounds that kills the job.
         c = F.get(F.col("_parts"), i)

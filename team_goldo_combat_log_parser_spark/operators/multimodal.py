@@ -2,11 +2,11 @@
 with typed metadata, processed by Arrow-batched pandas UDFs over
 mapInPandas.
 
-The container has no image/audio codecs, so the actual decode is stubbed:
-``decode_image``/``decode_audio`` raise NotImplementedError unless a real
-library (PIL / soundfile) is importable, and the pipeline defaults to a
-deterministic fake decoder so the Spark-side plumbing — schema, batch
-iteration, partitioning, UDF signatures — is real and tested end-to-end.
+The decode is a deterministic stand-in (``_fake_decode``: payload bytes
+tiled to the row's (h, w) grid), so no image/audio codec is needed and
+the Spark-side plumbing — schema, batch iteration, partitioning, UDF
+signatures — is real, DuckDB-oracled and tested end-to-end. A real codec
+replaces ``_fake_decode`` at its two call sites.
 
 At scale this is the pattern for a 100 TB media corpus: binary payloads
 stay columnar in parquet, metadata columns drive partition pruning, and
@@ -22,13 +22,6 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-try:  # real decoder if available (not in this container)
-    from PIL import Image
-    HAVE_PIL = True
-except ImportError:
-    HAVE_PIL = False
-    Image = None
 
 MEDIA_SCHEMA = T.StructType([
     T.StructField("media_id", T.LongType(), False),
@@ -54,20 +47,6 @@ def synth_media_df(spark: SparkSession, n: int = 64) -> DataFrame:
                      16000 if kind == "audio" else None,
                      24 + i % 10 if kind == "video" else None))
     return spark.createDataFrame(rows, schema=MEDIA_SCHEMA)
-
-
-def decode_image(payload: bytes) -> "np.ndarray":
-    """Real decode path: PIL bytes -> grayscale uint8 (h, w) array.
-    Raises only when PIL is genuinely absent (this container has no
-    codecs); tests/test_sketch_and_media.py carries a skip-marked test
-    that exercises the real decode wherever PIL exists, mirroring the
-    jar-gated Iceberg roundtrip pattern."""
-    if not HAVE_PIL:
-        raise NotImplementedError("image codec not available in this container")
-    import io
-
-    with Image.open(io.BytesIO(payload)) as im:
-        return np.asarray(im.convert("L"), dtype=np.uint8)
 
 
 def _fake_decode(payload: bytes, h: int, w: int) -> np.ndarray:

@@ -4,8 +4,13 @@ array<float>, label).
 Brute-force cosine top-k is the exactness baseline (DuckDB-oracled, with
 DECIMAL dot products so both engines agree on the e6 output grid);
 the LSH-bucketed variant is the scale path: random-hyperplane signatures
-turn the all-pairs search into an equi-join on (band, signature), the
-same banding trick as MinHash-LSH for text.
+turn the all-pairs search into an equi-join on (band, key), the
+same banding trick as MinHash-LSH for text. One (vec_id, band, key)
+postings relation (``_banded_postings``) feeds both banding queries:
+the ANN probe join and the near-duplicate self-join, which is the text
+queries' ``_band_pairs``. The exact cosines score in two phases: one
+double-precision fold (``_dot_double``) ranks or prefilters, and the
+DECIMAL dot decides only the pairs within ``_cosine_slack`` of the cut.
 """
 
 from __future__ import annotations
@@ -20,6 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .relational import load
+from .text import _band_pairs, _connected_components
 
 N_QUERIES = 10  # vec_id < N_QUERIES form the query set
 TOP_K = 5
@@ -239,7 +245,7 @@ _band_keys_udf = _band_keys_udf.asNondeterministic()
 
 
 def _banded_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The (vec_id, band, bkey) inverted-index postings — the narrow
+    """The (vec_id, band, key) inverted-index postings — the narrow
     relation every banding join probes. Materialized once per call with
     localCheckpoint (eager, no CacheManager residue — see
     doc_minhash_lsh_pairs) because both sides of a banding self-join
@@ -250,7 +256,7 @@ def _banded_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load(spark, sf_dir, "embeddings")
     sig = e.withColumn("bkeys", _band_keys_udf("embedding"))
     banded = sig.select(
-        "vec_id", F.posexplode("bkeys").alias("band", "bkey"))
+        "vec_id", F.posexplode("bkeys").alias("band", "key"))
     return banded.localCheckpoint(eager=True)
 
 
@@ -273,13 +279,13 @@ def lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup compares two longs."""
     banded = _banded_postings(spark, sf_dir)
     q0 = banded.filter(F.col("vec_id") < N_QUERIES)
-    probes = [F.col("bkey")] + [F.col("bkey").bitwiseXOR(F.lit(1 << i))
-                                for i in range(BAND_BITS)]
+    probes = [F.col("key")] + [F.col("key").bitwiseXOR(F.lit(1 << i))
+                               for i in range(BAND_BITS)]
     q = q0.select(
         F.col("vec_id").alias("qid"), "band",
-        F.explode(F.array(*probes)).alias("bkey"))
+        F.explode(F.array(*probes)).alias("key"))
     cand_ids = (
-        F.broadcast(q).join(banded, ["band", "bkey"])
+        F.broadcast(q).join(banded, ["band", "key"])
         .filter(F.col("qid") != F.col("vec_id"))
         .select("qid", "vec_id")
         .distinct()
@@ -568,24 +574,6 @@ def emb_ivf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
 NEAR_DUP_THRESHOLD = 0.35
 
 
-@F.pandas_udf(T.DoubleType())
-def _dot_f64_udf(xs: pd.Series, ys: pd.Series) -> pd.Series:
-    """Double-precision dot product per row — one numpy einsum per Arrow
-    batch. Used ONLY as a prefilter signal behind ``_cosine_slack``,
-    whose bound holds for any summation order (the exact DECIMAL dot
-    still decides every borderline pair)."""
-    if len(xs) == 0:
-        return pd.Series([], dtype="float64")
-    a = np.stack([np.asarray(v, dtype=np.float64) for v in xs])
-    b = np.stack([np.asarray(v, dtype=np.float64) for v in ys])
-    return pd.Series(np.einsum("ij,ij->i", a, b))
-
-
-# values are deterministic; the mark stops the optimizer duplicating the
-# UDF around the filter that consumes it (guide par.4.4)
-_dot_f64_udf = _dot_f64_udf.asNondeterministic()
-
-
 def emb_cosine_near_dup(spark: SparkSession, sf_dir: str,
                         threshold: float = NEAR_DUP_THRESHOLD) -> DataFrame:
     """Embedding-cosine near-duplicate PAIRS — the dedup-shaped variant
@@ -605,50 +593,29 @@ def emb_cosine_near_dup(spark: SparkSession, sf_dir: str,
     the operator demonstrably firing; production corpora with real
     dups use 0.9+ where the banding recall is what makes this exact-in-
     practice."""
+    # the banding join and its (a, b) dedup carry ids only (the
+    # (vec_id, band, key) postings shared with emb_lsh_ann); the
+    # embeddings and their norms are attached to the distinct pairs
+    pairs = _band_pairs(_banded_postings(spark, sf_dir), "vec_id").distinct()
     e = load(spark, sf_dir, "embeddings")
-    # ONE checkpointed base relation (vec_id, embedding, band keys,
-    # decimal norm2, double L1 norm) feeds all four consumers — both
-    # banding self-join sides and both attach sides. One corpus pass
-    # materializes the signature UDF and the per-element norm folds ONCE
-    # (round 9; previously: the UDF ran twice per side — four times — and
-    # the norm fold twice; same localCheckpoint-not-cache rationale as
-    # doc_minhash_lsh_pairs).
-    base = (e.withColumn("bkeys", _band_keys_udf("embedding"))
-            .withColumn("norm2", _norm_decimal("embedding"))
-            .withColumn("l1", _l1_double("embedding"))
-            .localCheckpoint(eager=True))
-    banded = base.select(
-        "vec_id", F.posexplode("bkeys").alias("band", "bkey"))
-    pairs = (
-        banded.alias("x").join(
-            banded.alias("y"),
-            (F.col("x.band") == F.col("y.band"))
-            & (F.col("x.bkey") == F.col("y.bkey"))
-            & (F.col("x.vec_id") < F.col("y.vec_id")))
-        .select(F.col("x.vec_id").alias("a"), F.col("y.vec_id").alias("b"))
-        .distinct()
-    )
-    ea = base.select(F.col("vec_id").alias("a"),
-                     F.col("embedding").alias("av"),
-                     F.col("norm2").alias("an2"), F.col("l1").alias("al1"))
-    eb = base.select(F.col("vec_id").alias("b"),
-                     F.col("embedding").alias("bv"),
-                     F.col("norm2").alias("bn2"), F.col("l1").alias("bl1"))
-    # two-phase scoring: a cheap double-precision prefilter (round 9:
-    # one numpy einsum per Arrow batch — the interpreted per-element
-    # JVM fold it replaces was ~1s of this query at sf0.1) cuts the
-    # ~100x-larger candidate set down to near-threshold pairs, and only
-    # those pay the exact DECIMAL dot (boxed BigDecimal arithmetic,
-    # ~10x slower per element). A pair with exact cosine >= threshold
-    # has fast cosine >= threshold - slack (_cosine_slack), so the
-    # final decimal-based threshold decides every borderline pair — the
-    # prefilter can only drop pairs provably below it.
+    ea, eb = (e.select(F.col("vec_id").alias(s),
+                       F.col("embedding").alias(f"{s}v"),
+                       _norm_decimal("embedding").alias(f"{s}n2"),
+                       _l1_double("embedding").alias(f"{s}l1"))
+              for s in "ab")
+    # two-phase scoring: the double-precision fold (as in
+    # emb_cosine_topk) cuts the candidate set down to near-threshold
+    # pairs, and only those pay the exact DECIMAL dot (boxed BigDecimal
+    # arithmetic, ~10x slower per element). A pair with exact cosine
+    # >= threshold has fast cosine >= threshold - slack (_cosine_slack),
+    # so the final decimal-based threshold decides every borderline
+    # pair — the prefilter can only drop pairs provably below it.
     denom = (F.sqrt(F.col("an2").cast("double"))
              * F.sqrt(F.col("bn2").cast("double")))
     slack = _cosine_slack("al1", "bl1", denom, F.size("av"))
     scored = (
         pairs.join(ea, "a").join(eb, "b")
-        .filter(_dot_f64_udf("av", "bv") / denom >= threshold - slack)
+        .filter(_dot_double("av", "bv") / denom >= threshold - slack)
         .withColumn("cosine",
                     _dot_decimal("av", "bv").cast("double") / denom)
         .filter(F.col("cosine") >= threshold)
@@ -672,8 +639,6 @@ def emb_dup_clusters(spark: SparkSession, sf_dir: str,
     off the per-sweep lineage.
     The DuckDB oracle resolves the same fixpoint as a recursive CTE over
     the tabulated-banding pair oracle (sketch_oracle.py)."""
-    from .text import _connected_components
-
     pairs = emb_cosine_near_dup(spark, sf_dir, threshold).select("a", "b")
     labels = _connected_components(pairs, max_iters=max_iters)
     sizes = labels.groupBy("lab").agg(F.count(F.lit(1)).alias("cluster_size"))

@@ -15,6 +15,8 @@ LSH banding turns the O(n^2) pair search into an equi-join on
 
 from __future__ import annotations
 
+from collections.abc import Sequence
+
 import numpy as np
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -381,13 +383,7 @@ def doc_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     banded = sig.select(
         "doc_id",
         F.array(*[F.col(f"mh{i}") for i in range(MINHASH_K)]).alias("sig"),
-        F.posexplode(F.array(*band_sigs)).alias("band", "bsig"))
-    x = banded.select(F.col("doc_id").alias("a"),
-                      F.col("sig").alias("x_sig"), "band", "bsig")
-    y = banded.select(F.col("doc_id").alias("b"),
-                      F.col("sig").alias("y_sig"),
-                      F.col("band").alias("band_y"),
-                      F.col("bsig").alias("bsig_y"))
+        F.posexplode(F.array(*band_sigs)).alias("band", "key"))
     # matching-lane fraction; evaluated once per candidate row (HOFs are
     # interpreted, but candidates are band-collision-rare — unlike the
     # per-shingle hot path where HOFs measurably lose,
@@ -397,9 +393,7 @@ def doc_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
                    lambda p, q: F.when(p == q, 1).otherwise(0)),
         F.lit(0), lambda acc, v: acc + v) / F.lit(float(MINHASH_K))
     return (
-        x.join(y, (F.col("band") == F.col("band_y"))
-               & (F.col("bsig") == F.col("bsig_y"))
-               & (F.col("a") < F.col("b")))
+        _band_pairs(banded, "doc_id", ["sig"])
         .select("a", "b", F.round(est, 6).alias("est_jaccard"))
         .groupBy("a", "b")
         .agg(F.first("est_jaccard").alias("est_jaccard"))
@@ -467,14 +461,15 @@ def doc_simhash_near_pairs(spark: SparkSession, sf_dir: str,
     # localCheckpoint (not cache) — see doc_minhash_lsh_pairs: one eager
     # materialization feeding both join sides, zero CacheManager residue.
     sh = doc_simhash64(spark, sf_dir).localCheckpoint(eager=True)
-    # ONE posexplode pass emits all 8 (chunk, chunk-key) rows per doc —
-    # the previous 8-way union scanned the signatures 8x per join side
-    # (16 scans, ~600 tiny tasks at local[32]) for identical output
+    # ONE posexplode pass emits all 8 rows per doc (band = chunk index,
+    # key = chunk value) — the previous 8-way union scanned the
+    # signatures 8x per join side (16 scans, ~600 tiny tasks at
+    # local[32]) for identical output
     ckeys = [F.shiftright("simhash", c * 8).bitwiseAND(F.lit(0xFF))
              for c in range(8)]
     blocked = sh.select(
         "doc_id", "simhash",
-        F.posexplode(F.array(*ckeys)).alias("chunk", "ckey"))
+        F.posexplode(F.array(*ckeys)).alias("band", "key"))
     # hamming is computed INSIDE the banding join and filtered BEFORE the
     # (a, b) dedup (round 8): candidate pairs that fail the distance test
     # — the overwhelming majority, and the term that grows quadratically
@@ -485,21 +480,16 @@ def doc_simhash_near_pairs(spark: SparkSession, sf_dir: str,
     # in several chunks pays bit_count more than once (codegen-cheap) to
     # ship it across the shuffle at most once. Bit-identical to the
     # former distinct-then-filter: hamming is deterministic per (a, b).
-    pairs = (
-        blocked.alias("x").join(
-            blocked.alias("y"),
-            (F.col("x.chunk") == F.col("y.chunk"))
-            & (F.col("x.ckey") == F.col("y.ckey"))
-            & (F.col("x.doc_id") < F.col("y.doc_id")))
-        .select(F.col("x.doc_id").alias("a"), F.col("y.doc_id").alias("b"),
-                F.bit_count(F.col("x.simhash").bitwiseXOR(F.col("y.simhash")))
+    return (
+        _band_pairs(blocked, "doc_id", ["simhash"])
+        .select("a", "b",
+                F.bit_count(F.col("x_simhash").bitwiseXOR(F.col("y_simhash")))
                 .alias("hamming"))
         .filter(F.col("hamming") <= max_hamming)
         .groupBy("a", "b")
         .agg(F.first("hamming").alias("hamming"))
         .orderBy("a", "b")
     )
-    return pairs
 
 
 def doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -548,6 +538,25 @@ def doc_dup_clusters(spark: SparkSession, sf_dir: str,
             .select(F.col("node").alias("doc_id"),
                     F.col("lab").alias("cluster_rep"), "cluster_size")
             .orderBy("doc_id"))
+
+
+def _band_pairs(banded: DataFrame, id_col: str,
+                carry: Sequence[str] = ()) -> DataFrame:
+    """The banding self-join of the near-duplicate pair queries: rows of
+    ``banded`` (``id_col``, ``band``, ``key``, *carry) meet on equal
+    (band, key) with a < b. Returns (a, b) and each carried column once
+    per side, as ``x_<col>`` and ``y_<col>``. A pair that collides in
+    several bands comes out once per band, so callers dedup on (a, b).
+    The id column keeps its name into the join: renaming it first adds
+    a projection to each side."""
+    x, y = banded.alias("x"), banded.alias("y")
+    return (x.join(y, (F.col("x.band") == F.col("y.band"))
+                   & (F.col("x.key") == F.col("y.key"))
+                   & (F.col(f"x.{id_col}") < F.col(f"y.{id_col}")))
+            .select(F.col(f"x.{id_col}").alias("a"),
+                    F.col(f"y.{id_col}").alias("b"),
+                    *[F.col(f"{s}.{c}").alias(f"{s}_{c}")
+                      for c in carry for s in "xy"]))
 
 
 def _connected_components(pairs: DataFrame, max_iters: int = 20) -> DataFrame:

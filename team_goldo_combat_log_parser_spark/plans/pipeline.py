@@ -68,9 +68,11 @@ def run_pipeline(
 
     # The projection is the slim downstream set: every predicate that only
     # needs a raw string is already a boolean flag, so the wide raw columns
-    # (line, effect/amount/skill/time) never leave this select. The fights
-    # (markers) pass and the routed pass each scan this plan, re-deriving
-    # the typed columns from the line cache (or the token scan).
+    # (line, effect/amount/skill/time) never leave this select. The routed
+    # pass scans this plan and the fights (markers) pass scans
+    # parsed_full, which build_fights narrows to its 8 columns at once;
+    # each re-derives the typed columns from the line cache (or the token
+    # scan).
     slim_cols = [
         "log_id", "line_no", "ts", "src_raw", "tgt_raw",
         "src_player", "src_name", "tgt_name", "skill",
@@ -97,7 +99,7 @@ def run_pipeline(
     pre = (F.col("line").contains(ENTER_COMBAT)
            | F.col("line").contains(LEAVE_COMBAT)
            | F.col("line").contains(DEATH))
-    fights = build_fights(parsed_full.filter(pre).select(*slim_cols))
+    fights = build_fights(parsed_full.filter(pre))
     if cache:
         fights = fights.cache()
 

@@ -225,26 +225,6 @@ def stream_batch_metrics(query) -> list[dict]:
     return rows
 
 
-def reorder_buffer_depths(spark, checkpoint_dir: str) -> dict[str, int]:
-    """Per-log undrained-row count, read from the checkpointed state via
-    Spark's ``statestore`` reader — the observability hook for "how far
-    behind is each log's gap?" without touching a running query. Every
-    log in the state reports a depth, 0 once drained.
-
-    The depth is computed inside the DataFrame (``get_json_object`` +
-    ``json_array_length``, both JVM-side) and only the per-log summary is
-    collected — the state table is as big as the key space, and decoding
-    every 100k-row buffer blob in driver Python would be the exact
-    driver-side loop the rest of the engine avoids."""
-    df = spark.read.format("statestore").load(checkpoint_dir)
-    rows = df.select(
-        F.col("key.log_id").alias("log_id"),
-        F.json_array_length(
-            F.get_json_object("value.groupState.blob", "$._buf"))
-        .alias("depth")).collect()
-    return {r["log_id"]: r["depth"] for r in rows}
-
-
 def run_stream_once(spark, input_dir: str, checkpoint_dir: str,
                     output_dir: str,
                     reorder_max_buffer: int = REORDER_MAX_BUFFER,

@@ -152,13 +152,16 @@ def test_healer_asof_sparse_equals_full_window_entry_corpus(spark):
 def test_near_dup_plan_is_banded_not_cartesian(spark, sf001):
     """emb_cosine_near_dup must stay an equi-join on (band, key): a
     regression to CartesianProduct/BroadcastNestedLoop would be brute
-    force with extra steps at 10^9 vectors."""
+    force with extra steps at 10^9 vectors. Its prefilter is the JVM
+    double fold, so the plan (the band keys come from the checkpointed
+    postings) has no Python hop."""
     from team_goldo_combat_log_parser_spark.operators.similarity import (
         emb_cosine_near_dup)
 
     plan = plan_of(emb_cosine_near_dup(spark, sf001))
     assert "CartesianProduct" not in plan, plan
     assert "BroadcastNestedLoopJoin" not in plan, plan
+    assert "ArrowEvalPython" not in plan, plan
 
 
 def test_clean_corpus_shuffle_budget(spark):

@@ -159,29 +159,6 @@ def test_media_resize_and_frames(spark):
     assert all(m % 3 == 2 for m in vids)  # only video rows emit frames
 
 
-def test_decode_stub_raises_without_codec():
-    if not multimodal.HAVE_PIL:
-        with pytest.raises(NotImplementedError):
-            multimodal.decode_image(b"\x89PNG")
-
-
-@pytest.mark.skipif(not multimodal.HAVE_PIL,
-                    reason="PIL not in this container")
-def test_real_image_decode_roundtrip():
-    """Real decode path (runs wherever PIL exists, e.g. a real cluster):
-    PNG bytes -> grayscale uint8 array with the image's (h, w)."""
-    import io
-
-    from PIL import Image
-
-    src = np.arange(40, dtype=np.uint8).reshape(5, 8)
-    buf = io.BytesIO()
-    Image.fromarray(src, mode="L").save(buf, format="PNG")
-    arr = multimodal.decode_image(buf.getvalue())
-    assert arr.shape == (5, 8) and arr.dtype == np.uint8
-    assert (arr == src).all()
-
-
 def test_media_oracle_valid_for_any_n():
     """The SQL-derivation oracle must stay runnable even when a kind has
     zero rows (the old VALUES renderer emitted malformed SQL below n=3):
